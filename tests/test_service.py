@@ -201,6 +201,97 @@ def test_dataset_registry_upsert(spark, repo):
     assert datasets[0]["ts_column"] == "ts2"
 
 
+def test_registry_exists_after_first_registration(spark, repo):
+    import thoth_spark as th
+
+    assert th.is_db_initialized(repo) is False
+    repo.add_dataset("reg://1", "ts", ["value"], "DAY")
+    assert th.is_db_initialized(repo) is True
+
+
+def test_dataset_writes_leave_other_datasets_alone(spark, repo):
+    """Both datasets hold rows at the same ts; re-profiling, re-scoring
+    and re-optimizing one of them replaces only its own rows."""
+    days = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
+    key = ("Column", "value", "Mean")
+
+    def metrics(scale, only=None):
+        return spark.createDataFrame(
+            [(t, *key, scale * (i + 1)) for i, t in enumerate(days) if only in (None, t)],
+            "ts timestamp, entity string, instance string, name string, value double",
+        )
+
+    def scoring(scale):
+        return spark.createDataFrame(
+            [(days[-1], *key, 2.0 * scale, 1.5 * scale, 0.25)],
+            "ts timestamp, entity string, instance string, name string,"
+            " value double, predicted double, error double",
+        )
+
+    def optimization(model):
+        return spark.createDataFrame(
+            [(*key, model, 0.3, 0.1, 0.9)],
+            "entity string, instance string, name string, best_model_name string,"
+            " threshold double, mean_error double, below_threshold_proportion double",
+        )
+
+    def stored(uri):
+        return [
+            sorted(frame.select(sorted(frame.columns)).collect())
+            for frame in (
+                repo.select_profiling(uri),
+                repo.select_scoring(uri),
+                repo.get_optimization(uri),
+            )
+        ]
+
+    for uri in ("a://x", "b://y"):
+        repo.add_dataset(uri, "ts", ["value"], "DAY")
+        repo.add_profiling(uri, metrics(1.0))
+        repo.add_scoring(uri, scoring(1.0))
+        repo.add_optimization(uri, optimization("SimpleModel"), confidence=0.9)
+    other = stored("b://y")
+
+    repo.add_profiling("a://x", metrics(10.0, only=days[-1]))
+    repo.add_scoring("a://x", scoring(10.0))
+    repo.add_optimization("a://x", optimization("AR1"), confidence=0.8)
+
+    assert stored("b://y") == other
+    prof, scores, opt = stored("a://x")
+    assert [(r["ts"], r["value"]) for r in prof] == [(days[0], 1.0), (days[1], 20.0)]
+    assert [r["value"] for r in scores] == [20.0]
+    assert [(r["best_model_name"], r["confidence"]) for r in opt] == [("AR1", 0.8)]
+
+
+def test_service_flows_release_cached_frames(spark, events_df, repo):
+    """A long-lived service must not grow the session's cache call by
+    call: onboarding and two same-ts assessments leave the CacheManager
+    as they found it."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    last_day = datetime.datetime(2024, 1, 30)
+    history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
+    new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
+    before = cache_manager.numCachedEntries()
+
+    profile_create_optimize(
+        history,
+        dataset_uri="my://leak",
+        ts_column="ts",
+        repo=repo,
+        profiling_builder=SimpleProfilingBuilder(),
+        confidence=0.85,
+    )
+    for _ in range(2):
+        assess_new_ts(
+            new_batch,
+            ts=last_day,
+            dataset_uri="my://leak",
+            repo=repo,
+            profiling_builder=SimpleProfilingBuilder(),
+        )
+    assert cache_manager.numCachedEntries() == before
+
+
 def test_viz_views(spark, events_df):
     from thoth_spark import viz
     from thoth_spark.anomaly import optimize

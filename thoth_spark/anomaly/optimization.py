@@ -184,74 +184,80 @@ def optimize(
     metrics_df = _tail_last_n(metrics_df.select(*key_cols, "ts", "value"), key_cols, last_n)
     # post-aggregation metric series are tiny relative to the profiled
     # data — cache so validation, per-model CV, and the constant-series
-    # check don't re-run the upstream profiling scan
+    # check don't re-run the upstream profiling scan. Released on the way
+    # out: nothing returned reads it once ``best`` is checkpointed and
+    # ``validation_df``'s cache is filled.
     metrics_df = metrics_df.cache()
-    validate_series(metrics_df, key_cols)
+    try:
+        validate_series(metrics_df, key_cols)
 
-    validations = []
-    for name in model_names:
-        model = MODEL_REGISTRY[name]() if name in MODEL_REGISTRY else None
-        if model is None:
-            raise KeyError(f"Unknown model '{name}'. Registered: {list(MODEL_REGISTRY)}")
-        validations.append(
-            cross_validation(metrics_df, model, key_cols, start_proportion)
+        validations = []
+        for name in model_names:
+            model = MODEL_REGISTRY[name]() if name in MODEL_REGISTRY else None
+            if model is None:
+                raise KeyError(f"Unknown model '{name}'. Registered: {list(MODEL_REGISTRY)}")
+            validations.append(
+                cross_validation(metrics_df, model, key_cols, start_proportion)
+            )
+        validation_df = validations[0]
+        for v in validations[1:]:
+            validation_df = validation_df.unionByName(v)
+        validation_df = validation_df.cache()
+
+        thresholds = find_best_threshold(validation_df, confidence, key_cols)
+
+        # Constant-series short-circuit (reference ``optimization.py:217-231``):
+        # a series with a single distinct value is forced onto SimpleModel —
+        # fancy forecasters add nothing and may misbehave on flat input.
+        if "SimpleModel" in model_names and len(model_names) > 1:
+            constant = metrics_df.groupBy(*key_cols).agg(
+                (F.count_distinct(F.col("value")) == 1).alias("__is_constant")
+            )
+            thresholds = thresholds.join(F.broadcast(constant), on=key_cols, how="left").where(
+                (~F.col("__is_constant")) | (F.col("model_name") == "SimpleModel")
+            ).drop("__is_constant")
+
+        # Model selection: min threshold, tie → factory order (see module doc).
+        order = F.array_position(
+            F.array(*[F.lit(n) for n in model_names]), F.col("model_name")
         )
-    validation_df = validations[0]
-    for v in validations[1:]:
-        validation_df = validation_df.unionByName(v)
-    validation_df = validation_df.cache()
-
-    thresholds = find_best_threshold(validation_df, confidence, key_cols)
-
-    # Constant-series short-circuit (reference ``optimization.py:217-231``):
-    # a series with a single distinct value is forced onto SimpleModel —
-    # fancy forecasters add nothing and may misbehave on flat input.
-    if "SimpleModel" in model_names and len(model_names) > 1:
-        constant = metrics_df.groupBy(*key_cols).agg(
-            (F.count_distinct(F.col("value")) == 1).alias("__is_constant")
-        )
-        thresholds = thresholds.join(F.broadcast(constant), on=key_cols, how="left").where(
-            (~F.col("__is_constant")) | (F.col("model_name") == "SimpleModel")
-        ).drop("__is_constant")
-
-    # Model selection: min threshold, tie → factory order (see module doc).
-    order = F.array_position(
-        F.array(*[F.lit(n) for n in model_names]), F.col("model_name")
-    )
-    pick = W.partitionBy(*key_cols).orderBy(F.col("threshold"), order)
-    best = (
-        thresholds.withColumn("__rk", F.row_number().over(pick))
-        .where(F.col("__rk") == 1)
-        .drop("__rk")
-        # one row per metric — model-sized, never data-sized. Pinning it
-        # means the failure probe below and every consumer of
-        # ``optimization_df`` (scoring join, assessment) reuse ONE
-        # materialization of the grid + selection window instead of
-        # re-running it per action (the probe used to execute the whole
-        # threshold pipeline a second time just to find zero failures).
-        .localCheckpoint()
-    )
-
-    failed = best.where(F.col("threshold") >= 1.0).limit(20).collect()
-    if failed:
-        names = ", ".join("/".join(str(r[c]) for c in key_cols) for r in failed)
-        raise OptimizationFailedError(
-            f"No threshold below 1.0 meets confidence={confidence} for "
-            f"metric(s): {names}"
+        pick = W.partitionBy(*key_cols).orderBy(F.col("threshold"), order)
+        best = (
+            thresholds.withColumn("__rk", F.row_number().over(pick))
+            .where(F.col("__rk") == 1)
+            .drop("__rk")
+            # one row per metric — model-sized, never data-sized. Pinning it
+            # means the failure probe below and every consumer of
+            # ``optimization_df`` (scoring join, assessment) reuse ONE
+            # materialization of the grid + selection window instead of
+            # re-running it per action (the probe used to execute the whole
+            # threshold pipeline a second time just to find zero failures).
+            .localCheckpoint()
         )
 
-    optimization_df = best.select(
-        *key_cols,
-        F.col("model_name").alias("best_model_name"),
-        F.greatest(F.col("threshold"), F.lit(min_threshold)).alias("threshold"),
-        "mean_error",
-        "below_threshold_proportion",
-    )
-    return AnomalyOptimization(
-        optimization_df=optimization_df,
-        validation_df=validation_df,
-        confidence=confidence,
-        key_cols=key_cols,
-        last_n=last_n,
-        model_names=model_names,
-    )
+        failed = best.where(F.col("threshold") >= 1.0).limit(20).collect()
+        if failed:
+            validation_df.unpersist()
+            names = ", ".join("/".join(str(r[c]) for c in key_cols) for r in failed)
+            raise OptimizationFailedError(
+                f"No threshold below 1.0 meets confidence={confidence} for "
+                f"metric(s): {names}"
+            )
+
+        optimization_df = best.select(
+            *key_cols,
+            F.col("model_name").alias("best_model_name"),
+            F.greatest(F.col("threshold"), F.lit(min_threshold)).alias("threshold"),
+            "mean_error",
+            "below_threshold_proportion",
+        )
+        return AnomalyOptimization(
+            optimization_df=optimization_df,
+            validation_df=validation_df,
+            confidence=confidence,
+            key_cols=key_cols,
+            last_n=last_n,
+            model_names=model_names,
+        )
+    finally:
+        metrics_df.unpersist()

@@ -68,80 +68,76 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 # The driver's correctness gate checks the first 50 ``queries()``
-# entries, so this list is exactly the 50-slot ROUND-16 window. Rotation
+# entries, so this list is exactly the 50-slot ROUND-18 window. Rotation
 # policy: minimize the maximum staleness of any catalogue query's last
 # STRICT driver-green (hash_match is True) row, with never-verified
 # oracled queries outranking everything (round 5 proved the local gate
 # can pass what the driver's typed hash fails). Composition, derived
-# from CORRECTNESS_r01-r15 (regenerate with ``python tools/staleness.py``):
-# (a) the 49 queries whose last strict driver-green is r12 — the whole
-#     r12 cohort hits the 4-round staleness horizon the moment
-#     CORRECTNESS_r16 lands, so ALL are MANDATORY (histogram after r15:
-#     50@r15, 48@r14, 49@r13, 49@r12 — r15 pre-rotated
-#     anomaly_multimodel_threshold out of the r12 cohort for exactly
-#     this crunch);
-# (b) the single remaining slot wires the r15-queued C4 span dedup
-#     oracle — never driver-verified, so mandatory the round it lands.
-# r17 arithmetic, fixed now: 49 r13-cohort mandatory + the queued
-# incremental span-dedup wiring = 50 exactly, so r16 may queue AT MOST
-# one new oracle and r17 has zero discretionary slots.
+# from CORRECTNESS_r01-r17 (regenerate with ``python tools/staleness.py``):
+# (a) the 49 queries whose last strict driver-green is r13 or earlier —
+#     past the 4-round staleness horizon once CORRECTNESS_r17 landed, so
+#     ALL are MANDATORY;
+# (b) the single remaining slot goes to the oldest r14 cohort member
+#     (alphabetical first), pre-rotating it before that cohort's
+#     crunch. No oracle is never-green, and the queued incremental
+#     span-dedup oracle stays queued: wiring it needs a free slot.
 # tests/test_entry_oracle.py::test_driver_window_rotation enforces a
 # staleness invariant over this list that stays green across round
 # boundaries (it compares against the PRIOR round's recorded window,
 # never the file the current round just produced).
 DRIVER_PRIORITY: list[str] = [
-    # (a) last strict driver-green r12 — all 49 mandatory this round
-    "anomaly_scoring_events",
-    "anomaly_seasonal_naive_validation",
-    "anomaly_sm_threshold",
-    "anomaly_sm_validation",
-    "anomaly_sm_window_preds",
-    "bpe_merges_documents",
-    "bpe_token_count_documents",
-    "bucketed_join_orders_lineitem",
-    "chi2_drift_events",
-    "dedup_containment_capped_documents",
-    "dedup_containment_documents",
-    "dedup_exact_events",
-    "dedup_minhash_components",
-    "dedup_minhash_documents",
-    "dedup_minhash_survivors",
-    "dedup_quality_survivors_documents",
-    "embedding_drift_snapshots",
-    "leakage_safe_split_documents",
-    "rollup_orders",
-    "sample_documents_hash",
-    "sample_documents_weighted",
-    "set_ops_customers",
-    "similarity_lsh_recall",
-    "similarity_topk_ivfpq_index_scale_invariance",
-    "sketch_rollup_weekly_events",
-    "sketch_trailing_wau_events",
-    "source_keywords_documents",
-    "streaming_curate_documents",
-    "streaming_sessionize_events",
-    "text_stats_documents",
-    "token_count_documents",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_shipments",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promotion_effect",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_discounted_revenue",
-    "tpch_q1_pricing_summary",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "trailing_window_revenue",
-    "training_order_documents",
-    "viz_rolling_band_events",
-    # (b) wired this round from the r15 queue — never driver-verified
-    "c4_span_dedup_documents",
+    # (a) last strict driver-green r13 or earlier — all 49 mandatory
+    "anomaly_ar1_validation",
+    "anomaly_holt_validation",
+    "asof_join_purchase_click",
+    "bm25_multiquery_documents",
+    "bm25_topk_documents",
+    "chunk_documents",
+    "classifier_nb_documents",
+    "cluster_balanced_sample_embeddings",
+    "dedup_ngram_jaccard_capped",
+    "dedup_ngram_jaccard_documents",
+    "dedup_simhash_documents",
+    "dedup_simhash_pairs_documents",
+    "domain_cap_sample_documents",
+    "embedding_dedup_components",
+    "embedding_neardup_lsh",
+    "knn_graph_embeddings",
+    "line_dedup_none_documents",
+    "multimodal_decode_real",
+    "ngram_decontaminate_documents",
+    "pack_documents",
+    "perplexity_documents",
+    "profile_events_extended",
+    "profile_events_gap_fill",
+    "profile_events_hourly_size",
+    "profile_events_inferred_types",
+    "profile_events_minmax_sum",
+    "profile_events_quarterly",
+    "profile_events_weekly",
+    "psi_drift_events",
+    "quality_assessment_events",
+    "range_join_transit_orders",
+    "repository_roundtrip_jdbc",
+    "repository_roundtrip_profiling",
+    "similarity_topk_ivf_index_join_serve",
+    "similarity_topk_ivfpq_index_append_fullprobe",
+    "similarity_topk_ivfpq_index_join_serve",
+    "similarity_topk_lsh",
+    "similarity_topk_quantized",
+    "streaming_dedup_events",
+    "streaming_sketch_rollup_events",
+    "streaming_watermark_profile_events",
+    "tpch_q15_top_supplier",
+    "tpch_q18_large_volume_customer",
+    "tpch_q21_waiting_suppliers",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q6_forecast_revenue",
+    "viz_forecast_interval_events",
+    "viz_score_band_events",
+    "viz_series_events",
+    # (b) last strict driver-green r14
+    "anomaly_fixed_changepoint_validation",
 ]
 
 

@@ -1,12 +1,21 @@
-"""Metrics repository on partitioned parquet.
+"""Metrics repository: one contract, two storage adapters.
 
 Spark-native replacement for the reference's SQLModel/RDBMS store
-(``/root/reference/thoth/repository.py:258-347``): long-format tables
-partitioned by ``dataset_uri`` so every per-dataset read prunes to one
-partition directory. Upserts use dynamic partition overwrite
-(read-merge-overwrite of only the touched ``dataset_uri`` partitions);
-on a Delta/Iceberg-enabled cluster the same operations map to
-``MERGE INTO`` — noted per method.
+(the reference's ``thoth/repository.py:258-347``). :class:`RepositoryPort`
+holds, once for both adapters, every method body that does not touch
+storage: the registration and granularity validation of
+``add_profiling``, the column projections, the upsert of metrics and
+scorings by ``(dataset_uri, ts)``, the replace-by-dataset of
+optimizations, the range scans and the point lookups. An adapter
+supplies only the storage primitives declared on the port: ``_read``,
+``_exists``, ``_replace_dataset_rows`` and the registry row codec.
+
+:class:`MetricsRepository` (here) stores parquet tables partitioned by
+``dataset_uri``: every per-dataset read prunes to one partition
+directory and a write replaces only the touched partition (dynamic
+partition overwrite; ``MERGE INTO`` on a Delta/Iceberg cluster).
+:class:`thoth_spark.repository_jdbc.JdbcMetricsRepository` stores the
+same tables in an RDBMS.
 
 Tables under ``base_path``:
 
@@ -19,6 +28,7 @@ Tables under ``base_path``:
 from __future__ import annotations
 
 import os
+from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,53 +57,52 @@ class DatasetValidationError(Exception):
     ``repository.py:28-55``)."""
 
 
-class MetricsRepository:
-    """Parquet-backed port of the reference's AbstractRepository."""
+class RepositoryPort(ABC):
+    """The reference's AbstractRepository: the storage-independent half
+    of both adapters (see the module docstring for the primitives an
+    adapter supplies)."""
 
-    def __init__(self, spark: SparkSession, base_path: str):
-        self.spark = spark
-        self.base_path = base_path
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spark: SparkSession
+    #: the registry as stored; the default codec keeps ``columns`` an array
+    _REGISTRY_SCHEMA = _DATASETS_SCHEMA
 
-    def _path(self, table: str) -> str:
-        return os.path.join(self.base_path, table)
+    # -- storage primitives ----------------------------------------------------
 
+    @abstractmethod
     def _read(self, table: str, schema: str) -> DataFrame:
-        """Read a repository table; a table that does not exist yet reads
-        as empty. Any OTHER read error must propagate: the upserts here
-        are read-merge-overwrite, so silently treating a transient or
-        corruption failure as "empty" would make the subsequent dynamic
-        partition overwrite replace stored history with only the new
-        batch — a data-loss bug, not a recoverable condition."""
-        path = self._path(table)
-        if not self._table_exists(path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(path)
+        """The whole table; empty while it does not exist. Any OTHER read
+        error must propagate: the upserts are read-merge-write, so
+        treating a transient or corruption failure as "empty" would
+        replace stored history with only the new batch — a data-loss bug,
+        not a recoverable condition."""
 
-    def _table_exists(self, path: str) -> bool:
-        """Existence check through Hadoop's FileSystem API so it works on
-        any supported filesystem (local, HDFS, object stores), not just
-        the driver's local disk."""
-        jvm = self.spark.sparkContext._jvm
-        jsc = self.spark.sparkContext._jsc
-        hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-        return bool(fs.exists(hadoop_path))
+    @abstractmethod
+    def _exists(self, table: str) -> bool:
+        """Whether the table has been written."""
 
-    def _overwrite_partitions(self, df: DataFrame, table: str) -> None:
-        """Overwrite only the dataset_uri partitions present in ``df``
-        (Delta equivalent: MERGE INTO ... ON dataset_uri AND key).
+    @abstractmethod
+    def _replace_dataset_rows(
+        self, table: str, schema: str, dataset_uri: str, rows: DataFrame
+    ) -> None:
+        """Make ``rows`` the dataset's whole content of ``table``; every
+        other dataset's rows stay as they are."""
 
-        ``localCheckpoint`` materializes the merged rows first — Spark
-        cannot stream-read a path while overwriting it."""
-        materialized = df.repartition("dataset_uri").localCheckpoint(eager=True)
-        (
-            materialized.write.mode("overwrite")
-            .partitionBy("dataset_uri")
-            .parquet(self._path(table))
-        )
+    @abstractmethod
+    def _write_registry(self, registry: DataFrame) -> None:
+        """Overwrite the registry table with ``registry``."""
 
-    # -- dataset registry ---------------------------------------------------
+    def _encode_dataset(self, dataset_uri, ts_column, columns, granularity) -> tuple:
+        return (dataset_uri, ts_column, list(columns), granularity)
+
+    def _decode_dataset(self, row) -> dict:
+        return row.asDict()
+
+    # -- dataset registry ------------------------------------------------------
+
+    def registry_exists(self) -> bool:
+        """True once a dataset has been registered — the reference's
+        ``is_db_initialized`` checks for its ``dataset`` table."""
+        return self._exists("datasets")
 
     def add_dataset(
         self,
@@ -104,33 +113,57 @@ class MetricsRepository:
     ) -> None:
         """Upsert dataset metadata by uri."""
         # registry is tiny — collect, replace, rewrite
-        existing = [
+        rows = [
             tuple(r)
-            for r in self._read("datasets", _DATASETS_SCHEMA).collect()
+            for r in self._read("datasets", self._REGISTRY_SCHEMA).collect()
             if r["dataset_uri"] != dataset_uri
         ]
-        rows = existing + [(dataset_uri, ts_column, columns, granularity)]
-        self.spark.createDataFrame(rows, _DATASETS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self._path("datasets"))
+        rows.append(self._encode_dataset(dataset_uri, ts_column, columns, granularity))
+        self._write_registry(self.spark.createDataFrame(rows, self._REGISTRY_SCHEMA))
 
     def get_dataset(self, dataset_uri: str) -> dict | None:
         rows = (
-            self._read("datasets", _DATASETS_SCHEMA)
+            self._read("datasets", self._REGISTRY_SCHEMA)
             .where(F.col("dataset_uri") == dataset_uri)
             .collect()
         )
-        return rows[0].asDict() if rows else None
+        return self._decode_dataset(rows[0]) if rows else None
 
     def get_datasets(self) -> list[dict]:
         return [
-            r.asDict()
-            for r in self._read("datasets", _DATASETS_SCHEMA)
+            self._decode_dataset(r)
+            for r in self._read("datasets", self._REGISTRY_SCHEMA)
             .orderBy("dataset_uri")
             .collect()
         ]
 
-    # -- profiling metrics ---------------------------------------------------
+    # -- shared read/write shapes ----------------------------------------------
+
+    def _upsert_by_ts(
+        self, table: str, schema: str, dataset_uri: str, new: DataFrame
+    ) -> None:
+        """Keep the dataset's stored rows at every ts that ``new`` does
+        not carry, replace the rest."""
+        existing = self._read(table, schema).where(F.col("dataset_uri") == dataset_uri)
+        new_ts = new.select("ts").distinct()
+        kept = existing.join(new_ts, on="ts", how="left_anti").select(*new.columns)
+        self._replace_dataset_rows(table, schema, dataset_uri, kept.unionByName(new))
+
+    def _scan(self, table: str, schema: str, dataset_uri: str, start_ts, end_ts) -> DataFrame:
+        """Closed-interval range scan of one dataset, sorted by ts."""
+        df = self._read(table, schema).where(F.col("dataset_uri") == dataset_uri)
+        if start_ts is not None:
+            df = df.where(F.col("ts") >= F.lit(start_ts))
+        if end_ts is not None:
+            df = df.where(F.col("ts") <= F.lit(end_ts))
+        return df.orderBy("ts")
+
+    def _lookup(self, table: str, schema: str, dataset_uri: str, ts) -> DataFrame:
+        return self._read(table, schema).where(
+            (F.col("dataset_uri") == dataset_uri) & (F.col("ts") == F.lit(ts))
+        )
+
+    # -- profiling metrics -------------------------------------------------------
 
     def add_profiling(
         self, dataset_uri: str, metrics_df: DataFrame, granularity: str = "DAY"
@@ -157,33 +190,26 @@ class MetricsRepository:
             "name",
             F.col("value").cast("double"),
         )
-        existing = self._read("metrics", _METRICS_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-        new_ts = new.select("ts").distinct()
-        kept = existing.join(new_ts, on="ts", how="left_anti").select(*new.columns)
-        self._overwrite_partitions(kept.unionByName(new), "metrics")
+        self._upsert_by_ts("metrics", _METRICS_SCHEMA, dataset_uri, new)
 
     def select_profiling(
         self, dataset_uri: str, start_ts=None, end_ts=None
     ) -> DataFrame:
-        """Closed-interval range scan, partition-pruned by dataset_uri,
-        sorted by ts (reference ``repository.py:294-303``)."""
-        df = self._read("metrics", _METRICS_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-        if start_ts is not None:
-            df = df.where(F.col("ts") >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.where(F.col("ts") <= F.lit(end_ts))
-        return df.orderBy("ts")
+        """Closed-interval range scan (reference ``repository.py:294-303``)."""
+        return self._scan("metrics", _METRICS_SCHEMA, dataset_uri, start_ts, end_ts)
 
-    # -- optimizations ---------------------------------------------------------
+    def get_profiling(self, dataset_uri: str, ts) -> DataFrame:
+        """Point lookup of one profiling report (the reference addresses it
+        by ``sha1(uri + ts.isoformat())`` — ``profiler.py:198-204``; the
+        natural key (uri, ts) is the same identity without the digest)."""
+        return self._lookup("metrics", _METRICS_SCHEMA, dataset_uri, ts)
+
+    # -- optimizations -------------------------------------------------------------
 
     def add_optimization(
         self, dataset_uri: str, optimization_df: DataFrame, confidence: float
     ) -> None:
-        """Upsert by dataset_uri (one optimization per dataset)."""
+        """Replace the dataset's optimization (one per dataset)."""
         new = optimization_df.select(
             F.lit(dataset_uri).alias("dataset_uri"),
             "entity",
@@ -195,14 +221,14 @@ class MetricsRepository:
             F.col("below_threshold_proportion").cast("double"),
             F.lit(confidence).alias("confidence"),
         )
-        self._overwrite_partitions(new, "optimizations")
+        self._replace_dataset_rows("optimizations", _OPT_SCHEMA, dataset_uri, new)
 
     def get_optimization(self, dataset_uri: str) -> DataFrame:
         return self._read("optimizations", _OPT_SCHEMA).where(
             F.col("dataset_uri") == dataset_uri
         )
 
-    # -- scorings ---------------------------------------------------------------
+    # -- scorings -------------------------------------------------------------------
 
     def add_scoring(self, dataset_uri: str, scoring_df: DataFrame) -> None:
         """Upsert by (dataset_uri, ts)."""
@@ -216,34 +242,57 @@ class MetricsRepository:
             F.col("predicted").cast("double"),
             F.col("error").cast("double"),
         )
-        existing = self._read("scorings", _SCORING_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-        new_ts = new.select("ts").distinct()
-        kept = existing.join(new_ts, on="ts", how="left_anti").select(*new.columns)
-        self._overwrite_partitions(kept.unionByName(new), "scorings")
-
-    def get_profiling(self, dataset_uri: str, ts) -> DataFrame:
-        """Point lookup of one profiling report (the reference addresses it
-        by ``sha1(uri + ts.isoformat())`` — ``profiler.py:198-204``; the
-        natural key (uri, ts) is the same identity without the digest)."""
-        return self._read("metrics", _METRICS_SCHEMA).where(
-            (F.col("dataset_uri") == dataset_uri) & (F.col("ts") == F.lit(ts))
-        )
+        self._upsert_by_ts("scorings", _SCORING_SCHEMA, dataset_uri, new)
 
     def get_scoring(self, dataset_uri: str, ts) -> DataFrame:
         """Point lookup of one scoring event (reference ``scoring.py:38-40``
         sha1 id ≙ natural key (uri, ts))."""
-        return self._read("scorings", _SCORING_SCHEMA).where(
-            (F.col("dataset_uri") == dataset_uri) & (F.col("ts") == F.lit(ts))
-        )
+        return self._lookup("scorings", _SCORING_SCHEMA, dataset_uri, ts)
 
     def select_scoring(self, dataset_uri: str, start_ts=None, end_ts=None) -> DataFrame:
-        df = self._read("scorings", _SCORING_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
+        return self._scan("scorings", _SCORING_SCHEMA, dataset_uri, start_ts, end_ts)
+
+
+class MetricsRepository(RepositoryPort):
+    """Parquet adapter: tables partitioned by ``dataset_uri``."""
+
+    def __init__(self, spark: SparkSession, base_path: str):
+        self.spark = spark
+        self.base_path = base_path
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+    def _path(self, table: str) -> str:
+        return os.path.join(self.base_path, table)
+
+    def _read(self, table: str, schema: str) -> DataFrame:
+        if not self._exists(table):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(self._path(table))
+
+    def _exists(self, table: str) -> bool:
+        """Through Hadoop's FileSystem API so it works on any supported
+        filesystem (local, HDFS, object stores), not just the driver's
+        local disk."""
+        jvm = self.spark.sparkContext._jvm
+        jsc = self.spark.sparkContext._jsc
+        hadoop_path = jvm.org.apache.hadoop.fs.Path(self._path(table))
+        fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
+        return bool(fs.exists(hadoop_path))
+
+    def _replace_dataset_rows(
+        self, table: str, schema: str, dataset_uri: str, rows: DataFrame
+    ) -> None:
+        """Dynamic partition overwrite of the ``dataset_uri`` partition
+        (Delta equivalent: MERGE INTO ... ON dataset_uri AND key).
+
+        ``localCheckpoint`` materializes the rows first — Spark cannot
+        stream-read a path while overwriting it."""
+        materialized = rows.repartition("dataset_uri").localCheckpoint(eager=True)
+        (
+            materialized.write.mode("overwrite")
+            .partitionBy("dataset_uri")
+            .parquet(self._path(table))
         )
-        if start_ts is not None:
-            df = df.where(F.col("ts") >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.where(F.col("ts") <= F.lit(end_ts))
-        return df.orderBy("ts")
+
+    def _write_registry(self, registry: DataFrame) -> None:
+        registry.coalesce(1).write.mode("overwrite").parquet(self._path("datasets"))

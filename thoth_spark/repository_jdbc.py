@@ -1,42 +1,39 @@
 """JDBC metrics repository (embedded Apache Derby).
 
-Second adapter proving the repository port, mirroring the reference's
-RDBMS store (``/root/reference/thoth/repository.py:258-347`` — SQLModel
-over SQLite/Postgres): same public API as
-:class:`thoth_spark.repository.MetricsRepository`, but persisting
-through Spark's JDBC source into an embedded Derby database (Derby ships
-in Spark's own ``jars/``, so no extra dependency). Swap the URL/driver
-for Postgres etc. on a real deployment.
+Second adapter of the repository port, mirroring the reference's RDBMS
+store (the reference's ``thoth/repository.py:258-347`` — SQLModel over
+SQLite/Postgres). Every public method comes from
+:class:`thoth_spark.repository.RepositoryPort`, the contract the parquet
+adapter implements too; this module supplies only the storage
+primitives, persisting through Spark's JDBC source into an embedded
+Derby database (Derby ships in Spark's own ``jars/``, so no extra
+dependency). Swap the URL/driver for Postgres etc. on a real deployment.
 
 Scale note: this adapter exists for dashboard/RDBMS parity. The tables
 it holds are post-aggregation metrics (rows ∝ #metrics × #days — metadata
-scale, not data scale), so whole-table read-merge-overwrite is the right
-cost model; the parquet adapter remains the partition-pruned path for
-large metric stores.
+scale, not data scale), so "replace this dataset's rows" is a read of the
+other datasets' rows and a whole-table overwrite; the parquet adapter
+remains the partition-pruned path for large metric stores.
 
 Derby/JDBC quirks handled here:
 
 - Spark maps ``StringType`` to CLOB on Derby, and Derby refuses ``=``
   comparisons on CLOB — every string column is pinned to VARCHAR via
   ``createTableColumnTypes``;
-- JDBC has no array type: the dataset registry's ``columns`` list is
-  stored unit-separator-joined and re-split on read;
+- JDBC has no array type: the registry codec stores the dataset's
+  ``columns`` list unit-separator-joined and re-splits it on read;
 - a missing table (first use) reads as empty; any OTHER read error
-  propagates — same no-data-loss contract as the parquet adapter.
+  propagates — the no-data-loss contract of ``RepositoryPort._read``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from thoth_spark.repository import (
-    _DATASETS_SCHEMA,
-    _METRICS_SCHEMA,
-    _OPT_SCHEMA,
-    _SCORING_SCHEMA,
-    DatasetValidationError,
-)
+from thoth_spark.repository import RepositoryPort
 
 _DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -88,13 +85,15 @@ def _infer_driver(url: str) -> str | None:
     return None
 
 
-class JdbcMetricsRepository:
+class JdbcMetricsRepository(RepositoryPort):
     """Derby-backed port of the reference's SqlRepository. Any other
     RDBMS is a URL away: pass ``url=`` (full JDBC URL, e.g.
     ``jdbc:postgresql://host/db?user=u&password=p``) or set
     ``THOTH_SPARK_DATABASE_URL`` — both beat ``db_path``; the driver
     class is inferred from the URL scheme (override with ``driver=``
     for schemes not in ``_DRIVERS_BY_SCHEME``)."""
+
+    _REGISTRY_SCHEMA = _DATASETS_FLAT_SCHEMA
 
     def __init__(
         self,
@@ -103,8 +102,6 @@ class JdbcMetricsRepository:
         url: str | None = None,
         driver: str | None = None,
     ):
-        import os
-
         self.spark = spark
         env_url = os.environ.get("THOTH_SPARK_DATABASE_URL")
         if url or env_url:
@@ -125,9 +122,11 @@ class JdbcMetricsRepository:
         lets Spark's JDBC source resolve the driver from the URL."""
         return rw.option("driver", self._driver) if self._driver else rw
 
-    def _read(self, table: str, schema: str) -> DataFrame:
+    def _load(self, table: str) -> DataFrame | None:
+        """The table as the database types it; None while it does not
+        exist."""
         try:
-            df = (
+            return (
                 self._with_driver(
                     self.spark.read.format("jdbc").option("url", self.url)
                 )
@@ -136,21 +135,27 @@ class JdbcMetricsRepository:
             )
         except Exception as e:  # noqa: BLE001 — inspect & re-raise below
             msg = str(e)
-            # Derby's table-missing error (first use) reads as empty;
-            # everything else is a real failure that must NOT be treated
-            # as "empty" (the upserts are read-merge-overwrite).
+            # Derby's table-missing error (first use); everything else
+            # is a real failure that must propagate
             if "does not exist" in msg or "42X05" in msg:
-                return self.spark.createDataFrame([], schema)
+                return None
             raise
+
+    def _exists(self, table: str) -> bool:
+        return self._load(table) is not None
+
+    def _read(self, table: str, schema: str) -> DataFrame:
+        df = self._load(table)
         expected = self.spark.createDataFrame([], schema)
+        if df is None:
+            return expected
         return df.select(
             *[F.col(f.name).cast(f.dataType) for f in expected.schema.fields]
         )
 
     def _overwrite(self, df: DataFrame, table: str) -> None:
-        """Replace the whole table (metadata-scale frames; the merged
-        frame is materialized first — JDBC can't read a table it is
-        overwriting)."""
+        """Replace the whole table (the frame is materialized first —
+        JDBC can't read a table it is overwriting)."""
         materialized = df.localCheckpoint(eager=True)
         writer = (
             self._with_driver(
@@ -163,152 +168,22 @@ class JdbcMetricsRepository:
             writer = writer.option("createTableColumnTypes", _COLUMN_TYPES[table])
         writer.save()
 
-    def _merged_upsert(
-        self, table: str, schema: str, new: DataFrame, dataset_uri: str
+    def _replace_dataset_rows(
+        self, table: str, schema: str, dataset_uri: str, rows: DataFrame
     ) -> None:
-        """Upsert by (dataset_uri, ts): keep other datasets' rows and this
-        dataset's rows for untouched ts values, replace the rest."""
-        existing = self._read(table, schema)
-        others = existing.where(F.col("dataset_uri") != dataset_uri)
-        mine = existing.where(F.col("dataset_uri") == dataset_uri)
-        new_ts = new.select("ts").distinct()
-        kept = mine.join(new_ts, on="ts", how="left_anti").select(*new.columns)
-        self._overwrite(others.select(*new.columns).unionByName(kept).unionByName(new), table)
+        others = self._read(table, schema).where(F.col("dataset_uri") != dataset_uri)
+        self._overwrite(others.select(*rows.columns).unionByName(rows), table)
 
-    # -- dataset registry ----------------------------------------------------
+    # -- registry codec --------------------------------------------------------
 
-    def add_dataset(
-        self,
-        dataset_uri: str,
-        ts_column: str,
-        columns: list[str],
-        granularity: str = "DAY",
-    ) -> None:
-        existing = [
-            tuple(r)
-            for r in self._read("datasets", _DATASETS_FLAT_SCHEMA).collect()
-            if r["dataset_uri"] != dataset_uri
-        ]
-        rows = existing + [(dataset_uri, ts_column, _SEP.join(columns), granularity)]
-        self._overwrite(
-            self.spark.createDataFrame(rows, _DATASETS_FLAT_SCHEMA), "datasets"
-        )
+    def _encode_dataset(self, dataset_uri, ts_column, columns, granularity) -> tuple:
+        return (dataset_uri, ts_column, _SEP.join(columns), granularity)
 
-    def _unflatten(self, row) -> dict:
+    def _decode_dataset(self, row) -> dict:
         d = row.asDict()
         joined = d.pop("columns_joined")
         d["columns"] = joined.split(_SEP) if joined else []
         return d
 
-    def get_dataset(self, dataset_uri: str) -> dict | None:
-        rows = (
-            self._read("datasets", _DATASETS_FLAT_SCHEMA)
-            .where(F.col("dataset_uri") == dataset_uri)
-            .collect()
-        )
-        return self._unflatten(rows[0]) if rows else None
-
-    def get_datasets(self) -> list[dict]:
-        return [
-            self._unflatten(r)
-            for r in self._read("datasets", _DATASETS_FLAT_SCHEMA)
-            .orderBy("dataset_uri")
-            .collect()
-        ]
-
-    # -- profiling metrics ---------------------------------------------------
-
-    def add_profiling(
-        self, dataset_uri: str, metrics_df: DataFrame, granularity: str = "DAY"
-    ) -> None:
-        dataset = self.get_dataset(dataset_uri)
-        if dataset is None:
-            raise DatasetValidationError(
-                f"Dataset '{dataset_uri}' is not registered; call add_dataset first."
-            )
-        if dataset["granularity"] != granularity:
-            raise DatasetValidationError(
-                f"Granularity mismatch: registered {dataset['granularity']},"
-                f" got {granularity}."
-            )
-        new = metrics_df.select(
-            F.lit(dataset_uri).alias("dataset_uri"),
-            "ts",
-            F.lit(granularity).alias("granularity"),
-            "entity",
-            "instance",
-            "name",
-            F.col("value").cast("double"),
-        )
-        self._merged_upsert("metrics", _METRICS_SCHEMA, new, dataset_uri)
-
-    def select_profiling(self, dataset_uri: str, start_ts=None, end_ts=None) -> DataFrame:
-        df = self._read("metrics", _METRICS_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-        if start_ts is not None:
-            df = df.where(F.col("ts") >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.where(F.col("ts") <= F.lit(end_ts))
-        return df.orderBy("ts")
-
-    def get_profiling(self, dataset_uri: str, ts) -> DataFrame:
-        return self._read("metrics", _METRICS_SCHEMA).where(
-            (F.col("dataset_uri") == dataset_uri) & (F.col("ts") == F.lit(ts))
-        )
-
-    # -- optimizations -------------------------------------------------------
-
-    def add_optimization(
-        self, dataset_uri: str, optimization_df: DataFrame, confidence: float
-    ) -> None:
-        new = optimization_df.select(
-            F.lit(dataset_uri).alias("dataset_uri"),
-            "entity",
-            "instance",
-            "name",
-            "best_model_name",
-            F.col("threshold").cast("double"),
-            F.col("mean_error").cast("double"),
-            F.col("below_threshold_proportion").cast("double"),
-            F.lit(confidence).alias("confidence"),
-        )
-        existing = self._read("optimizations", _OPT_SCHEMA).where(
-            F.col("dataset_uri") != dataset_uri
-        )
-        self._overwrite(existing.select(*new.columns).unionByName(new), "optimizations")
-
-    def get_optimization(self, dataset_uri: str) -> DataFrame:
-        return self._read("optimizations", _OPT_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-
-    # -- scorings ------------------------------------------------------------
-
-    def add_scoring(self, dataset_uri: str, scoring_df: DataFrame) -> None:
-        new = scoring_df.select(
-            F.lit(dataset_uri).alias("dataset_uri"),
-            "ts",
-            "entity",
-            "instance",
-            "name",
-            F.col("value").cast("double"),
-            F.col("predicted").cast("double"),
-            F.col("error").cast("double"),
-        )
-        self._merged_upsert("scorings", _SCORING_SCHEMA, new, dataset_uri)
-
-    def get_scoring(self, dataset_uri: str, ts) -> DataFrame:
-        return self._read("scorings", _SCORING_SCHEMA).where(
-            (F.col("dataset_uri") == dataset_uri) & (F.col("ts") == F.lit(ts))
-        )
-
-    def select_scoring(self, dataset_uri: str, start_ts=None, end_ts=None) -> DataFrame:
-        df = self._read("scorings", _SCORING_SCHEMA).where(
-            F.col("dataset_uri") == dataset_uri
-        )
-        if start_ts is not None:
-            df = df.where(F.col("ts") >= F.lit(start_ts))
-        if end_ts is not None:
-            df = df.where(F.col("ts") <= F.lit(end_ts))
-        return df.orderBy("ts")
+    def _write_registry(self, registry: DataFrame) -> None:
+        self._overwrite(registry, "datasets")

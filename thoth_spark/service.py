@@ -1,14 +1,16 @@
 """Service layer: the reference's public entry points re-expressed over the
-DataFrame pipeline + parquet repository
-(``/root/reference/thoth/service_layer.py:400-508``)."""
+DataFrame pipeline + the repository port (the reference's
+``thoth/service_layer.py:400-508``). The end-to-end calls compose the
+standalone flows: ``profile_create_optimize`` is ``profile_create`` then
+``optimize``; ``assess_new_ts`` is ``profile``, then the scoring step
+``score`` shares, then the quality assessment."""
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from thoth_spark.anomaly.models import MODEL_REGISTRY
 from thoth_spark.anomaly.optimization import AnomalyOptimization
@@ -18,15 +20,13 @@ from thoth_spark.profiler import Granularity, ProfilingBuilder
 from thoth_spark.profiler import profile as _profile_core
 from thoth_spark.quality import NotificationHandler
 from thoth_spark.quality import assess_quality as _assess_quality_core
-from thoth_spark.repository import MetricsRepository
+from thoth_spark.repository import MetricsRepository, RepositoryPort
 
 # the module-level names `profile`/`optimize`/`score`/`assess_quality`
 # defined below are the SERVICE-LAYER versions (repo-persisted flows,
 # reference thoth/service_layer.py:157,245,307,355); the composable core
 # functions are aliased with _core suffixes and keep their direct
 # exports via the package root's type-dispatching wrappers
-
-logger = logging.getLogger("thoth_spark.service")
 
 _KEY = ["entity", "instance", "name"]
 
@@ -40,7 +40,7 @@ def profile_create_optimize(
     df: DataFrame,
     dataset_uri: str,
     ts_column: str,
-    repo: MetricsRepository,
+    repo: RepositoryPort,
     profiling_builder: ProfilingBuilder | None = None,
     granularity: str = Granularity.DAY,
     confidence: float = 0.99,
@@ -48,23 +48,22 @@ def profile_create_optimize(
     start_proportion: float | None = None,
     last_n: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Onboard a dataset: profile full history, persist, optimize, persist.
+    """Onboard a dataset: :func:`profile_create`, then :func:`optimize`
+    over the stored history.
 
     Returns (metrics_df, optimization_df)."""
-    metrics = _profile_core(df, ts_column, profiling_builder, granularity).cache()
-    repo.add_dataset(
-        dataset_uri, ts_column, [c for c in df.columns if c != ts_column], granularity
+    metrics = profile_create(
+        df, dataset_uri, ts_column, repo, profiling_builder, granularity
     )
-    repo.add_profiling(dataset_uri, metrics, granularity)
-    opt = _optimize_core(
-        metrics,
-        confidence=confidence,
-        min_threshold=min_threshold,
-        start_proportion=start_proportion,
+    opt = optimize(
+        dataset_uri,
         last_n=last_n,
-        key_cols=_KEY,
+        start_proportion=start_proportion,
+        target_confidence=confidence,
+        min_threshold=min_threshold,
+        repo=repo,
     )
-    repo.add_optimization(dataset_uri, opt.optimization_df, confidence)
+    opt.validation_df.unpersist()
     return metrics, opt.optimization_df
 
 
@@ -72,39 +71,46 @@ def assess_new_ts(
     df: DataFrame,
     ts,
     dataset_uri: str,
-    repo: MetricsRepository,
+    repo: RepositoryPort,
     profiling_builder: ProfilingBuilder | None = None,
     notification_handlers: Sequence[NotificationHandler] | None = None,
 ) -> bool:
-    """Score one new batch against the stored optimization.
-
-    Profiles the batch, splices it into history (same-ts re-profiling
-    replaces the stored report — reference ``service_layer.py:481-486``),
-    scores the last point per metric, persists the scoring and assesses
-    quality. Returns True when no metric breaches its threshold.
+    """Score one new batch against the stored optimization: service
+    :func:`profile` (same-ts re-profiling replaces the stored report —
+    reference ``service_layer.py:481-486``), then :func:`score` of the
+    last point per metric and the quality assessment. Returns True when
+    no metric breaches its threshold.
     """
-    dataset = repo.get_dataset(dataset_uri)
-    if dataset is None:
-        raise ValueError(f"Dataset '{dataset_uri}' not found; onboard it first.")
-    granularity = dataset["granularity"]
-    ts_column = dataset["ts_column"]
+    profile(df, dataset_uri, profiling_builder, repo=repo)
+    history = repo.select_profiling(dataset_uri, end_ts=ts)
+    opt_df = repo.get_optimization(dataset_uri)
+    with _scored(repo, dataset_uri, history, opt_df) as scoring:
+        return _assess_quality_core(
+            opt_df,
+            scoring,
+            key_cols=_KEY,
+            notification_handlers=notification_handlers,
+            dataset_uri=dataset_uri,
+        )
 
-    new_metrics = _profile_core(df, ts_column, profiling_builder, granularity)
-    repo.add_profiling(dataset_uri, new_metrics, granularity)
 
-    history = repo.select_profiling(dataset_uri, end_ts=ts).select(
-        *_KEY, "ts", "value"
-    )
-    opt_df = repo.get_optimization(dataset_uri).cache()
-    confidence = opt_df.select("confidence").first()["confidence"]
-    # Score with every model the stored optimization actually selected —
-    # defaulting to SimpleModel here would silently drop the scores of any
-    # metric whose persisted best model is different (score() inner-joins
-    # on best_model_name) and report a false "all good".
-    model_names = sorted(
-        r["best_model_name"]
-        for r in opt_df.select("best_model_name").distinct().collect()
-    )
+@contextmanager
+def _scored(repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_df: DataFrame):
+    """Score ``history`` against the optimization ``opt_df`` and persist
+    the scoring; yields the scoring frame, cached only inside the
+    ``with`` block.
+
+    One collect of the (model-sized) optimization gives its confidence
+    and the models to score with — every model it actually selected:
+    scoring only with a default model would silently drop the scores of
+    any metric whose best model is different (the core ``score``
+    inner-joins on ``best_model_name``) and report a false "all good"."""
+    rows = opt_df.collect()
+    if not rows:
+        raise ValueError(
+            "profiling and optimization can't be None. Values were not found in repo."
+        )
+    model_names = sorted({r["best_model_name"] for r in rows})
     unknown = [m for m in model_names if m not in MODEL_REGISTRY]
     if unknown:
         raise ValueError(
@@ -114,19 +120,18 @@ def assess_new_ts(
     optimization = AnomalyOptimization(
         optimization_df=opt_df,
         validation_df=None,
-        confidence=confidence,
+        confidence=rows[0]["confidence"],
         key_cols=_KEY,
         model_names=model_names,
     )
-    scoring = _score_core(history, optimization, key_cols=_KEY).cache()
-    repo.add_scoring(dataset_uri, scoring)
-    return _assess_quality_core(
-        opt_df,
-        scoring,
-        key_cols=_KEY,
-        notification_handlers=notification_handlers,
-        dataset_uri=dataset_uri,
-    )
+    scoring = _score_core(
+        history.select(*_KEY, "ts", "value"), optimization, key_cols=_KEY
+    ).cache()
+    try:
+        repo.add_scoring(dataset_uri, scoring)
+        yield scoring
+    finally:
+        scoring.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -146,19 +151,18 @@ def init_db(spark, base_path: str) -> MetricsRepository:
     return MetricsRepository(spark, base_path)
 
 
-def is_db_initialized(repo: MetricsRepository) -> bool:
+def is_db_initialized(repo: RepositoryPort) -> bool:
     """True once the repository's dataset registry exists — reference
     ``is_db_initialized`` (``service_layer.py:38-41``) checks for the
-    ``dataset`` table's existence; the parquet analogue is the
-    ``datasets`` directory's existence."""
-    return repo._table_exists(repo._path("datasets"))
+    ``dataset`` table's existence, as does every adapter here."""
+    return repo.registry_exists()
 
 
 def profile_create(
     df: DataFrame,
     dataset_uri: str,
     ts_column: str,
-    repo: MetricsRepository,
+    repo: RepositoryPort,
     profiling_builder: ProfilingBuilder | None = None,
     granularity: str = Granularity.DAY,
 ) -> DataFrame:
@@ -174,7 +178,7 @@ def profile_create(
 
 
 def add_dataset(
-    repo: MetricsRepository,
+    repo: RepositoryPort,
     dataset_uri: str,
     ts_column: str,
     columns: Sequence[str],
@@ -186,24 +190,24 @@ def add_dataset(
     repo.add_dataset(dataset_uri, ts_column, list(columns), granularity)
 
 
-def get_datasets(repo: MetricsRepository) -> list[dict]:
+def get_datasets(repo: RepositoryPort) -> list[dict]:
     """All registered datasets — reference ``get_datasets``."""
     return repo.get_datasets()
 
 
-def get_dataset(repo: MetricsRepository, dataset_uri: str) -> dict | None:
+def get_dataset(repo: RepositoryPort, dataset_uri: str) -> dict | None:
     """One dataset's registration record — reference ``get_dataset``."""
     return repo.get_dataset(dataset_uri)
 
 
-def get_optimization(repo: MetricsRepository, dataset_uri: str) -> DataFrame:
+def get_optimization(repo: RepositoryPort, dataset_uri: str) -> DataFrame:
     """The stored optimization for a dataset — reference
     ``get_optimization``."""
     return repo.get_optimization(dataset_uri)
 
 
 def get_scoring(
-    repo: MetricsRepository, dataset_uri: str, start_ts=None, end_ts=None
+    repo: RepositoryPort, dataset_uri: str, start_ts=None, end_ts=None
 ) -> DataFrame:
     """Stored scoring events (closed interval) — reference
     ``get_scoring``."""
@@ -211,7 +215,7 @@ def get_scoring(
 
 
 def select_profiling(
-    repo: MetricsRepository, dataset_uri: str, start_ts=None, end_ts=None
+    repo: RepositoryPort, dataset_uri: str, start_ts=None, end_ts=None
 ) -> DataFrame:
     """Stored profiling metrics (closed interval) — reference
     ``select_profiling``."""
@@ -235,7 +239,7 @@ def profile(
     dataset_uri: str,
     profiling_builder: ProfilingBuilder | None = None,
     *,
-    repo: MetricsRepository,
+    repo: RepositoryPort,
 ) -> DataFrame:
     """Profile a REGISTERED dataset and persist the metrics — reference
     ``service_layer.profile`` (``service_layer.py:157-205``): the
@@ -264,7 +268,7 @@ def optimize(
     start_proportion: float | None = None,
     target_confidence: float | None = None,
     min_threshold: float = 0.1,
-    repo: MetricsRepository | None = None,
+    repo: RepositoryPort | None = None,
 ) -> AnomalyOptimization:
     """Optimize the anomaly strategy for a dataset from its profiling
     history and persist the result — reference ``service_layer.optimize``
@@ -296,7 +300,7 @@ def score(
     ts,
     optimization: DataFrame | None = None,
     profiling_history: DataFrame | None = None,
-    repo: MetricsRepository | None = None,
+    repo: RepositoryPort | None = None,
 ) -> DataFrame:
     """Score the profiling batch at ``ts`` against the stored (or given)
     optimization and persist the scoring — reference
@@ -310,32 +314,16 @@ def score(
         profiling_history
         if profiling_history is not None
         else repo.select_profiling(dataset_uri, end_ts=ts)
-    ).select(*_KEY, "ts", "value")
-    opt_df = (
-        optimization if optimization is not None else repo.get_optimization(dataset_uri)
-    ).cache()
-    if history.limit(1).count() == 0 or opt_df.limit(1).count() == 0:
+    )
+    if history.limit(1).count() == 0:
         raise ValueError(
             "profiling and optimization can't be None. Values were not found in repo."
         )
-    confidence = opt_df.select("confidence").first()["confidence"]
-    model_names = sorted(
-        r["best_model_name"]
-        for r in opt_df.select("best_model_name").distinct().collect()
+    opt_df = (
+        optimization if optimization is not None else repo.get_optimization(dataset_uri)
     )
-    scoring = _score_core(
-        history,
-        AnomalyOptimization(
-            optimization_df=opt_df,
-            validation_df=None,
-            confidence=confidence,
-            key_cols=_KEY,
-            model_names=model_names,
-        ),
-        key_cols=_KEY,
-    ).cache()
-    repo.add_scoring(dataset_uri, scoring)
-    return scoring
+    with _scored(repo, dataset_uri, history, opt_df) as scoring:
+        return scoring
 
 
 def assess_quality(
@@ -344,7 +332,7 @@ def assess_quality(
     optimization: DataFrame | None = None,
     scoring: DataFrame | None = None,
     notification_handlers: Sequence[NotificationHandler] | None = None,
-    repo: MetricsRepository | None = None,
+    repo: RepositoryPort | None = None,
 ) -> bool:
     """Quality assessment for the scoring at ``ts`` — reference
     ``service_layer.assess_quality`` (``service_layer.py:355-398``):
