@@ -2755,6 +2755,78 @@ def test_semdedup_matches_brute_force_with_fixed_centroids(spark):
     assert got == want
 
 
+def test_semdedup_string_ids_match_long_ids(spark):
+    """The per-cluster pass orders ids itself (min-id representative of
+    an exact-copy group, min-id component label, id tie-break of the
+    survivor), so string ids must come out exactly as the same ids as
+    longs do: zero-padded strings sort as their numbers."""
+    import numpy as np
+
+    from thoth_spark.operators import similarity
+
+    rng = np.random.default_rng(7)
+    cents = rng.normal(size=(4, 8))
+    base = rng.normal(size=(30, 8))
+    vecs = {i: base[i] for i in range(30)}
+    for i in range(10):
+        vecs[30 + i] = base[i] + rng.normal(scale=1e-3, size=8)
+    # two exact copies: one joins the near-dup group of 5 and 35, one
+    # makes the singleton 20 a tied pair (min id wins)
+    vecs[40], vecs[41] = vecs[5].copy(), vecs[20].copy()
+    rows = [(i, [float(x) for x in v]) for i, v in sorted(vecs.items())]
+
+    def run(id_type, key):
+        df = spark.createDataFrame(
+            [(key(i), v) for i, v in rows], f"vec_id {id_type}, embedding array<double>"
+        )
+        return sorted(
+            tuple(r)
+            for r in similarity.semdedup(df, threshold=0.95, centroids=cents).collect()
+        )
+
+    as_long = run("long", int)
+    as_str = run("string", lambda i: f"{i:03d}")
+    assert as_str == [(f"{i:03d}", c, s, f"{m:03d}") for i, c, s, m in as_long]
+    surv = {r[0] for r in as_long}
+    assert 20 in surv and 41 not in surv
+    assert len(surv & {5, 35, 40}) == 1
+
+
+def test_semdedup_union_find_labels_min_reachable_node():
+    """semdedup's vectorized union-find against a sequential min-label
+    reference, on random graphs (self-loops and repeats included), long
+    chains numbered in both directions, a star and an edgeless graph."""
+    import numpy as np
+
+    from thoth_spark.operators.similarity import _min_label_components
+
+    def reference(n, ea, eb):
+        lab = list(range(n))
+        changed = True
+        while changed:
+            changed = False
+            for a, b in zip(ea, eb):
+                m = min(lab[a], lab[b])
+                if lab[a] != m or lab[b] != m:
+                    lab[a] = lab[b] = m
+                    changed = True
+        return lab
+
+    rng = np.random.default_rng(11)
+    graphs = [
+        (200, np.arange(199), np.arange(1, 200)),
+        (200, np.arange(199)[::-1], np.arange(1, 200)[::-1]),
+        (50, np.full(49, 49), np.arange(49)),
+        (5, np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)),
+    ]
+    for n, m in [(30, 10), (100, 80), (300, 250)]:
+        ea, eb = rng.integers(0, n, m), rng.integers(0, n, m)
+        graphs.append((n, ea, eb))
+    for n, ea, eb in graphs:
+        got = _min_label_components(n, np.asarray(ea), np.asarray(eb))
+        assert got.tolist() == reference(n, ea, eb)
+
+
 def test_ivf_index_roundtrip(spark, tmp_path):
     """Persisted IVF layout: query-from-index equals in-memory ivf_topk
     with the same centroids, and the cells scan prunes to the probed

@@ -898,71 +898,6 @@ def connected_components(
     return labels
 
 
-def components_within(
-    pairs: DataFrame,
-    key_col: str,
-    id_type: str = "bigint",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Connected components of a pair graph KNOWN to be partitioned by
-    ``key_col`` — i.e. every edge joins two ids of the same key value,
-    so no component ever spans keys (semdedup's within-cluster verify
-    emits exactly this shape: exact-duplicate pairs share a vector and
-    hence a cluster, and verified pairs are generated within a
-    cluster).
-
-    One shuffle (groupBy the key) + one union-find pass per key group
-    replaces :func:`connected_components`' iterative min-label
-    propagation — which costs 2 joins + an eager localCheckpoint + a
-    convergence-probe job PER ROUND regardless of graph size, a
-    fixed-job-count floor that dominates small-to-medium graphs and is
-    pure overhead when the partitioning is known. Per-key work is
-    linear in that key's edges (union by min-root with path
-    compression), and the edge list per key is bounded by whatever
-    quadratic verify produced it — the same bound the caller already
-    paid to score the pairs.
-
-    Labels are IDENTICAL to :func:`connected_components`: component =
-    the smallest id reachable through the pair graph (union always
-    attaches the larger root under the smaller, so every root is its
-    component's minimum; ids compare with Python's native ordering,
-    which matches Spark's for the numeric/binary-string ids this
-    engine uses). Only ids that appear in some pair are labeled —
-    singletons are absent, exactly like ``connected_components`` —
-    pinned by ``test_components_within_matches_connected_components``.
-    """
-    out_schema = f"id {id_type}, component {id_type}"
-
-    def uf(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import pandas as pd
-
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(pdf[id_a], pdf[id_b]):
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # larger root under smaller -> root==min
-        ids = list(parent)
-        return pd.DataFrame({"id": ids, "component": [find(v) for v in ids]})
-
-    return pairs.groupBy(key_col).applyInPandas(uf, schema=out_schema)
-
-
 def quality_survivors(
     df: DataFrame,
     pairs: DataFrame,
@@ -972,7 +907,6 @@ def quality_survivors(
     id_b: str = "id_b",
     max_iterations: int | None = None,
     jump: bool = True,
-    comps: DataFrame | None = None,
 ) -> DataFrame:
     """Quality-aware dedup survivor selection: per duplicate CLUSTER
     (connected component of the similarity-pair graph), keep the member
@@ -992,14 +926,8 @@ def quality_survivors(
     6 places before comparison so the winner is stable across engines
     (the same rounding every quality oracle in this repo uses);
     survivors come back via a semi join on the id — two shuffles total
-    beyond the component propagation.
-
-    Pass ``comps`` (an ``(id, component)`` frame, e.g. from
-    :func:`components_within` when the pair graph is key-partitioned)
-    to skip the iterative propagation; labels must follow the same
-    min-reachable-id convention."""
-    if comps is None:
-        comps = connected_components(pairs, id_a, id_b, max_iterations, jump=jump)
+    beyond the component propagation."""
+    comps = connected_components(pairs, id_a, id_b, max_iterations, jump=jump)
     labeled = (
         df.join(comps, df[id_col] == comps["id"], "left")
         .withColumn("component", F.coalesce(F.col("component"), df[id_col]))

@@ -743,7 +743,6 @@ def semdedup(
     seed: int = 42,
     max_train: int = 65536,
     centroids: np.ndarray | None = None,
-    max_iterations: int = 15,
     stats: dict | None = None,
     target_cluster_size: int = 2048,
 ) -> DataFrame:
@@ -754,42 +753,64 @@ def semdedup(
     components, and keep exactly one member per group — the one with
     the LOWEST cosine similarity to its cluster centroid (the paper's
     keep-the-outlier rule: of five semantic copies, retain the least
-    prototypical, preserving diversity). Singletons survive unchanged.
-    Returns ``(id, cluster, centroid_sim, component)`` for survivors.
+    prototypical, preserving diversity; ties on the rounded similarity
+    go to the smallest id). Singletons survive unchanged. Returns
+    ``(id, cluster, round(centroid_sim, 6), component)`` for survivors,
+    ``component`` being the smallest id of the duplicate group.
 
-    Scale shape (100 TB lens): the candidate join is a self-join on the
-    cluster id over DISTINCT vectors only — exact-duplicate vectors
-    (bitwise-equal after the double cast) are collapsed to a min-id
-    representative first, and rejoin the pair graph as (rep, member)
-    edges. This is output-identical to the naive all-rows self-join
-    (identical vectors share cluster, centroid_sim, and every pairwise
-    cosine, so components and the survivor min_by are unchanged) but
-    turns the adversarial boilerplate corpus — millions of copies of
-    one embedding landing in one cluster — from |cluster|² candidates
-    into |distinct vectors in cluster|² + a linear edge list
+    Shape: one Arrow pass assigns every row its cluster and centroid
+    similarity, then ONE ``groupBy(cluster)`` pass does the rest per
+    cluster — no global pair graph, no iterative component rounds.
+    Every edge is cluster-local (pairs are only generated within a
+    cluster, and bitwise-identical vectors share their cluster), so
+    pairs → components → survivor run partition-local, the local-work
+    shape of REPOSE (ICDE 2021). Per cluster:
+
+    - exact duplicates (bitwise equal after the double cast, keyed by a
+      128-bit md5 fingerprint — 64 bits would make a corpus-scale
+      collision, a silent wrong merge, plausible) collapse to their
+      min-id representative; only representatives keep a vector;
+    - representative pairs ``id_a < id_b`` with cosine >= ``threshold``
+      (or NaN: Spark orders NaN greatest, so a zero-norm vector pairs
+      with everything in its cluster) are verified by a sequential-
+      dimension fold, bit-identical to the JVM :func:`dot` fold, blocked
+      at ``_COGROUP_Q_BLOCK`` × ``_COGROUP_C_BLOCK``;
+    - union-find labels each group with its min id (the label
+      :func:`thoth_spark.operators.dedup.connected_components` gives);
+    - the survivor is the min of ``(round(centroid_sim, 6), id)`` —
+      :func:`~thoth_spark.operators.dedup.quality_survivors`' rule with
+      quality ``-centroid_sim`` (Spark's HALF_UP round is odd, so
+      ``-round(-s, 6) == round(s, 6)``), rounded by Spark before the
+      group and ordered as Spark orders doubles (NaN greatest,
+      ``-0.0 == 0.0``).
+
+    Memory: a task holds its cluster's DISTINCT-vector matrix, the
+    per-row scalars (id, rounded similarity, fingerprint) and a bounded
+    verify block — vectors stream in Arrow batches and copies drop
+    theirs on arrival, so there is no group-sized copy of the vectors.
+    The degenerate boilerplate corpus (millions of copies of one
+    embedding in one cluster) therefore costs |distinct in cluster|²
+    verify work plus a linear scan of the copies, not |cluster|²
     (pinned by tests/test_skew.py::test_semdedup_degenerate_identical_cluster_is_linear).
-    Candidate volume is thus Σ|distinct-in-cluster|² — ``n_clusters``
-    is still THE knob and must grow with the corpus (the paper uses
-    ~100k clusters at 1e8 docs; keep expected cluster size in the low
-    thousands). Left ``None`` (r12 verdict #6: the manual knob could
-    silently blow up the quadratic when a caller forgot it at 100×
-    scale), it is DERIVED from one cheap ``count()``:
-    ``max(16, ceil(n_rows / target_cluster_size))``, clamped so the
-    bounded training sample keeps >= 64 points per centroid
-    (``max_train // 64``) — raise ``max_train`` together with the
-    corpus for paper-scale cluster counts. The chosen value is
-    reported in ``stats["n_clusters"]``.
-    Centroid training is bounded at ``max_train`` sampled
-    rows regardless of corpus size, assignment is one Arrow-batched
-    matmul pass (centroid matrix in the UDF closure, plan O(1) in
-    ``n_clusters``), and survivor selection reuses
-    :func:`thoth_spark.operators.dedup.quality_survivors` — a
-    partial-aggregable max_by, safe under a degenerate giant duplicate
-    group. Pass precomputed ``centroids`` to reuse a quantizer across
-    snapshots (and for deterministic tests). Pass ``stats`` to receive
-    ``{"n_rows", "n_distinct_vectors", "n_rep_pairs"}``."""
-    from thoth_spark.operators.dedup import quality_survivors
 
+    Parallelism: the verify runs one cluster per group, so at most
+    ``n_clusters`` tasks. With fewer clusters than cores the spare
+    cores idle: unlike the per-(cluster, salt) split this pass
+    replaced, a small cluster count is not salted out over the machine.
+    ``n_clusters`` is thus THE knob and must grow with the corpus (the
+    paper uses ~100k clusters at 1e8 docs; keep expected cluster size
+    in the low thousands). Left ``None`` it is DERIVED from one cheap
+    ``count()``: ``max(16, ceil(n_rows / target_cluster_size))``,
+    clamped so the bounded training sample keeps >= 64 points per
+    centroid (``max_train // 64``) — raise ``max_train`` together with
+    the corpus for paper-scale cluster counts. The chosen value is
+    reported in ``stats["n_clusters"]``. Centroid training is bounded
+    at ``max_train`` sampled rows regardless of corpus size. Pass
+    precomputed ``centroids`` to reuse a quantizer across snapshots
+    (and for deterministic tests). Pass ``stats`` to receive
+    ``{"n_rows", "n_distinct_vectors", "n_rep_pairs"}``, counted inside
+    the pass at the price of running it once more; with ``stats=None``
+    nothing is cached or checkpointed."""
     if n_clusters is None and centroids is None:
         n_rows = df.count()
         n_clusters = int(
@@ -828,80 +849,134 @@ def semdedup(
 
     base = (
         # the assignment pass + fingerprint are the corpus-wide per-row
-        # cost; raise a narrow scan to cluster parallelism before them
+        # cost; raise a narrow scan to core parallelism before them
         # (no-op at scale — see partitioning.spread_narrow)
         spread_narrow(
             df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
             "id",
         )
         .withColumn("__as", _assign_and_sim(F.col("v")))
-        .withColumn("cluster", F.col("__as.cluster"))
-        .withColumn("centroid_sim", F.col("__as.centroid_sim"))
-        .drop("__as")
-        .withColumn(
-            # 128-bit exact-vector fingerprint (md5 over the canonical
-            # double rendering; xxhash64's 64 bits would make a
-            # corpus-scale collision — a silent wrong merge — plausible)
-            "__vh",
-            F.md5(F.concat_ws(",", F.transform(F.col("v"), lambda x: x.cast("string")))),
-        )
-        .localCheckpoint(eager=False)
-    )
-    rep = base.groupBy("__vh").agg(F.min("id").alias("__rep"))
-    exact_pairs = (
-        base.join(rep, "__vh")
-        .where(F.col("id") != F.col("__rep"))
-        # identical vectors share their (deterministic) cluster, so the
-        # exact-dup edges are cluster-local like the verified ones —
-        # carry the key for components_within
         .select(
-            "cluster", F.col("__rep").alias("id_a"), F.col("id").alias("id_b")
+            "id",
+            "v",
+            F.col("__as.cluster").alias("cluster"),
+            F.round("__as.centroid_sim", 6).alias("centroid_sim"),
+            F.md5(
+                F.concat_ws(",", F.transform(F.col("v"), lambda x: x.cast("string")))
+            ).alias("__vh"),
         )
     )
-    reps_only = base.join(
-        rep.select(F.col("__rep").alias("id")), "id", "left_semi"
-    )
-    # The quadratic within-cluster verify, as a cogrouped vectorized
-    # pass (bit-identical pair set — see _cogroup_threshold_pairs; the
-    # per-pair form evaluated the dot fold interpreted per element).
-    # The verify's reduce side is keyed by ``cluster`` alone, so its
-    # parallelism is capped at n_clusters no matter how many shuffle
-    # partitions exist — with fewer clusters than cores (the fixed-
-    # quantizer twin, or any small corpus) it would run on a handful of
-    # tasks. Salt one side k ways (k = ceil(parallelism / n_clusters)),
-    # replicate the other, group on (cluster, salt): every (a, b) pair
-    # still meets in EXACTLY one group (at a's salt), so the pair set —
-    # and every downstream result — is unchanged, while the verify
-    # spreads across the cluster. At scale n_clusters >> cores ->
-    # k == 1 -> plain per-cluster groups with zero replication (guide
-    # §2.5 hot-key salting).
-    _par = reps_only.sparkSession.sparkContext.defaultParallelism
-    k_salt = max(1, -(-_par // max(1, int(cent_mat.shape[0]))))
-    rp_in = reps_only.select("id", "v", "cluster")
-    if k_salt > 1:
-        a = rp_in.withColumn(
-            "__ps", F.pmod(F.xxhash64(F.col("id")), F.lit(k_salt)).cast("int")
-        )
-        b = rp_in.withColumn(
-            "__ps",
-            F.explode(F.array(*[F.lit(i).cast("int") for i in range(k_salt)])),
-        )
-        rp_keys = ["cluster", "__ps"]
-    else:
-        a = b = rp_in
-        rp_keys = ["cluster"]
-    rep_pairs = _cogroup_threshold_pairs(
-        a, b, rp_keys, threshold, _col_type(df, id_col)
-    )
+    id_type = _col_type(df, id_col)
+    schema = f"id {id_type}, cluster int, centroid_sim double, component {id_type}"
+    counters = ["n_rows", "n_distinct_vectors", "n_rep_pairs"]
     if stats is not None:
-        stats["n_rows"] = base.count()
-        stats["n_distinct_vectors"] = rep.count()
-        stats["n_rep_pairs"] = rep_pairs.count()
-    pairs = exact_pairs.union(rep_pairs)
-    scored = base.withColumn("__q", -F.col("centroid_sim"))
-    return quality_survivors(
-        scored, pairs, "id", "__q", max_iterations=max_iterations
-    ).select("id", "cluster", F.round("centroid_sim", 6).alias("centroid_sim"), "component")
+        schema += "".join(f", {c} long" for c in counters)
+
+    def per_cluster(
+        key: tuple, batches: Iterator[pd.DataFrame]
+    ) -> Iterator[pd.DataFrame]:
+        ids, csim, vh, rep_v = [], [], [], {}
+        for pdf in batches:
+            ids.append(pdf["id"].to_numpy())
+            csim.append(pdf["centroid_sim"].to_numpy())
+            vh.append(pdf["__vh"].to_numpy())
+            for h, v in zip(pdf["__vh"], pdf["v"]):
+                if h not in rep_v:  # copies are bitwise equal: keep one
+                    # an owned copy: ``v`` is a view that would pin the
+                    # whole Arrow batch
+                    rep_v[h] = np.array(v, dtype=np.float64)
+        ids = np.concatenate(ids)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        csim = np.concatenate(csim)[order]
+        # factorized in id order, a fingerprint's first row is its min-id
+        # representative and representative index order is id order
+        # (numpy compares strings by code point: Spark's UTF-8 byte order)
+        codes, uniq = pd.factorize(np.concatenate(vh)[order])
+        rep_ids = ids[np.unique(codes, return_index=True)[1]]
+        ea, eb = _threshold_pairs(np.stack([rep_v[h] for h in uniq]), threshold)
+        comp = _min_label_components(len(uniq), ea, eb)[codes]
+        # survivor: min (rounded csim, id) per component — rows are in id
+        # order and lexsort is stable; numpy sorts NaN last and ties
+        # -0.0 with 0.0, as Spark orders doubles
+        s = np.lexsort((csim, comp))
+        win = s[np.r_[True, comp[s][1:] != comp[s][:-1]]]
+        out = pd.DataFrame(
+            {
+                "id": ids[win],
+                "cluster": np.full(len(win), key[0], dtype=np.int32),
+                "centroid_sim": csim[win],
+                "component": rep_ids[comp[win]],
+            }
+        )
+        if stats is not None:
+            # per-cluster counts ride the first survivor row (every
+            # cluster group has one), zeros elsewhere
+            for c, n in zip(counters, (len(ids), len(uniq), len(ea))):
+                out[c] = np.r_[n, np.zeros(len(win) - 1, dtype=np.int64)]
+        yield out
+
+    out = base.groupBy("cluster").applyInPandas(per_cluster, schema=schema)
+    if stats is not None:
+        totals = out.agg(*[F.sum(c) for c in counters]).first()
+        stats.update({c: int(n or 0) for c, n in zip(counters, totals)})
+        out = out.select("id", "cluster", "centroid_sim", "component")
+    return out
+
+
+def _threshold_pairs(R: np.ndarray, threshold: float) -> tuple:
+    """Index pairs ``(i, j)``, ``i < j``, of the rows of ``R`` whose
+    cosine is >= ``threshold`` or NaN (``NaN >= t`` holds in Spark's
+    total order, which ranks NaN greatest). Dots and norms accumulate
+    SEQUENTIALLY ACROSS DIMENSIONS from a zero accumulator — the JVM
+    :func:`dot` fold's left-associated IEEE addition order, bit for bit
+    (a BLAS matmul's blocked summation differs in the last ulp) — in
+    ``_COGROUP_Q_BLOCK`` × ``_COGROUP_C_BLOCK`` blocks, so scratch stays
+    bounded and each cosine equals its unblocked value."""
+    n, dim = R.shape
+    rn = np.zeros(n)
+    for i in range(dim):
+        rn += R[:, i] * R[:, i]
+    rn = np.sqrt(rn)
+    out_a, out_b = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+    for s in range(0, n, _COGROUP_Q_BLOCK):
+        s1 = min(s + _COGROUP_Q_BLOCK, n)
+        # blocks wholly left of the diagonal hold no i < j pair
+        for c0 in range(s, n, _COGROUP_C_BLOCK):
+            c1 = min(c0 + _COGROUP_C_BLOCK, n)
+            acc = np.zeros((s1 - s, c1 - c0))
+            for i in range(dim):
+                acc += np.outer(R[s:s1, i], R[c0:c1, i])
+            cos = acc / (rn[s:s1, None] * rn[None, c0:c1])
+            keep = (np.arange(s, s1)[:, None] < np.arange(c0, c1)[None, :]) & (
+                (cos >= threshold) | np.isnan(cos)
+            )
+            r, c = np.nonzero(keep)
+            out_a.append(r + s)
+            out_b.append(c + c0)
+    return np.concatenate(out_a), np.concatenate(out_b)
+
+
+def _min_label_components(n: int, ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
+    """Label each of ``n`` nodes with the smallest node reachable through
+    the edges ``(ea, eb)``. Vectorized union-find: every round hooks the
+    larger root of each edge under the smaller, then pointer-jumps every
+    node to its root; edges whose ends share a root drop out. Labels
+    only ever move to smaller nodes of the same component, so a root is
+    its component's minimum, and every round with a live edge removes a
+    root."""
+    lab = np.arange(n)
+    while len(ea):
+        la, lb = lab[ea], lab[eb]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        live = lab[ea] != lab[eb]
+        ea, eb = ea[live], eb[live]
+    return lab
 
 
 #: the collect-based serves ship the query batch to every task in a UDF
@@ -2084,103 +2159,6 @@ def _cogroup_topk_scores(
         qq.groupBy("cell", "__salt")
         .cogroup(cells_s.groupBy("cell", "__salt"))
         .applyInPandas(score, schema=out_schema)
-    )
-
-
-def _cogroup_threshold_pairs(
-    a_side: DataFrame,
-    b_side: DataFrame,
-    keys: list,
-    threshold: float,
-    id_type: str,
-    emit_key_type: str | None = None,
-) -> DataFrame:
-    """Within-group pair verification ``(id_a < id_b, cos >= threshold)``
-    as a cogrouped vectorized pass — semdedup's quadratic stage without
-    the per-pair interpreted fold.
-
-    Both sides arrive keyed the same way the salted self-join was
-    (``keys`` = [cluster] or [cluster, __ps]); each group is scored with
-    sequential-dim accumulation (bit-identical to the JVM fold — see
-    :func:`_cogroup_topk_scores`) and the filter mirrors Spark's NaN
-    semantics exactly: ``NaN >= t`` is TRUE in Spark's total order, so
-    NaN cosines (zero-norm vectors) pass here too. Expects columns
-    ``(id, v)`` on both sides plus the key columns; emits
-    ``(id_a, id_b)``, prefixed with the FIRST key column when
-    ``emit_key_type`` names its Spark type (so key-partitioned
-    consumers need no re-join to recover the key)."""
-    out_schema = f"id_a {id_type}, id_b {id_type}"
-    if emit_key_type is not None:
-        out_schema = f"{keys[0]} {emit_key_type}, " + out_schema
-    _id_np = np.int64 if id_type in ("bigint", "int", "long", "smallint") else object
-    empty = pd.DataFrame(
-        {"id_a": np.array([], dtype=_id_np), "id_b": np.array([], dtype=_id_np)}
-    )
-    if emit_key_type is not None:
-        empty.insert(0, keys[0], pd.Series([], dtype="int64"))
-
-    # a self-cogroup (semdedup feeds the SAME frame to both sides) hits
-    # Spark's ambiguous-self-join analysis; re-aliasing every b-side
-    # column mints fresh attribute ids, and the cogroup matches groups
-    # by key VALUE positionally, so renamed keys pair up fine
-    b_keys = [f"__bk{i}" for i in range(len(keys))]
-    b_side = b_side.select(
-        *[F.col(k).alias(bk) for k, bk in zip(keys, b_keys)],
-        F.col("id").alias("__bid"),
-        F.col("v").alias("__bv"),
-    )
-
-    def verify(apdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(apdf) == 0 or len(bpdf) == 0:
-            return empty
-        key_val = apdf[keys[0]].iloc[0] if emit_key_type is not None else None
-        A = np.stack(apdf["v"].to_numpy()).astype(np.float64, copy=False)
-        B = np.stack(bpdf["__bv"].to_numpy()).astype(np.float64, copy=False)
-        a_ids = apdf["id"].to_numpy()
-        b_ids = bpdf["__bid"].to_numpy()
-        dim = A.shape[1]
-        an = np.zeros(len(A))
-        bn = np.zeros(len(B))
-        for i in range(dim):
-            an += A[:, i] * A[:, i]
-            bn += B[:, i] * B[:, i]
-        an = np.sqrt(an)
-        bn = np.sqrt(bn)
-        out_a, out_b = [], []
-        for s in range(0, len(A), _COGROUP_Q_BLOCK):
-            Ab = A[s : s + _COGROUP_Q_BLOCK]
-            ab_ids = a_ids[s : s + _COGROUP_Q_BLOCK]
-            ab_n = an[s : s + _COGROUP_Q_BLOCK]
-            # b axis blocked too (r16 advice — bounded scratch on both
-            # axes); the threshold filter is per-element so chunking
-            # needs no merge step, and chunked cos values are
-            # bit-identical to the unchunked matrix's slices
-            for c0 in range(0, len(B), _COGROUP_C_BLOCK):
-                c1 = min(c0 + _COGROUP_C_BLOCK, len(B))
-                acc = np.zeros((len(Ab), c1 - c0))
-                for i in range(dim):
-                    acc += np.outer(Ab[:, i], B[c0:c1, i])
-                cos = acc / (ab_n[:, None] * bn[None, c0:c1])
-                keep = (ab_ids[:, None] < b_ids[None, c0:c1]) & (
-                    (cos >= threshold) | np.isnan(cos)
-                )
-                r, c = np.where(keep)
-                out_a.append(ab_ids[r])
-                out_b.append(b_ids[c0:c1][c])
-        res = pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        )
-        if emit_key_type is not None:
-            # the group key rides along (constant within a group) so
-            # key-partitioned consumers (components_within) need no
-            # re-join to recover it
-            res.insert(0, keys[0], key_val)
-        return res
-
-    return (
-        a_side.groupBy(*keys)
-        .cogroup(b_side.groupBy(*b_keys))
-        .applyInPandas(verify, schema=out_schema)
     )
 
 
