@@ -292,6 +292,100 @@ def test_service_flows_release_cached_frames(spark, events_df, repo):
     assert cache_manager.numCachedEntries() == before
 
 
+def test_parquet_write_ignores_session_overwrite_mode(spark, tmp_path):
+    """The parquet adapter replaces one dataset's partition while reading
+    it; the writer sets dynamic overwrite itself, so a session in static
+    mode (which would delete the whole table first) changes nothing."""
+    repo = MetricsRepository(spark, str(tmp_path / "store"))
+    days = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
+
+    def metrics(scale, only=None):
+        return spark.createDataFrame(
+            [
+                (t, "Column", "value", "Mean", scale * (i + 1))
+                for i, t in enumerate(days)
+                if only in (None, t)
+            ],
+            "ts timestamp, entity string, instance string, name string, value double",
+        )
+
+    def stored(uri):
+        return [(r["ts"], r["value"]) for r in repo.select_profiling(uri).collect()]
+
+    for uri in ("a://x", "b://y"):
+        repo.add_dataset(uri, "ts", ["value"], "DAY")
+        repo.add_profiling(uri, metrics(1.0))
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    previous = spark.conf.get(conf)
+    spark.conf.set(conf, "static")
+    try:
+        repo.add_profiling("a://x", metrics(10.0, only=days[-1]))
+    finally:
+        spark.conf.set(conf, previous)
+
+    assert stored("a://x") == [(days[0], 1.0), (days[1], 20.0)]
+    assert stored("b://y") == [(days[0], 1.0), (days[1], 2.0)]
+
+
+def test_upsert_evaluates_new_rows_once(spark, repo):
+    """An upsert uses its new rows twice (their ts and the rows); a lazy
+    frame under them must still run once per call."""
+    days = [datetime.datetime(2024, 1, d) for d in (1, 2, 3)]
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def touch(_):
+        seen.add(1)
+        return True
+
+    metrics = spark.createDataFrame(
+        [(t, "Column", "value", name, 1.0) for t in days for name in ("Mean", "Size")],
+        "ts timestamp, entity string, instance string, name string, value double",
+    ).where(touch(F.col("name")))
+    repo.add_dataset("once://x", "ts", ["value"], "DAY")
+    repo.add_profiling("once://x", metrics)
+
+    assert seen.value == 6
+    assert repo.select_profiling("once://x").count() == 6
+
+
+def test_warm_assessment_does_not_recompile(spark, events_df, tmp_path):
+    """A warm assess_new_ts of a shape the process has run before finds
+    every generated class in the codegen cache: a cache smaller than the
+    loop's working set recompiles ~100 classes per call."""
+    repo = MetricsRepository(spark, str(tmp_path / "store"))
+    last_day = datetime.datetime(2024, 1, 30)
+    history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
+    new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
+    profile_create_optimize(
+        history,
+        dataset_uri="warm://codegen",
+        ts_column="ts",
+        repo=repo,
+        profiling_builder=SimpleProfilingBuilder(),
+        confidence=0.85,
+    )
+
+    def assess():
+        assess_new_ts(
+            new_batch,
+            ts=last_day,
+            dataset_uri="warm://codegen",
+            repo=repo,
+            profiling_builder=SimpleProfilingBuilder(),
+        )
+
+    compilations = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    assess()
+    assess()
+    before = compilations.getCount()
+    assess()
+    assert compilations.getCount() - before <= 5
+
+
 def test_viz_views(spark, events_df):
     from thoth_spark import viz
     from thoth_spark.anomaly import optimize

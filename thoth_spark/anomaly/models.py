@@ -88,32 +88,41 @@ def simple_model_folds(
     w_ord = W.partitionBy(*key_cols).orderBy(ts_col)
     value = F.col(value_col)
 
-    df = metrics_df.withColumn("__idx", F.row_number().over(w_ord) - 1).withColumn(
-        "__n", F.count(F.lit(1)).over(W.partitionBy(*key_cols))
+    # one projection per dependency layer: position and length, then each
+    # window's prediction, then its APE, then the pick (chained
+    # withColumn calls re-analyze the growing plan once per column)
+    df = metrics_df.withColumns(
+        {
+            "__idx": F.row_number().over(w_ord) - 1,
+            "__n": F.count(F.lit(1)).over(W.partitionBy(*key_cols)),
+        }
+    )
+    df = df.withColumns(
+        {
+            f"__pred_{w}": F.when(
+                F.col("__idx") >= w, F.avg(value).over(w_ord.rowsBetween(-w, -1))
+            )
+            for w in windows
+        }
+    )
+    df = df.withColumns(
+        {f"__ape_{w}": ape_column(value, F.col(f"__pred_{w}")) for w in windows}
     )
 
-    candidates = []
-    for pos, w in enumerate(windows):
-        pred_w = F.when(
-            F.col("__idx") >= w,
-            F.avg(value).over(w_ord.rowsBetween(-w, -1)),
+    # mean training APE of window w at this fold = mean of the window's
+    # APEs over all PRIOR rows (nulls — undefined rows — are skipped by
+    # avg, matching pandas .mean()).
+    candidates = [
+        F.struct(
+            F.avg(F.col(f"__ape_{w}"))
+            .over(w_ord.rowsBetween(W.unboundedPreceding, -1))
+            .alias("train_error"),
+            F.lit(pos).alias("pos"),
+            F.lit(w).alias("w"),
+            F.col(f"__pred_{w}").alias("pred"),
         )
-        ape_w = ape_column(value, pred_w)
-        df = df.withColumn(f"__pred_{w}", pred_w).withColumn(f"__ape_{w}", ape_w)
-        # mean training APE of window w at this fold = mean of the window's
-        # APEs over all PRIOR rows (nulls — undefined rows — are skipped by
-        # avg, matching pandas .mean()).
-        cum_w = F.avg(F.col(f"__ape_{w}")).over(
-            w_ord.rowsBetween(W.unboundedPreceding, -1)
-        )
-        candidates.append(
-            F.struct(
-                cum_w.alias("train_error"),
-                F.lit(pos).alias("pos"),
-                F.lit(w).alias("w"),
-                F.col(f"__pred_{w}").alias("pred"),
-            )
-        )
+        for pos, w in enumerate(windows)
+    ]
 
     # Pick the candidate with min (train_error, position-in-list); windows
     # with no defined training rows yet (w >= i) have null train_error and
@@ -121,10 +130,12 @@ def simple_model_folds(
     arr = F.filter(F.array(*candidates), lambda c: c["train_error"].isNotNull())
     best = F.get(F.array_sort(arr), 0)  # null when no window qualifies yet
 
-    df = (
-        df.withColumn("best_window", best["w"])
-        .withColumn("predicted", best["pred"])
-        .withColumn("error", ape_column(value, best["pred"]))
+    df = df.withColumns(
+        {
+            "best_window": best["w"],
+            "predicted": best["pred"],
+            "error": ape_column(value, best["pred"]),
+        }
     )
     return df.drop(*[c for w in windows for c in (f"__pred_{w}", f"__ape_{w}")])
 

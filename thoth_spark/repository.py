@@ -10,10 +10,17 @@ optimizations, the range scans and the point lookups. An adapter
 supplies only the storage primitives declared on the port: ``_read``,
 ``_exists``, ``_replace_dataset_rows`` and the registry row codec.
 
+Every frame here is metric-sized (rows ∝ #metrics × #timestamps), so
+the port computes each input once and keeps each step in as few Spark
+jobs as it can: an upsert materializes its new rows once and anti-joins
+the stored rows against their broadcast ts, and a range scan sorts one
+dataset in one task.
+
 :class:`MetricsRepository` (here) stores parquet tables partitioned by
 ``dataset_uri``: every per-dataset read prunes to one partition
-directory and a write replaces only the touched partition (dynamic
-partition overwrite; ``MERGE INTO`` on a Delta/Iceberg cluster).
+directory and a write replaces only the touched partition, reading it
+in the same job (dynamic partition overwrite; ``MERGE INTO`` on a
+Delta/Iceberg cluster).
 :class:`thoth_spark.repository_jdbc.JdbcMetricsRepository` stores the
 same tables in an RDBMS.
 
@@ -143,20 +150,29 @@ class RepositoryPort(ABC):
         self, table: str, schema: str, dataset_uri: str, new: DataFrame
     ) -> None:
         """Keep the dataset's stored rows at every ts that ``new`` does
-        not carry, replace the rest."""
+        not carry, replace the rest.
+
+        ``new`` is used twice (its ts for the anti join, its rows for the
+        union), so it is materialized once first: a lazy profile or
+        scoring under it would otherwise run once per use. The anti join
+        only tests existence, so the broadcast ts need no ``distinct``."""
+        new = new.localCheckpoint()
         existing = self._read(table, schema).where(F.col("dataset_uri") == dataset_uri)
-        new_ts = new.select("ts").distinct()
-        kept = existing.join(new_ts, on="ts", how="left_anti").select(*new.columns)
+        kept = existing.join(
+            F.broadcast(new.select("ts")), on="ts", how="left_anti"
+        ).select(*new.columns)
         self._replace_dataset_rows(table, schema, dataset_uri, kept.unionByName(new))
 
     def _scan(self, table: str, schema: str, dataset_uri: str, start_ts, end_ts) -> DataFrame:
-        """Closed-interval range scan of one dataset, sorted by ts."""
+        """Closed-interval range scan of one dataset, sorted by ts. One
+        dataset's rows are metric-sized, so they are sorted in one task:
+        a global ``orderBy`` would add a range-sampling job and a shuffle."""
         df = self._read(table, schema).where(F.col("dataset_uri") == dataset_uri)
         if start_ts is not None:
             df = df.where(F.col("ts") >= F.lit(start_ts))
         if end_ts is not None:
             df = df.where(F.col("ts") <= F.lit(end_ts))
-        return df.orderBy("ts")
+        return df.coalesce(1).sortWithinPartitions("ts")
 
     def _lookup(self, table: str, schema: str, dataset_uri: str, ts) -> DataFrame:
         return self._read(table, schema).where(
@@ -259,7 +275,6 @@ class MetricsRepository(RepositoryPort):
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base_path, table)
@@ -283,13 +298,19 @@ class MetricsRepository(RepositoryPort):
         self, table: str, schema: str, dataset_uri: str, rows: DataFrame
     ) -> None:
         """Dynamic partition overwrite of the ``dataset_uri`` partition
-        (Delta equivalent: MERGE INTO ... ON dataset_uri AND key).
+        (Delta equivalent: MERGE INTO ... ON dataset_uri AND key), set on
+        the writer so the session's overwrite mode does not matter.
 
-        ``localCheckpoint`` materializes the rows first — Spark cannot
-        stream-read a path while overwriting it."""
-        materialized = rows.repartition("dataset_uri").localCheckpoint(eager=True)
+        ``rows`` may read the very partition it replaces (the upserts
+        do). Only a static overwrite deletes the target before the job
+        runs; a dynamic one stages its files and swaps the partition in
+        at job commit, after every read has finished, so no
+        materialization is needed first. All rows belong to one dataset:
+        one task writes them as one file."""
         (
-            materialized.write.mode("overwrite")
+            rows.coalesce(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("dataset_uri")
             .parquet(self._path(table))
         )

@@ -8,7 +8,6 @@ standalone flows: ``profile_create_optimize`` is ``profile_create`` then
 from __future__ import annotations
 
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -84,21 +83,26 @@ def assess_new_ts(
     profile(df, dataset_uri, profiling_builder, repo=repo)
     history = repo.select_profiling(dataset_uri, end_ts=ts)
     opt_df = repo.get_optimization(dataset_uri)
-    with _scored(repo, dataset_uri, history, opt_df) as scoring:
-        return _assess_quality_core(
-            opt_df,
-            scoring,
-            key_cols=_KEY,
-            notification_handlers=notification_handlers,
-            dataset_uri=dataset_uri,
-        )
+    return _assess_quality_core(
+        opt_df,
+        _scored(repo, dataset_uri, history, opt_df),
+        key_cols=_KEY,
+        notification_handlers=notification_handlers,
+        dataset_uri=dataset_uri,
+    )
 
 
-@contextmanager
-def _scored(repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_df: DataFrame):
-    """Score ``history`` against the optimization ``opt_df`` and persist
-    the scoring; yields the scoring frame, cached only inside the
-    ``with`` block.
+def _scored(
+    repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_df: DataFrame
+) -> DataFrame:
+    """Score ``history`` against the optimization ``opt_df``, persist the
+    scoring and return it, computed once.
+
+    The scoring is ``localCheckpoint``-ed, so its folds run in one job
+    and it holds no CacheManager entry. A ``.cache()`` would not do:
+    under AQE its two readers (the write and the verdict) become
+    table-cache stages that materialize in parallel before the cache
+    fills, running the folds twice.
 
     One collect of the (model-sized) optimization gives its confidence
     and the models to score with — every model it actually selected:
@@ -126,12 +130,9 @@ def _scored(repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_df: 
     )
     scoring = _score_core(
         history.select(*_KEY, "ts", "value"), optimization, key_cols=_KEY
-    ).cache()
-    try:
-        repo.add_scoring(dataset_uri, scoring)
-        yield scoring
-    finally:
-        scoring.unpersist()
+    ).localCheckpoint()
+    repo.add_scoring(dataset_uri, scoring)
+    return scoring
 
 
 # ---------------------------------------------------------------------------
@@ -322,8 +323,7 @@ def score(
     opt_df = (
         optimization if optimization is not None else repo.get_optimization(dataset_uri)
     )
-    with _scored(repo, dataset_uri, history, opt_df) as scoring:
-        return scoring
+    return _scored(repo, dataset_uri, history, opt_df)
 
 
 def assess_quality(

@@ -61,6 +61,17 @@ def get_spark(
             os.environ.get("THOTH_SPARK_AQE_MIN_PARTITION", "256k"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark's codegen cache keeps 100 compiled classes by default.
+        # A process of the daily monitoring loop (onboard, then warm
+        # assess_new_ts calls and dashboard reads; perfbench
+        # daily_monitor, 4 cores) compiles 166 distinct classes, and one
+        # of the ANN operators (perfbench ann_dedup) 129. The default
+        # evicts that working set on every call: a warm assessment
+        # recompiled 83-101 classes, and the JIT compiling them burned
+        # more CPU than the assessment's Spark tasks. At 1000 a warm
+        # assessment compiles only the few classes that carry its new
+        # ts literal. Static SQL conf: set before the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("THOTH_SPARK_DRIVER_MEM", "8g"))
