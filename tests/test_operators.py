@@ -2883,6 +2883,126 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
         assert "PartitionFilters: [cell" in plan, plan[:2000]
 
 
+def _small_ivf(spark, tmp_path, id_type="bigint", vec_type="array<double>"):
+    """A 2-d float index over two well-separated groups, with the
+    centroids (1, 0) and (0, 1) given, so every cell is known."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    pts = np.vstack(
+        [rng.normal([1.0, 0.0], 0.1, (20, 2)), rng.normal([0.0, 1.0], 0.1, (20, 2))]
+    )
+    cast = str if id_type == "string" else int
+    corpus = spark.createDataFrame(
+        [(cast(i), [float(x) for x in v]) for i, v in enumerate(pts)],
+        f"vec_id {id_type}, embedding {vec_type}",
+    )
+    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
+    path = str(tmp_path / "ivf_small")
+    similarity.build_ivf_index(corpus, path, centroids=cents)
+    return corpus, cents, path
+
+
+def test_ivf_query_index_empty_batch(spark, tmp_path):
+    """An empty query frame serves an empty result."""
+    corpus, _, path = _small_ivf(spark, tmp_path)
+    got = similarity.ivf_query_index(spark, path, corpus.limit(0), k=3, nprobe=1)
+    assert got.collect() == []
+    assert got.columns == ["query_id", "neighbor_id", "cos_sim", "rank"]
+
+
+@pytest.mark.parametrize(
+    "id_type, vec_type",
+    [("string", "array<double>"), ("bigint", "array<float>")],
+)
+def test_ivf_query_index_id_and_vector_types(spark, tmp_path, id_type, vec_type):
+    """String ids keep their type through the driver-built query frame,
+    and ``array<float>`` queries are probed and scored on their exact
+    doubles: the serve equals :func:`ivf_topk` with the same centroids."""
+    corpus, cents, path = _small_ivf(spark, tmp_path, id_type, vec_type)
+    ids = [str(i) if id_type == "string" else i for i in (0, 7, 25)]
+    queries = corpus.where(F.col("vec_id").isin(ids))
+    got = similarity.ivf_query_index(spark, path, queries, k=3, nprobe=1)
+    want = similarity.ivf_topk(corpus, queries, k=3, nprobe=1, centroids=cents)
+    assert dict(got.dtypes)["query_id"] == id_type
+    gr = sorted(map(tuple, got.collect()), key=lambda t: (t[0], t[3]))
+    wr = sorted(map(tuple, want.collect()), key=lambda t: (t[0], t[3]))
+    assert gr == wr and len(gr) == 9
+
+
+def test_ivf_query_index_equidistant_query_takes_lower_cid(spark, tmp_path):
+    """A query exactly equidistant from two centroids probes the lower
+    cid, as :func:`nearest_cells_udf` assigns it on the executors."""
+    import numpy as np
+
+    corpus, cents, path = _small_ivf(spark, tmp_path)
+    q = spark.createDataFrame([(100, [1.0, 1.0])], "vec_id long, embedding array<double>")
+    udf_cells = q.select(similarity.nearest_cells_udf(cents, 2)("embedding")).first()[0]
+    assert udf_cells == [0, 1]
+    assert similarity._nearest_cells(np.array([[1.0, 1.0]]), cents, 2).tolist() == [[0, 1]]
+    got = similarity.ivf_query_index(spark, path, q, k=40, nprobe=1).collect()
+    assert sorted(r["neighbor_id"] for r in got) == list(range(20))  # cell 0 only
+
+
+def test_ivf_query_index_scores_one_query_batch(spark, sf_dir, tmp_path):
+    """A non-deterministic query frame is read once: on an SQ8 layout
+    the probe rows, the quantized query side and the rerank side all
+    come from the same collected batch, so every query is scored."""
+    import random
+
+    from thoth_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = similarity.coarse_centroids(emb, "embedding", 8, seed=11)
+    path = str(tmp_path / "ivf_sq8")
+    similarity.build_ivf_index(emb, path, centroids=cents, quantize=True)
+    # a new sample on every evaluation (F.rand() fixes its seed when the
+    # column is built, so it would repeat itself)
+    noise = F.udf(lambda: random.random(), "double").asNondeterministic()
+    queries = emb.withColumn("__r", noise()).orderBy("__r").limit(5).drop("__r")
+    for kw in ({}, {"rerank_corpus": emb}):
+        got = similarity.ivf_query_index(
+            spark, path, queries, k=3, nprobe=8, **kw
+        ).collect()
+        per_query = {}
+        for r in got:
+            per_query.setdefault(r["query_id"], []).append(r["rank"])
+        assert len(per_query) == 5, (kw, per_query)
+        assert all(sorted(v) == [1, 2, 3] for v in per_query.values()), per_query
+
+
+def test_ivf_query_index_guards_query_batch(spark, tmp_path, monkeypatch):
+    """The driver-side probe collects a bounded batch: past
+    :data:`MAX_QUERY_BATCH` queries the serve fails loudly naming the
+    join serve; within the cap it works unchanged."""
+    corpus, _, path = _small_ivf(spark, tmp_path)
+    monkeypatch.setattr(similarity, "MAX_QUERY_BATCH", 3)
+    with pytest.raises(ValueError, match="ivf_query_index_join"):
+        similarity.ivf_query_index(spark, path, corpus.limit(4), k=2, nprobe=1)
+    out = similarity.ivf_query_index(spark, path, corpus.limit(3), k=2, nprobe=1)
+    assert out.count() == 6
+
+
+def test_ivf_query_index_leaves_no_block_behind(spark, tmp_path):
+    """A serve neither checkpoints nor caches: it adds no persistent RDD
+    and no CacheManager entry to the session."""
+    corpus, _, path = _small_ivf(spark, tmp_path)
+    jsc = spark.sparkContext._jsc
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def blocks():
+        # RDD ids, not a count: the ContextCleaner may drop an earlier
+        # test's checkpoint while this one runs
+        return set(jsc.getPersistentRDDs().keySet()), cache_manager.numCachedEntries()
+
+    rdds, cached = blocks()
+    for nprobe in (1, 2):
+        served = similarity.ivf_query_index(spark, path, corpus, k=2, nprobe=nprobe)
+        assert served.count() == 80
+    rdds_after, cached_after = blocks()
+    assert rdds_after - rdds == set() and cached_after == cached
+
+
 def test_ivfpq_index_roundtrip(spark, tmp_path):
     """Persisted IVF-PQ layout (cells = PQ codes partitionBy(cell) +
     centroids + codebooks + meta): query-from-index equals in-memory

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from thoth_spark.anomaly.error_metrics import ape_column
+from thoth_spark.session import drop_zip_finders
 
 #: Reference default window lengths (``models.py:89``).
 DEFAULT_WINDOWS = [3, 5, 7, 30]
@@ -182,6 +183,7 @@ class PythonModelAdapter:
         )
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            drop_zip_finders()
             pdf = pdf.sort_values("ts").reset_index(drop=True)
             n = len(pdf)
             preds: list[float | None] = [None] * n

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from thoth_spark.session import drop_zip_finders
+
 #: MAD → sigma consistency constant under the normal distribution.
 MAD_SIGMA = 1.4826
 
@@ -100,6 +102,7 @@ def ewma_control(
     )
 
     def _chart(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = pdf.sort_values(ts_col).reset_index(drop=True)
         x = pdf[value_col].astype(float).to_numpy()
         n = len(x)

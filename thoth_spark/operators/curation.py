@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from thoth_spark.operators.sampling import HASH_BUCKETS, _bucket
 from thoth_spark.operators.text import tokens as text_tokens
+from thoth_spark.session import drop_zip_finders
 
 
 def line_dedup(
@@ -306,6 +307,7 @@ def pack_sequences(
     )
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = pdf.sort_values("id").reset_index(drop=True)
         bins, poss = [], []
         bin_idx, fill, pos = 0, 0, 0

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from thoth_spark.operators.partitioning import spread_narrow
+from thoth_spark.session import drop_zip_finders
 
 #: metadata schema attached by decode
 MEDIA_META_SCHEMA = (
@@ -72,6 +73,7 @@ def decode(
     ) + ", " + meta_schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             meta = decoder(pdf[media_col])
             meta.index = pdf.index
@@ -291,6 +293,7 @@ def synth_wav(df: DataFrame, id_col: str = "doc_id", media_col: str = "content")
     ) + f", {media_col} binary"
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             blobs = []
             for d in pdf[id_col]:
@@ -325,6 +328,7 @@ def synth_ppm(df: DataFrame, id_col: str = "doc_id", media_col: str = "content")
     ) + f", {media_col} binary"
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             blobs = []
             for d in pdf[id_col]:
@@ -353,6 +357,7 @@ def frame_sample_stub(
     ) + ", frame_idx int, frame_md5 string"
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = []
             for _, row in pdf.iterrows():
@@ -487,6 +492,7 @@ def image_phash(
     id_type = {f.name: f.dataType.simpleString() for f in df.schema.fields}[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             his, los = [], []
             for b in pdf[media_col]:
@@ -551,6 +557,7 @@ def synth_ppm_textured(
     npix = size * size
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             blobs = []
             for t in pdf[text_col]:
@@ -635,6 +642,7 @@ def audio_phash(
     id_type = {f.name: f.dataType.simpleString() for f in df.schema.fields}[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             his, los = [], []
             for b in pdf[media_col]:
@@ -687,6 +695,7 @@ def synth_wav_textured(
     nbytes = n_samples * 2
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             blobs = []
             for t in pdf[text_col]:
@@ -757,6 +766,7 @@ def synth_video_frames(
         return b"P5\n%d %d\n255\n" % (size, size) + px.tobytes()
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             # column-wise 1→N expansion: collect (source row, frame)
             # pairs then replicate passthrough columns with one iloc —

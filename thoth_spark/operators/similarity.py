@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from thoth_spark.operators.partitioning import spread_narrow
+from thoth_spark.session import drop_zip_finders
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -387,25 +388,30 @@ def coarse_centroids(
     )
 
 
-def nearest_cells_udf(cent_mat: np.ndarray, n: int):
-    """Arrow-batched nearest-centroid assignment: the centroid matrix
-    ships once per task in the UDF closure (a few MB even at 65k
-    centroids × 128 dims), so the PLAN stays O(1) in ``n_centroids``
-    — the round-4 expression-literal form inlined every centroid
-    into the expression tree, which breaks codegen past a few
-    hundred centroids. One BLAS matmul per Arrow batch; argmin over
-    ``||x||² − 2x·c + ||c||²`` (the ``||x||²`` term is rank-
-    invariant and dropped). Ties break on the lower cid via stable
-    argsort, matching the struct-sort tie-break it replaces."""
+def _nearest_cells(x: np.ndarray, cent_mat: np.ndarray, n: int) -> np.ndarray:
+    """The ``n`` nearest centroid ids of each row of ``x`` as an
+    ``(rows, n)`` int32 matrix — the one nearest-centroid kernel of the
+    module. One BLAS matmul; argmin over ``||x||² − 2x·c + ||c||²``
+    (the ``||x||²`` term is rank-invariant and dropped). Ties break on
+    the lower cid via stable argsort, matching the struct-sort
+    tie-break it replaced."""
     cent_sq = (cent_mat * cent_mat).sum(axis=1)  # ||c||² per centroid
+    d = cent_sq - 2.0 * (x @ cent_mat.T)  # (rows, n_centroids)
+    return np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
+
+
+def nearest_cells_udf(cent_mat: np.ndarray, n: int):
+    """Arrow-batched :func:`_nearest_cells`: the centroid matrix ships
+    once per task in the UDF closure (a few MB even at 65k centroids ×
+    128 dims), so the PLAN stays O(1) in ``n_centroids`` — the round-4
+    expression-literal form inlined every centroid into the expression
+    tree, which breaks codegen past a few hundred centroids."""
 
     @pandas_udf(ArrayType(IntegerType()))
     def nearest_cells(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         for vecs in it:
-            x = np.stack(vecs.to_numpy())  # (batch, dim)
-            d = cent_sq - 2.0 * (x @ cent_mat.T)  # (batch, n_centroids)
-            idx = np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
-            yield pd.Series(list(idx))
+            yield pd.Series(list(_nearest_cells(np.stack(vecs.to_numpy()), cent_mat, n)))
 
     return nearest_cells
 
@@ -523,11 +529,53 @@ def build_ivf_index(
             spark.sparkContext.defaultParallelism, F.col("cell")
         )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cent_mat)],
-        "cid int, vector array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, cent_mat)
     return cent_mat
+
+
+#: fixed schemas of an index's model files: reading with them skips the
+#: schema-inference job, and the writers below produce exactly them
+_MODEL_SCHEMAS = {
+    "centroids": "cid int, vector array<double>",
+    "codebooks": "s int, c int, vector array<double>",
+    "meta": "residual boolean, m_subspaces int, n_codes int",
+}
+
+
+def _write_model(spark, path: str, name: str, pdf: pd.DataFrame) -> None:
+    """Write one model file of an index from a pandas frame: the Arrow
+    path converts it on the driver, where a list of tuples would become
+    a Python RDD (3-4 Python tasks per write)."""
+    spark.createDataFrame(pdf, _MODEL_SCHEMAS[name]).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{name}")
+
+
+def _read_model(spark, path: str, name: str) -> list:
+    """Rows of one model file of an index in key order, in one job: the
+    fixed schema skips schema inference, and the tiny table sorts on the
+    driver instead of in a range-partitioned ``orderBy``. Every model
+    file's leading columns are a unique key, so tuple order is key
+    order."""
+    reader = spark.read.schema(_MODEL_SCHEMAS[name])
+    return sorted(reader.parquet(f"{path}/{name}").collect())
+
+
+def _write_centroids(spark, path: str, cent: np.ndarray) -> None:
+    _write_model(
+        spark,
+        path,
+        "centroids",
+        pd.DataFrame({"cid": np.arange(len(cent), dtype=np.int32), "vector": list(cent)}),
+    )
+
+
+def _read_centroids(spark, path: str) -> np.ndarray:
+    """The coarse quantizer of a persisted IVF or IVF-PQ index as an
+    ``(n_centroids, dim)`` float64 matrix, row ``i`` = cid ``i``."""
+    return np.asarray(
+        [r["vector"] for r in _read_model(spark, path, "centroids")], dtype=np.float64
+    )
 
 
 def _sq8_cells(assigned: DataFrame) -> DataFrame:
@@ -566,8 +614,7 @@ def ivf_index_append(
     the SQ8 layout from the stored schema and applies the identical
     transform. At 100 TB this is the difference between a nightly
     full-index rebuild and a per-batch O(batch) ingest."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
+    cent = _read_centroids(spark, path)
     assigned = new_rows.select(
         F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("cell", nearest_cells_udf(cent, 1)(F.col("v"))[0])
@@ -587,12 +634,16 @@ def ivf_query_index(
     rerank_corpus: DataFrame | None = None,
     rerank: int | None = None,
 ) -> DataFrame:
-    """Probe a persisted :func:`build_ivf_index` layout: assign each
-    query to its ``nprobe`` nearest centroids, then read ONLY those
+    """Probe a persisted :func:`build_ivf_index` layout. The query
+    batch is collected once, bounded by :data:`MAX_QUERY_BATCH` (the
+    probe-batch contract), and each query is assigned its ``nprobe``
+    nearest centroids on the driver with the kernel
+    :func:`nearest_cells_udf` runs. The serve then reads ONLY those
     cell partitions (an explicit ``isin`` over the probed cell set —
     static partition pruning, visible as ``PartitionFilters`` in the
-    scan; the probed set is bounded by ``n_queries × nprobe`` and by
-    ``n_centroids``, so the collect is a bounded scalar fetch). On a
+    scan). Every query-side frame is built from that one batch, so a
+    non-deterministic ``queries`` frame is read once, and nothing is
+    checkpointed or cached: the call leaves no block behind. On a
     float layout the result is identical to :func:`ivf_topk` run with
     the same centroids — pinned by
     ``tests/test_operators.py::test_ivf_index_roundtrip``.
@@ -608,22 +659,32 @@ def ivf_query_index(
 
     The query side is broadcast (probe-batch contract); for a
     DataFrame-sized query set use :func:`ivf_query_index_join`."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent_mat = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        )
-        .withColumn("cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv"))))
-        .localCheckpoint(eager=False)
+    cent_mat = _read_centroids(spark, path)
+    q_rows = _collect_query_batch(
+        queries, id_col, vec_col, "ivf_query_index", "ivf_query_index_join"
     )
-    probe_cells = sorted(r["cell"] for r in q.select("cell").distinct().collect())
+    # the reshape gives an empty batch its (0, dim) shape
+    q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64).reshape(
+        len(q_rows), cent_mat.shape[1]
+    )
+    probes = _nearest_cells(q_mat, cent_mat, nprobe)  # (n_queries, nprobe)
+    # one row per query row of the batch (the collected values of an
+    # array<float> column are its exact doubles), exploded to one row
+    # per (query, probed cell) as the assignment UDF's output was
+    q_batch = spark.createDataFrame(
+        pd.DataFrame(
+            {"query_id": [r[0] for r in q_rows], "qv": list(q_mat), "cells": list(probes)}
+        ),
+        f"query_id {_col_type(queries, id_col)}, qv array<double>, cells array<int>",
+    )
+    q = q_batch.select("query_id", "qv", F.explode("cells").alias("cell"))
+    probe_cells = sorted({int(c) for c in probes.ravel()})
     cells = spark.read.parquet(f"{path}/cells").where(F.col("cell").isin(probe_cells))
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
 
     if "qvec" in cells.columns:  # SQ8 layout
         qq = scalar_quantize(
-            queries.select(F.col(id_col).alias("q_id"), F.col(vec_col)), "q_id", vec_col
+            q_batch.select(F.col("query_id").alias("q_id"), "qv"), "q_id", "qv"
         ).select(
             F.col("q_id").alias("query_id"),
             F.col("qvec").alias("q_qvec"),
@@ -824,24 +885,22 @@ def semdedup(
         else coarse_centroids(df, vec_col, n_clusters, seed, max_train)
     )
     cent_norm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-    cent_sq = (cent_mat * cent_mat).sum(axis=1)  # ||c||² per centroid
 
     # ONE fused Arrow pass for (cluster, centroid_sim): the split form —
     # nearest_cells_udf then a second scalar UDF for the cosine — crossed
     # the Python boundary twice per corpus row (two ArrowEvalPython
     # stages; the 4-task corpus pass was semdedup's single largest stage
-    # in the r16 profile). Arithmetic is VERBATIM from the two UDFs it
-    # replaces: the argmin uses nearest_cells_udf's ``||c||² − 2x·c``
-    # stable argsort (ties to the lower cid), and the cosine re-derives
-    # ``(x·c_sel)`` with the same elementwise-multiply-then-sum (NOT the
-    # matmul column — summation order differs in the last ulp), so both
-    # outputs are bit-identical to the split form.
+    # in the r16 profile). The argmin is nearest_cells_udf's kernel
+    # (:func:`_nearest_cells`, ties to the lower cid), and the cosine
+    # re-derives ``(x·c_sel)`` with the same elementwise-multiply-then-
+    # sum (NOT the matmul column — summation order differs in the last
+    # ulp), so both outputs are bit-identical to the split form.
     @pandas_udf("struct<cluster:int,centroid_sim:double>")
     def _assign_and_sim(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for vecs in it:
             x = np.stack(vecs.to_numpy())  # (batch, dim)
-            d = cent_sq - 2.0 * (x @ cent_mat.T)  # (batch, n_centroids)
-            c32 = np.argsort(d, axis=1, kind="stable")[:, 0].astype(np.int32)
+            c32 = _nearest_cells(x, cent_mat, 1)[:, 0]
             c = c32.astype(np.int64)
             num = (x * cent_mat[c]).sum(axis=1)
             den = np.sqrt((x * x).sum(axis=1)) * cent_norm[c]
@@ -875,6 +934,7 @@ def semdedup(
     def per_cluster(
         key: tuple, batches: Iterator[pd.DataFrame]
     ) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         ids, csim, vh, rep_v = [], [], [], {}
         for pdf in batches:
             ids.append(pdf["id"].to_numpy())
@@ -1034,6 +1094,7 @@ def brute_force_topk_pandas(
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
 
     def score(batches):
+        drop_zip_finders()
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             c = np.array(list(pdf[vec_col]), dtype="float64")
@@ -1124,6 +1185,7 @@ def knn_classify(
     }[label_col]
 
     def score(batches):
+        drop_zip_finders()
         import pandas as pd
 
         for pdf in batches:
@@ -1360,6 +1422,7 @@ def pq_encode(
 
     @pandas_udf(ArrayType(IntegerType()))
     def encode(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         for vecs in it:
             x = _normalized_rows(np.stack(vecs.to_numpy()).astype(np.float64))
             b = x.shape[0]
@@ -1416,6 +1479,7 @@ def pq_topk(
     pool = max(k, rerank_pool if rerank_with is not None else k)
 
     def score(batches):
+        drop_zip_finders()
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (b, m)
@@ -1619,6 +1683,7 @@ def _ivfpq_encode(
 
     @pandas_udf(ArrayType(IntegerType()))
     def encode_res(vecs: pd.Series, cells: pd.Series) -> pd.Series:
+        drop_zip_finders()
         x = _normalized_rows(np.stack(vecs.to_numpy()).astype(np.float64))
         r = x - cent_hat[cells.to_numpy().astype(np.int64)]
         b = r.shape[0]
@@ -1687,6 +1752,7 @@ def _ivfpq_rank(
     pool = max(k, rerank_pool)
 
     def score(batches):
+        drop_zip_finders()
         for pdf in batches:
             ids = pdf["id"].to_numpy()
             cells = pdf["cell"].to_numpy()
@@ -1800,24 +1866,38 @@ def build_ivfpq_index(
             spark.sparkContext.defaultParallelism, F.col("cell")
         )
     encoded.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(cent)],
-        "cid int, vector array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, cent)
     m, n_c, _ = cb.shape
-    spark.createDataFrame(
-        [
-            (s, c, [float(x) for x in cb[s, c]])
-            for s in range(m)
-            for c in range(n_c)
-        ],
-        "s int, c int, vector array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    spark.createDataFrame(
-        [(bool(residual), m, n_c)],
-        "residual boolean, m_subspaces int, n_codes int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    sub, code = np.divmod(np.arange(m * n_c, dtype=np.int32), np.int32(n_c))
+    _write_model(
+        spark,
+        path,
+        "codebooks",
+        pd.DataFrame({"s": sub, "c": code, "vector": list(cb.reshape(m * n_c, -1))}),
+    )
+    _write_model(
+        spark,
+        path,
+        "meta",
+        pd.DataFrame(
+            {
+                "residual": [bool(residual)],
+                "m_subspaces": np.int32([m]),
+                "n_codes": np.int32([n_c]),
+            }
+        ),
+    )
     return cent, cb
+
+
+def _read_ivfpq_model(spark, path: str) -> tuple[np.ndarray, np.ndarray, bool]:
+    """``(centroids, codebooks, residual)`` of a persisted
+    :func:`build_ivfpq_index` layout, one job per model file."""
+    meta = _read_model(spark, path, "meta")[0]
+    cb = np.asarray(
+        [r["vector"] for r in _read_model(spark, path, "codebooks")], dtype=np.float64
+    ).reshape(meta["m_subspaces"], meta["n_codes"], -1)
+    return _read_centroids(spark, path), cb, bool(meta["residual"])
 
 
 def ivfpq_index_append(
@@ -1839,15 +1919,9 @@ def ivfpq_index_append(
     append of n rows costs O(n) regardless of index size; both the
     collect and join serves see the union at their next file listing,
     still partition-pruned."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    cb_rows = spark.read.parquet(f"{path}/codebooks").orderBy("s", "c").collect()
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    cb = np.asarray(
-        [r["vector"] for r in cb_rows], dtype=np.float64
-    ).reshape(meta["m_subspaces"], meta["n_codes"], -1)
+    cent, cb, residual = _read_ivfpq_model(spark, path)
     _ivfpq_encode(
-        new_rows, cent, cb, bool(meta["residual"]), id_col, vec_col
+        new_rows, cent, cb, residual, id_col, vec_col
     ).write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
 
 
@@ -1942,14 +2016,7 @@ def ivfpq_query_index(
     touches O(queries × pool) rows, never a cell). Identical to
     :func:`ivfpq_topk` run with the same quantizers — pinned by
     ``tests/test_operators.py::test_ivfpq_index_roundtrip``."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    cb_rows = spark.read.parquet(f"{path}/codebooks").orderBy("s", "c").collect()
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    m, n_c = meta["m_subspaces"], meta["n_codes"]
-    cb = np.asarray([r["vector"] for r in cb_rows], dtype=np.float64).reshape(
-        m, n_c, -1
-    )
+    cent, cb, residual = _read_ivfpq_model(spark, path)
     # ONE bounded collect (n_queries × dim — the query set is small by
     # design), reused by the rank stage; probe cells come from
     # _ivfpq_probe, the SAME normalized rule the rank stage masks with,
@@ -1970,7 +2037,7 @@ def ivfpq_query_index(
         queries,
         cent,
         cb,
-        bool(meta["residual"]),
+        residual,
         k=k,
         nprobe=nprobe,
         rerank_pool=rerank_pool,
@@ -2061,6 +2128,7 @@ def _cogroup_topk_scores(
     )
 
     def score(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         if len(qpdf) == 0 or len(cpdf) == 0:
             return empty
         # column order = neighbor_id ascending, so a STABLE argsort on
@@ -2217,8 +2285,7 @@ def ivf_query_index_join(
     :func:`scalar_quantize` expressions (distributed, not collected);
     pass ``rerank_corpus`` to recover exactness as in
     :func:`ivf_query_index`."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent_mat = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
+    cent_mat = _read_centroids(spark, path)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).withColumn(
@@ -2390,20 +2457,13 @@ def ivfpq_query_index_join(
       the exact cosine rerank joins ``rerank_corpus`` and the query
       frame by key — never broadcasting or collecting the query side.
     """
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    cent = np.asarray([r["vector"] for r in cent_rows], dtype=np.float64)
-    cb_rows = spark.read.parquet(f"{path}/codebooks").orderBy("s", "c").collect()
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    m, n_c = meta["m_subspaces"], meta["n_codes"]
-    residual = bool(meta["residual"])
-    cb = np.asarray(
-        [r["vector"] for r in cb_rows], dtype=np.float64
-    ).reshape(m, n_c, -1)
-    d_sub = cb.shape[2]
+    cent, cb, residual = _read_ivfpq_model(spark, path)
+    m, _, d_sub = cb.shape
     cent_hat = _normalized_rows(cent)
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_zip_finders()
         for vecs in it:
             qm = _normalized_rows(
                 np.stack(vecs.to_numpy()).astype(np.float64)
@@ -2434,6 +2494,7 @@ def ivfpq_query_index_join(
     def adc_udf(
         qvs: pd.Series, codes: pd.Series, cells_s: pd.Series
     ) -> pd.Series:
+        drop_zip_finders()
         qm = _normalized_rows(np.stack(qvs.to_numpy()).astype(np.float64))
         b = qm.shape[0]
         cd = np.stack(codes.to_numpy()).astype(np.int64)  # (b, m)
