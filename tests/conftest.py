@@ -60,7 +60,6 @@ _SLOW_TESTS = frozenset(
         "test_entry_oracle.py::test_query_matches_oracle[similarity_topk_ivf_index_append_fullprobe]",
         "test_streaming.py::test_interval_join_stream_across_micro_batches",
         "test_operators.py::test_simhash_candidate_fanout_bounded",
-        "test_service.py::test_dataset_registry_upsert[parquet]",
         "test_entry_oracle.py::test_query_matches_oracle[multimodal_decode_real]",
         "test_property.py::test_bloom_membership_invariants",
         "test_anomaly.py::test_optimize_threshold_grid_and_floor",
@@ -72,13 +71,10 @@ _SLOW_TESTS = frozenset(
         "test_operators.py::test_ivf_index_quantized_rerank_matches_quantized_topk",
         "test_property.py::test_passage_dedup_invariants",
         "test_entry_oracle.py::test_query_matches_oracle[repository_roundtrip_jdbc]",
-        "test_service.py::test_dashboard_page_views",
         "test_entry_oracle.py::test_query_matches_oracle[dedup_lsh_eval]",
-        "test_service.py::test_assess_scores_with_stored_best_models[parquet]",
         "test_skew.py::test_components_giant_clique_and_long_chain",
         "test_entry_oracle.py::test_query_matches_oracle[classifier_quality_accuracy_bound]",
         "test_entry_oracle.py::test_query_matches_oracle[multimodal_audio_neardup]",
-        "test_service.py::test_notification_carries_dashboard_link",
         "test_streaming.py::test_span_dedup_stream_retry_is_idempotent",
     ]
 )

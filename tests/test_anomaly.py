@@ -19,7 +19,7 @@ from thoth_spark.anomaly import (
     simple_model_folds,
 )
 from thoth_spark.anomaly.scoring import score
-from thoth_spark.quality import assess_quality
+from thoth_spark.quality import NotificationHandler, assess_quality
 
 KEY = ["entity", "instance", "name"]
 
@@ -163,6 +163,55 @@ def test_score_is_last_fold_and_assess(spark):
     df2 = _series_df(spark, anomalous)
     s2 = score(df2, opt)
     assert assess_quality(opt.optimization_df, s2) is False
+
+
+def test_assess_quality_judges_like_spark(spark):
+    """The verdict compares collected rows in Python; it must flag what
+    Spark's inner join on the key plus ``error > threshold`` flags: NaN
+    exceeds every number, nulls never exceed, a score without a
+    threshold (or with a null key) is not judged."""
+    nan = float("nan")
+    scoring = spark.createDataFrame(
+        [
+            ("Column", "a", "Mean", None, 0.5),
+            ("Column", "b", "Mean", None, 0.05),
+            ("Column", "c", "Mean", None, nan),
+            ("Column", "d", "Mean", None, None),
+            ("Column", "e", "Mean", None, 0.9),
+            ("Column", "f", "Mean", None, 0.9),
+            ("Column", "g", "Mean", None, nan),
+            ("Column", None, "Size", None, 0.9),
+        ],
+        "entity string, instance string, name string, ts timestamp, error double",
+    )
+    optimization = spark.createDataFrame(
+        [
+            ("Column", "a", "Mean", 0.1),
+            ("Column", "b", "Mean", 0.1),
+            ("Column", "c", "Mean", 0.1),
+            ("Column", "d", "Mean", 0.1),
+            ("Column", "f", "Mean", None),
+            ("Column", "g", "Mean", nan),
+            ("Column", None, "Size", 0.1),
+        ],
+        "entity string, instance string, name string, threshold double",
+    )
+    expected = sorted(
+        tuple(r)
+        for r in scoring.join(optimization, on=KEY)
+        .where(F.col("error") > F.col("threshold"))
+        .select(*KEY)
+        .collect()
+    )
+    assert expected == [("Column", "a", "Mean"), ("Column", "c", "Mean")]
+
+    class Capture(NotificationHandler):
+        def _notify(self, dataset_uri, ts, anomalous_scores, dashboard_link=None):
+            self.flagged = sorted(a.metric for a in anomalous_scores)
+
+    handler = Capture()
+    assert assess_quality(optimization, scoring, key_cols=KEY, notification_handlers=[handler]) is False
+    assert handler.flagged == expected
 
 
 def test_multiple_metrics_parallel(spark):

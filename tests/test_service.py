@@ -266,12 +266,15 @@ def test_dataset_writes_leave_other_datasets_alone(spark, repo):
 def test_service_flows_release_cached_frames(spark, events_df, repo):
     """A long-lived service must not grow the session's cache call by
     call: onboarding and two same-ts assessments leave the CacheManager
-    as they found it."""
+    and the persisted RDDs (cached frames' and checkpoints' blocks) as
+    they found them."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
     last_day = datetime.datetime(2024, 1, 30)
     history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
     new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
     before = cache_manager.numCachedEntries()
+    rdds_before = persistent_rdds().size()
 
     profile_create_optimize(
         history,
@@ -290,6 +293,101 @@ def test_service_flows_release_cached_frames(spark, events_df, repo):
             profiling_builder=SimpleProfilingBuilder(),
         )
     assert cache_manager.numCachedEntries() == before
+    assert persistent_rdds().size() == rdds_before
+
+
+def test_same_ts_reassessment_in_another_python_time_zone(spark, events_df, repo):
+    """The assessment collects its scores and writes them back from the
+    driver. With the Python process in another time zone than the
+    session (UTC), every stored ts must keep its instant, and a same-ts
+    re-assessment must still replace, not add, its rows."""
+    import time
+
+    utc = datetime.timezone.utc
+    last_day = datetime.datetime(2024, 1, 30, tzinfo=utc)
+    history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
+    new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
+    previous = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Sao_Paulo"
+    time.tzset()
+    try:
+        profile_create_optimize(
+            history,
+            dataset_uri="tz://x",
+            ts_column="ts",
+            repo=repo,
+            profiling_builder=SimpleProfilingBuilder(),
+            confidence=0.85,
+        )
+        for _ in range(2):
+            assess_new_ts(
+                new_batch,
+                ts=last_day,
+                dataset_uri="tz://x",
+                repo=repo,
+                profiling_builder=SimpleProfilingBuilder(),
+            )
+    finally:
+        if previous is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = previous
+        time.tzset()
+
+    key = ["ts", "entity", "instance", "name"]
+    day_us = 86_400_000_000
+    profiled = repo.select_profiling("tz://x")
+    scored = repo.select_scoring("tz://x")
+    for stored in (profiled, scored):
+        assert stored.groupBy(*key).count().where(F.col("count") > 1).count() == 0
+        # daily buckets of the UTC session: every ts is a UTC midnight
+        assert stored.where(F.unix_micros("ts") % day_us != 0).count() == 0
+    last_us = int(last_day.timestamp()) * 1_000_000
+    assert [r[0] for r in scored.select(F.unix_micros("ts")).distinct().collect()] == [
+        last_us
+    ]
+    assert scored.count() == 3  # Size, Mean(value), Completeness(value)
+    assert profiled.where(F.unix_micros("ts") == last_us).count() == 3
+
+
+def test_warm_assessment_job_budget(spark, events_df, tmp_path):
+    """A warm assess_new_ts runs in at most 8 Spark jobs: one registry
+    read, the batch profile and its write, one optimization read, one
+    scoring pass and its write; no job only materializes or broadcasts
+    a frame another job computes again."""
+    repo = MetricsRepository(spark, str(tmp_path / "store"))
+    sc = spark.sparkContext
+    last_day = datetime.datetime(2024, 1, 30)
+    history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
+    new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
+    profile_create_optimize(
+        history,
+        dataset_uri="warm://jobs",
+        ts_column="ts",
+        repo=repo,
+        profiling_builder=SimpleProfilingBuilder(),
+        confidence=0.85,
+    )
+
+    def assess():
+        assess_new_ts(
+            new_batch,
+            ts=last_day,
+            dataset_uri="warm://jobs",
+            repo=repo,
+            profiling_builder=SimpleProfilingBuilder(),
+        )
+
+    assess()
+    assess()
+    group = "test_warm_assessment_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        assess()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 def test_parquet_write_ignores_session_overwrite_mode(spark, tmp_path):

@@ -7,10 +7,10 @@ import abc
 import dataclasses
 import datetime
 import logging
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 logger = logging.getLogger("thoth_spark.quality")
 
@@ -77,18 +77,45 @@ class LogHandler(NotificationHandler):
         )
 
 
-def anomalies(
-    scoring_df: DataFrame, optimization_df: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Scores joined to thresholds, filtered to ``score > threshold``.
+def _exceeds(error, threshold) -> bool:
+    """Spark's ``error > threshold``: a null never exceeds, and NaN is
+    larger than every number."""
+    if error is None or threshold is None:
+        return False
+    return error > threshold or (math.isnan(error) and not math.isnan(threshold))
 
-    The threshold side is one row per metric — always broadcast."""
-    thresholds = optimization_df.select(*key_cols, "threshold")
-    return (
-        scoring_df.join(F.broadcast(thresholds), on=key_cols)
-        .where(F.col("error") > F.col("threshold"))
-        .select(*key_cols, "ts", F.col("error").alias("score"), "threshold")
-    )
+
+def assess_scores(
+    optimization_rows: Sequence,
+    scoring_rows: Sequence,
+    key_cols: list[str],
+    notification_handlers: Sequence[NotificationHandler] | None = None,
+    dataset_uri: str = "",
+) -> bool:
+    """:func:`assess_quality` over collected rows: the optimization's
+    ``key_cols + threshold`` and the scores' ``key_cols + (ts, error)``.
+    A score is judged against its metric's threshold, matched on
+    ``key_cols`` as an inner equi-join matches (a null key matches
+    nothing); a score with no threshold is not judged."""
+    thresholds = {}
+    for r in optimization_rows:
+        key = tuple(r[c] for c in key_cols)
+        if None not in key:
+            thresholds[key] = r["threshold"]
+    scores, ts = [], None
+    for r in scoring_rows:
+        metric = tuple(r[c] for c in key_cols)
+        threshold = thresholds.get(metric)
+        if _exceeds(r["error"], threshold):
+            if not scores:
+                ts = r["ts"]
+            scores.append(AnomalousScore(metric=metric, score=r["error"], threshold=threshold))
+    if not scores:
+        logger.info("Quality assessment finished, everything good.")
+        return True
+    for handler in notification_handlers or [LogHandler()]:
+        handler.notify(dataset_uri=dataset_uri, ts=ts, anomalous_scores=scores)
+    return False
 
 
 def assess_quality(
@@ -99,21 +126,16 @@ def assess_quality(
     dataset_uri: str = "",
 ) -> bool:
     """True when every metric scored within its threshold; otherwise
-    notifies the handlers with the anomalous metrics and returns False."""
+    notifies the handlers with the anomalous metrics and returns False.
+    Collects the thresholds (one row per metric) and the scores, and
+    judges them with :func:`assess_scores`."""
     key_cols = key_cols or [
         c for c in ("dataset_uri", "entity", "instance", "name") if c in scoring_df.columns
     ]
-    rows = anomalies(scoring_df, optimization_df, key_cols).collect()
-    if not rows:
-        logger.info("Quality assessment finished, everything good.")
-        return True
-    scores = [
-        AnomalousScore(
-            metric=tuple(r[c] for c in key_cols), score=r["score"], threshold=r["threshold"]
-        )
-        for r in rows
-    ]
-    ts = rows[0]["ts"]
-    for handler in notification_handlers or [LogHandler()]:
-        handler.notify(dataset_uri=dataset_uri, ts=ts, anomalous_scores=scores)
-    return False
+    return assess_scores(
+        optimization_df.select(*key_cols, "threshold").collect(),
+        scoring_df.select(*key_cols, "ts", "error").collect(),
+        key_cols,
+        notification_handlers,
+        dataset_uri,
+    )

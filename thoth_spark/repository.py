@@ -12,9 +12,8 @@ supplies only the storage primitives declared on the port: ``_read``,
 
 Every frame here is metric-sized (rows ∝ #metrics × #timestamps), so
 the port computes each input once and keeps each step in as few Spark
-jobs as it can: an upsert materializes its new rows once and anti-joins
-the stored rows against their broadcast ts, and a range scan sorts one
-dataset in one task.
+jobs as it can: an upsert reads its new rows once, inside the job that
+writes them, and a range scan sorts one dataset in one task.
 
 :class:`MetricsRepository` (here) stores parquet tables partitioned by
 ``dataset_uri``: every per-dataset read prunes to one partition
@@ -37,7 +36,7 @@ from __future__ import annotations
 import os
 from abc import ABC, abstractmethod
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _METRICS_SCHEMA = (
@@ -152,16 +151,23 @@ class RepositoryPort(ABC):
         """Keep the dataset's stored rows at every ts that ``new`` does
         not carry, replace the rest.
 
-        ``new`` is used twice (its ts for the anti join, its rows for the
-        union), so it is materialized once first: a lazy profile or
-        scoring under it would otherwise run once per use. The anti join
-        only tests existence, so the broadcast ts need no ``distinct``."""
-        new = new.localCheckpoint()
+        The stored rows and ``new`` meet in one partition, where a window
+        over ts keeps a stored row only when no new row shares its ts.
+        One partition is clustered by any key, so the window plans no
+        exchange; ``new`` is read once, inside the job that writes it, so
+        a lazy profile under it runs once, and no job materializes it or
+        broadcasts its ts set first. A null ts is a key like any other."""
         existing = self._read(table, schema).where(F.col("dataset_uri") == dataset_uri)
-        kept = existing.join(
-            F.broadcast(new.select("ts")), on="ts", how="left_anti"
-        ).select(*new.columns)
-        self._replace_dataset_rows(table, schema, dataset_uri, kept.unionByName(new))
+        replaced = F.max("__new__").over(Window.partitionBy("ts"))
+        rows = (
+            existing.select(*new.columns, F.lit(False).alias("__new__"))
+            .unionByName(new.withColumn("__new__", F.lit(True)))
+            .coalesce(1)
+            .withColumn("__keep__", F.col("__new__") | ~replaced)
+            .where("__keep__")
+            .select(*new.columns)
+        )
+        self._replace_dataset_rows(table, schema, dataset_uri, rows)
 
     def _scan(self, table: str, schema: str, dataset_uri: str, start_ts, end_ts) -> DataFrame:
         """Closed-interval range scan of one dataset, sorted by ts. One
@@ -182,12 +188,20 @@ class RepositoryPort(ABC):
     # -- profiling metrics -------------------------------------------------------
 
     def add_profiling(
-        self, dataset_uri: str, metrics_df: DataFrame, granularity: str = "DAY"
+        self,
+        dataset_uri: str,
+        metrics_df: DataFrame,
+        granularity: str = "DAY",
+        dataset: dict | None = None,
     ) -> None:
         """Upsert metric rows by (dataset_uri, ts): re-profiling the same
         timestamp replaces the previous report — the reference's tested
-        re-assessment semantics (``service_layer.py:481-486``)."""
-        dataset = self.get_dataset(dataset_uri)
+        re-assessment semantics (``service_layer.py:481-486``).
+
+        ``dataset`` is the registration record when the caller has just
+        read it (the service profiles with it); it is read here otherwise."""
+        if dataset is None:
+            dataset = self.get_dataset(dataset_uri)
         if dataset is None:
             raise DatasetValidationError(
                 f"Dataset '{dataset_uri}' is not registered; call add_dataset first."

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from thoth_spark.repository import RepositoryPort
+from thoth_spark.session import release_checkpoints
 
 _DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -155,18 +156,23 @@ class JdbcMetricsRepository(RepositoryPort):
 
     def _overwrite(self, df: DataFrame, table: str) -> None:
         """Replace the whole table (the frame is materialized first —
-        JDBC can't read a table it is overwriting)."""
+        JDBC can't read a table it is overwriting). The checkpoint's
+        blocks are released once the write is done, not left for a JVM
+        garbage collection to find."""
         materialized = df.localCheckpoint(eager=True)
-        writer = (
-            self._with_driver(
-                materialized.write.format("jdbc").option("url", self.url)
+        try:
+            writer = (
+                self._with_driver(
+                    materialized.write.format("jdbc").option("url", self.url)
+                )
+                .option("dbtable", table)
+                .mode("overwrite")
             )
-            .option("dbtable", table)
-            .mode("overwrite")
-        )
-        if table in _COLUMN_TYPES:
-            writer = writer.option("createTableColumnTypes", _COLUMN_TYPES[table])
-        writer.save()
+            if table in _COLUMN_TYPES:
+                writer = writer.option("createTableColumnTypes", _COLUMN_TYPES[table])
+            writer.save()
+        finally:
+            release_checkpoints(materialized)
 
     def _replace_dataset_rows(
         self, table: str, schema: str, dataset_uri: str, rows: DataFrame

@@ -3,29 +3,39 @@ DataFrame pipeline + the repository port (the reference's
 ``thoth/service_layer.py:400-508``). The end-to-end calls compose the
 standalone flows: ``profile_create_optimize`` is ``profile_create`` then
 ``optimize``; ``assess_new_ts`` is ``profile``, then the scoring step
-``score`` shares, then the quality assessment."""
+``score`` shares, then the quality assessment of the collected scores."""
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from thoth_spark.anomaly.models import MODEL_REGISTRY
 from thoth_spark.anomaly.optimization import AnomalyOptimization
 from thoth_spark.anomaly.optimization import optimize as _optimize_core
-from thoth_spark.anomaly.scoring import score as _score_core
+from thoth_spark.anomaly.scoring import last_points as _last_points_core
+from thoth_spark.anomaly.scoring import score as _score_core  # noqa: F401
 from thoth_spark.profiler import Granularity, ProfilingBuilder
 from thoth_spark.profiler import profile as _profile_core
 from thoth_spark.quality import NotificationHandler
-from thoth_spark.quality import assess_quality as _assess_quality_core
+from thoth_spark.quality import assess_quality as _assess_quality_core  # noqa: F401
+from thoth_spark.quality import assess_scores as _assess_scores_core
 from thoth_spark.repository import MetricsRepository, RepositoryPort
+from thoth_spark.session import release_checkpoints
 
 # the module-level names `profile`/`optimize`/`score`/`assess_quality`
 # defined below are the SERVICE-LAYER versions (repo-persisted flows,
 # reference thoth/service_layer.py:157,245,307,355); the composable core
 # functions are aliased with _core suffixes and keep their direct
-# exports via the package root's type-dispatching wrappers
+# exports via the package root's type-dispatching wrappers. The service
+# flows score and judge through `_last_points_core` and
+# `_assess_scores_core`; `_score_core` and `_assess_quality_core` stay
+# importable here because perfbench's tracer wraps the core flows at
+# these names.
 
 _KEY = ["entity", "instance", "name"]
 
@@ -50,7 +60,8 @@ def profile_create_optimize(
     """Onboard a dataset: :func:`profile_create`, then :func:`optimize`
     over the stored history.
 
-    Returns (metrics_df, optimization_df)."""
+    Returns (metrics_df, optimization_df); the optimization is the one
+    stored, so the call leaves no cache or checkpoint behind."""
     metrics = profile_create(
         df, dataset_uri, ts_column, repo, profiling_builder, granularity
     )
@@ -63,7 +74,10 @@ def profile_create_optimize(
         repo=repo,
     )
     opt.validation_df.unpersist()
-    return metrics, opt.optimization_df
+    release_checkpoints(opt.optimization_df)
+    return metrics, repo.get_optimization(dataset_uri).select(
+        opt.optimization_df.columns
+    )
 
 
 def assess_new_ts(
@@ -79,60 +93,71 @@ def assess_new_ts(
     reference ``service_layer.py:481-486``), then :func:`score` of the
     last point per metric and the quality assessment. Returns True when
     no metric breaches its threshold.
+
+    The optimization and the scores are collected once (one row per
+    metric each); the scorings write and the verdict both use them.
     """
     profile(df, dataset_uri, profiling_builder, repo=repo)
+    opt_rows = repo.get_optimization(dataset_uri).collect()
     history = repo.select_profiling(dataset_uri, end_ts=ts)
-    opt_df = repo.get_optimization(dataset_uri)
-    return _assess_quality_core(
-        opt_df,
-        _scored(repo, dataset_uri, history, opt_df),
-        key_cols=_KEY,
+    _, scores = _scored(repo, dataset_uri, history, opt_rows)
+    return _assess_scores_core(
+        opt_rows,
+        scores,
+        _KEY,
         notification_handlers=notification_handlers,
         dataset_uri=dataset_uri,
     )
 
 
+_NOT_FOUND = "profiling and optimization can't be None. Values were not found in repo."
+
+#: the scoring's columns, ts as epoch microseconds
+_SCORE_TYPES = {
+    **{c: pa.string() for c in _KEY},
+    "ts": pa.int64(),
+    **{c: pa.float64() for c in ("value", "predicted", "error")},
+}
+
+
 def _scored(
-    repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_df: DataFrame
-) -> DataFrame:
-    """Score ``history`` against the optimization ``opt_df``, persist the
-    scoring and return it, computed once.
+    repo: RepositoryPort, dataset_uri: str, history: DataFrame, opt_rows: list
+) -> tuple[DataFrame, list[dict]]:
+    """Score ``history`` against the optimization's collected rows,
+    persist the scoring and return it as a frame and as rows.
 
-    The scoring is ``localCheckpoint``-ed, so its folds run in one job
-    and it holds no CacheManager entry. A ``.cache()`` would not do:
-    under AQE its two readers (the write and the verdict) become
-    table-cache stages that materialize in parallel before the cache
-    fills, running the folds twice.
-
-    One collect of the (model-sized) optimization gives its confidence
-    and the models to score with — every model it actually selected:
-    scoring only with a default model would silently drop the scores of
-    any metric whose best model is different (the core ``score``
-    inner-joins on ``best_model_name``) and report a false "all good"."""
-    rows = opt_df.collect()
-    if not rows:
-        raise ValueError(
-            "profiling and optimization can't be None. Values were not found in repo."
-        )
-    model_names = sorted({r["best_model_name"] for r in rows})
+    The last point of every metric is scored by every model the
+    optimization selected (a default model alone would drop the metrics
+    whose best model differs and report a false "all good"), collected
+    once, and each metric's best-model row is picked on the driver. The
+    write reads those rows from an Arrow-built local frame: nothing is
+    scored twice, no Python worker starts (a frame built from a list of
+    tuples is a Python RDD), and ts travels as epoch microseconds, which
+    no time zone reads differently (a collected timestamp is a naive
+    datetime in the Python process's zone)."""
+    if not opt_rows:
+        raise ValueError(_NOT_FOUND)
+    model_names = sorted({r["best_model_name"] for r in opt_rows})
     unknown = [m for m in model_names if m not in MODEL_REGISTRY]
     if unknown:
         raise ValueError(
             f"Stored optimization for '{dataset_uri}' references unregistered "
             f"model(s) {unknown}; registered: {sorted(MODEL_REGISTRY)}"
         )
-    optimization = AnomalyOptimization(
-        optimization_df=opt_df,
-        validation_df=None,
-        confidence=rows[0]["confidence"],
-        key_cols=_KEY,
-        model_names=model_names,
+    rows = (
+        _last_points_core(history, model_names, _KEY)
+        .withColumn("ts", F.unix_micros("ts"))
+        .collect()
     )
-    scoring = _score_core(
-        history.select(*_KEY, "ts", "value"), optimization, key_cols=_KEY
-    ).localCheckpoint()
+    if not rows:
+        raise ValueError(_NOT_FOUND)
+    best = {tuple(r[c] for c in (*_KEY, "best_model_name")) for r in opt_rows}
+    picked = [r for r in rows if tuple(r[c] for c in (*_KEY, "best_model_name")) in best]
+    table = pa.table({c: pa.array([r[c] for r in picked], t) for c, t in _SCORE_TYPES.items()})
+    scoring = repo.spark.createDataFrame(table).withColumn("ts", F.timestamp_micros("ts"))
     repo.add_scoring(dataset_uri, scoring)
-    return scoring
+    to_datetime = TimestampType().fromInternal
+    return scoring, [dict(r.asDict(), ts=to_datetime(r["ts"])) for r in picked]
 
 
 # ---------------------------------------------------------------------------
@@ -258,7 +283,7 @@ def profile(
     metrics = _profile_core(
         df, dataset["ts_column"], profiling_builder, dataset["granularity"]
     )
-    repo.add_profiling(dataset_uri, metrics, dataset["granularity"])
+    repo.add_profiling(dataset_uri, metrics, dataset["granularity"], dataset=dataset)
     return metrics
 
 
@@ -316,14 +341,11 @@ def score(
         if profiling_history is not None
         else repo.select_profiling(dataset_uri, end_ts=ts)
     )
-    if history.limit(1).count() == 0:
-        raise ValueError(
-            "profiling and optimization can't be None. Values were not found in repo."
-        )
     opt_df = (
         optimization if optimization is not None else repo.get_optimization(dataset_uri)
     )
-    return _scored(repo, dataset_uri, history, opt_df)
+    scoring, _ = _scored(repo, dataset_uri, history, opt_df.collect())
+    return scoring
 
 
 def assess_quality(
@@ -349,17 +371,19 @@ def assess_quality(
         if scoring is not None
         else repo.select_scoring(dataset_uri, start_ts=ts, end_ts=ts)
     )
+    opt_rows = opt_df.select(*_KEY, "threshold").collect()
+    scoring_rows = scoring_df.select(*_KEY, "ts", "error").collect()
     # Reference service_layer.py:388-391: an unregistered URI or a
     # mistyped ts yields EMPTY stored frames; the gate must fail loudly,
     # not report "everything good" on zero anomaly rows.
-    if scoring_df.limit(1).count() == 0 or opt_df.limit(1).count() == 0:
+    if not scoring_rows or not opt_rows:
         raise ValueError(
             "scoring and optimization can't be None. Values were not found in repo."
         )
-    return _assess_quality_core(
-        opt_df,
-        scoring_df,
-        key_cols=_KEY,
+    return _assess_scores_core(
+        opt_rows,
+        scoring_rows,
+        _KEY,
         notification_handlers=notification_handlers,
         dataset_uri=dataset_uri,
     )

@@ -6,7 +6,7 @@ import os
 import sys
 import zipimport
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def drop_zip_finders() -> None:
@@ -34,6 +34,21 @@ def drop_zip_finders() -> None:
     cache = sys.path_importer_cache
     for key in [k for k, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
         del cache[key]
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Drop the blocks of every ``localCheckpoint`` that ``df`` reads.
+
+    The JVM keeps a checkpoint's blocks until a garbage collection lets
+    Spark's ContextCleaner find its RDD unreachable, long after the
+    frame's last use; a long-lived service would carry them from call to
+    call. Call it once nothing will read ``df`` again: reading it
+    afterwards fails."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(True)
 
 
 def get_spark(
@@ -101,6 +116,17 @@ def get_spark(
         # assessment compiles only the few classes that carry its new
         # ts literal. Static SQL conf: set before the session starts.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # pyspark's DataFrame debugging (on by default) captures the
+        # Python call site of every Column function and DataFrame method
+        # it wraps: a stack walk, an `import IPython` attempt and ~10
+        # py4j round trips each. Building the lazy profile of one
+        # 1000-row day (perfbench daily_monitor inputs, warm, 4 cores)
+        # took 0.39-0.46 s and 2.9-3.0k py4j round trips with it, and
+        # 0.20-0.23 s and 1.0k without. The cost: an error raised while
+        # a DataFrame runs no longer names the Python line that built
+        # the failing expression; the error message and the JVM stack
+        # trace stay. Static conf: pyspark reads it once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("THOTH_SPARK_DRIVER_MEM", "8g"))
