@@ -447,6 +447,34 @@ def test_upsert_evaluates_new_rows_once(spark, repo):
     assert repo.select_profiling("once://x").count() == 6
 
 
+def _scans_python_rdd(df) -> bool:
+    return "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_rows_read_as_local_relations(repo, monkeypatch):
+    """A table not yet written reads as an empty local relation, and the
+    registry write builds its rows the same way: a frame made from a
+    Python list is a Python RDD (an ``ExistingRDD`` scan), and every job
+    reading it starts Python tasks."""
+    from pyspark.sql.types import StructType
+
+    from thoth_spark.repository import _METRICS_SCHEMA
+
+    empty = repo._read("metrics", _METRICS_SCHEMA)
+    assert not _scans_python_rdd(empty)
+    assert empty.schema == StructType.fromDDL(_METRICS_SCHEMA)
+    assert empty.count() == 0
+
+    written = []
+    write = repo._write_registry
+    monkeypatch.setattr(repo, "_write_registry", lambda df: (written.append(df), write(df)))
+    repo.add_dataset("local://a", "ts", ["value", "kind"], "DAY")
+    repo.add_dataset("local://b", "ts", ["value"], "HOUR")
+    assert not any(_scans_python_rdd(df) for df in written)
+    assert repo.get_dataset("local://a")["columns"] == ["value", "kind"]
+    assert repo.get_dataset("local://b")["granularity"] == "HOUR"
+
+
 def test_warm_assessment_does_not_recompile(spark, events_df, tmp_path):
     """A warm assess_new_ts of a shape the process has run before finds
     every generated class in the codegen cache: a cache smaller than the

@@ -29,9 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_narrow(
-    df: DataFrame, *key_cols: str, scan_probe: bool = True
-) -> DataFrame:
+def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` (hashed on
     ``key_cols`` when given, round-robin otherwise) iff its current
     partitioning is narrower than the cluster's — a no-op at scale.
@@ -39,31 +37,22 @@ def spread_narrow(
     Probe cost (r16 advice): ``df.rdd.getNumPartitions()`` forces full
     physical planning of the frame on the driver at every call site, in
     hot operator-construction paths, even at scale where the call then
-    no-ops. With ``scan_probe`` (the default — every current call site
-    feeds a projection of a fresh file scan) the narrowness test is the
-    METADATA-ONLY file count (``len(df.inputFiles())``, the same probe
+    no-ops. Every call site feeds a projection of a fresh file scan, so
+    the narrowness test is the METADATA-ONLY file count
+    (``len(df.inputFiles())``, the same probe
     :func:`ivf_query_index_join` uses on compacted index scans): a scan
     of >= cluster-parallelism files is never narrow, and a 1-file local
     scan always is. The file count can misjudge a frame whose scan
     packing/splitting diverges from its file count (few huge splittable
-    files, or a post-shuffle derived frame) — the cost is one spurious
-    or missed exchange, never a result change; pass
-    ``scan_probe=False`` for derived frames to get the exact (planning)
-    probe. Frames with no input files (in-memory sources) fall back to
-    the exact probe automatically."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if scan_probe:
-        try:
-            nf = len(df.inputFiles())
-        except Exception:
-            nf = 0
-        if nf >= target:
-            return df
-        narrow = nf > 0  # 0 files: not a file scan — use the exact probe
-    else:
-        narrow = False
-    if not narrow and df.rdd.getNumPartitions() >= target:
+    files) — the cost is one spurious or missed exchange, never a result
+    change. Frames with no input files (in-memory sources) fall back to
+    the exact planning probe."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        nf = len(df.inputFiles())
+    except Exception:
+        nf = 0
+    if nf >= target or (nf == 0 and df.rdd.getNumPartitions() >= target):
         return df
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])

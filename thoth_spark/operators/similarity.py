@@ -1,19 +1,41 @@
 """Embedding similarity search over ``array<float>`` columns.
 
-- :func:`brute_force_topk` — exact cosine top-k: broadcast the (small)
-  query set against the distributed corpus; dot products via
-  ``zip_with``/``aggregate`` higher-order functions (JVM-side, no UDF);
-  per-query ``row_number`` for the k cut. The correctness baseline.
-- :func:`hyperplane_lsh_topk` — the scale path: random-hyperplane sign
-  buckets shrink each query's candidate set; probing the query's bucket
-  plus single-bit-flip neighbors trades recall for a corpus-size-
-  independent candidate count.
-- :func:`ivf_topk` — IVF: K-Means coarse quantizer (Spark MLlib), corpus
-  partitioned by nearest centroid, queries probe the ``nprobe`` closest
-  centroids only — the classic billion-vector layout where the centroid
-  assignment doubles as the storage partition key.
-- :func:`embedding_near_dup_pairs` — cosine near-duplicate pairs via the
-  same hyperplane bucketing (for embedding-level dedup).
+Operators, by family:
+
+- exact top-k: :func:`brute_force_topk` (JVM fold, broadcast queries)
+  and :func:`brute_force_topk_pandas` (numpy matmul per Arrow batch);
+  :func:`quantized_topk` scans SQ8 codes and reranks exactly;
+- hyperplane LSH: :func:`hyperplane_lsh_topk`,
+  :func:`embedding_near_dup_pairs`, :func:`embedding_cross_neardup`,
+  :func:`semantic_decontaminate`;
+- IVF: :func:`ivf_topk`, the persisted layout :func:`build_ivf_index`
+  (float or SQ8) with :func:`ivf_index_append`,
+  :func:`ivf_index_compact`, the probe-batch serve
+  :func:`ivf_query_index`, the join serve :func:`ivf_query_index_join`
+  and :func:`knn_graph` on top of it;
+- PQ / IVF-PQ: :func:`pq_encode`, :func:`pq_topk`, :func:`ivfpq_topk`,
+  :func:`build_ivfpq_index`, :func:`ivfpq_index_append`,
+  :func:`ivfpq_query_index`, :func:`ivfpq_query_index_join`;
+- curation: :func:`semdedup`, :func:`knn_classify`.
+
+Every top-k operator ends in the same serve tail, and each concept of
+it has one implementation here:
+
+- :func:`_rank_cut` — the per-query ``row_number`` cut, (score desc,
+  id asc), for candidate pools and final results alike;
+  :func:`_topk_result` adds the ``round(score, 6)`` output contract.
+  Local cuts per batch or group followed by this global cut are the
+  two-level top-k of REPOSE (ICDE 2021);
+- :func:`_exact_rerank` — candidates re-scored with the float
+  :func:`cosine` against the original corpus;
+- :func:`_sq8` — the SQ8 quantizer (``amax → scale → round → norm``),
+  scored by :func:`_dequantized_cos`;
+- :func:`_fold_norms` / :func:`_fold_cos` — the numpy kernel that sums
+  over dimensions in the JVM :func:`dot` fold's order, bit for bit
+  (semdedup's verify and the cogrouped ``knn_graph`` scorer);
+- :func:`_batch_topk` — the per-batch top-n emitter of the
+  ``mapInPandas`` scorers, with :func:`_collect_query_batch` the one
+  bounded collect of their query (or seed) batch.
 """
 
 from __future__ import annotations
@@ -70,6 +92,53 @@ def _col_type(df: DataFrame, col: str) -> str:
     return {f.name: f.dataType.simpleString() for f in df.schema.fields}[col]
 
 
+def _keyed_vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str
+) -> DataFrame:
+    """``(id_as, vec_as)`` rows of ``df``, the vector cast to doubles."""
+    return df.select(F.col(id_col).alias(id_as), _as_double(F.col(vec_col)).alias(vec_as))
+
+
+def _rank_cut(
+    scored: DataFrame, score: str, n: int, tie: str = "neighbor_id"
+) -> DataFrame:
+    """The per-query top-``n`` cut: ``rank`` is the ``row_number`` within
+    each ``query_id`` ordered by (``score`` desc, ``tie`` asc), and rows
+    past ``n`` drop. The order is total (ids are unique per query), so
+    a local cut per batch or group followed by this cut over the union
+    returns exactly the rows of one global cut."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(tie))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
+
+
+def _topk_result(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """The output contract of every top-k operator:
+    ``(query_id, neighbor_id, round(score, 6), rank)``."""
+    return _rank_cut(scored, score, k).select(
+        "query_id", "neighbor_id", F.round(score, 6).alias(score), "rank"
+    )
+
+
+def _exact_rerank(
+    cands: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    queries: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate pairs re-scored with the exact float :func:`cosine`:
+    ``cands`` (``query_id``, ``neighbor_id`` and, when ``queries`` is
+    None, the query vector ``qv``) join the float ``corpus`` by
+    neighbor id; a ``(query_id, qv)`` frame passed as ``queries`` joins
+    broadcast by query id. The join touches O(queries × pool) rows,
+    never the whole corpus."""
+    c = _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    exact = cands.join(c, "neighbor_id")
+    if queries is not None:
+        exact = exact.join(F.broadcast(queries), "query_id")
+    return exact.withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -84,23 +153,28 @@ def brute_force_topk(
     one at a time. Excludes self-matches on id. Returns
     (query_id, neighbor_id, cos_sim, rank).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+    c = _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _topk_result(scored, k)
+
+
+def _sq8(vec: Column, cast: str, prefix: str = "") -> list[Column]:
+    """The SQ8 quantizer of a double-array column: ``qvec`` (each
+    component as ``round(x / scale)`` ∈ [-127, 127], cast to ``cast``),
+    ``scale`` (max|x| / 127, or 1 for an all-zero vector) and the exact
+    float ``vnorm``, each aliased with ``prefix``."""
+    amax = F.array_max(F.transform(vec, lambda x: F.abs(x)))
+    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
+    return [
+        F.transform(vec, lambda x: F.round(x / scale).cast(cast)).alias(f"{prefix}qvec"),
+        scale.alias(f"{prefix}scale"),
+        norm(vec).alias(f"{prefix}vnorm"),
+    ]
 
 
 def scalar_quantize(
@@ -118,15 +192,7 @@ def scalar_quantize(
     scan reads a quarter of the bytes; exactness is recovered by
     re-ranking a small candidate pool (:func:`quantized_topk`). Pure
     column expressions (transform/aggregate) — no UDF, no shuffle."""
-    vec = _as_double(F.col(vec_col))
-    amax = F.array_max(F.transform(vec, lambda x: F.abs(x)))
-    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
-    return df.select(
-        F.col(id_col),
-        F.transform(vec, lambda x: F.round(x / scale).cast("int")).alias("qvec"),
-        scale.alias("scale"),
-        norm(vec).alias("vnorm"),
-    )
+    return df.select(F.col(id_col), *_sq8(_as_double(F.col(vec_col)), "int"))
 
 
 def _dequantized_cos() -> Column:
@@ -170,42 +236,19 @@ def quantized_topk(
     O(queries × rerank) rows, never the corpus."""
     rerank = rerank or 10 * k
     qc = scalar_quantize(corpus, id_col, vec_col)
-    qq = scalar_quantize(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("scale").alias("q_scale"),
-        F.col("vnorm").alias("q_vnorm"),
+    qq = queries.select(
+        F.col(id_col).alias("query_id"), *_sq8(_as_double(F.col(vec_col)), "int", "q_")
     )
     approx = (
         qc.crossJoin(F.broadcast(qq))
         .where(F.col(id_col) != F.col("query_id"))
         .withColumn("approx_cos", _dequantized_cos())
     )
-    w_a = W.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col(id_col)
+    cands = _rank_cut(approx, "approx_cos", rerank, tie=id_col).select(
+        F.col(id_col).alias("neighbor_id"), "query_id"
     )
-    cands = (
-        approx.withColumn("arank", F.row_number().over(w_a))
-        .where(F.col("arank") <= rerank)
-        .select(F.col(id_col).alias("neighbor_id"), "query_id")
-    )
-    exact_c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    exact_q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    rescored = (
-        cands.join(exact_c, "neighbor_id")
-        .join(F.broadcast(exact_q), "query_id")
-        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+    return _topk_result(_exact_rerank(cands, corpus, id_col, vec_col, q), k)
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
@@ -345,15 +388,8 @@ def hyperplane_lsh_topk(
         .select("query_id", "neighbor_id", "qv", "cv")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = candidates.withColumn(
-        "cos_sim", cosine(F.col("qv"), F.col("cv"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    scored = candidates.withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+    return _topk_result(scored, k)
 
 
 def coarse_centroids(
@@ -447,32 +483,17 @@ def ivf_topk(
     # scoring at ITS OWN parallelism — spread a narrow scan first
     # (no-op at scale)
     c = spread_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-        ),
-        "neighbor_id",
+        _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv"), "neighbor_id"
     ).withColumn("cell", _nearest_udf(1)(F.col("cv"))[0])
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        )
-        .withColumn("cell", F.explode(_nearest_udf(nprobe)(F.col("qv"))))
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
+        "cell", F.explode(_nearest_udf(nprobe)(F.col("qv")))
     )
     scored = (
         c.join(F.broadcast(q), on="cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            cosine(F.col("qv"), F.col("cv")),
-        )
+        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _topk_result(scored, k)
 
 
 def build_ivf_index(
@@ -509,9 +530,7 @@ def build_ivf_index(
         if centroids is not None
         else coarse_centroids(corpus, vec_col, n_centroids, seed, max_train)
     )
-    sel = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
+    sel = _keyed_vectors(corpus, id_col, vec_col, "vec_id", "v")
     # a narrow input (one local parquet split) would otherwise run the
     # assignment UDF AND the whole partitionBy write on one task; spread
     # the assignment, then re-key by cell so the layout keeps exactly
@@ -579,20 +598,9 @@ def _read_centroids(spark, path: str) -> np.ndarray:
 
 
 def _sq8_cells(assigned: DataFrame) -> DataFrame:
-    """FAISS-IVF+SQ8 cell rows from ``(vec_id, v, cell)``:
-    scalar_quantize's exact recipe, inlined so ``cell`` rides along
-    (its select() drops extra columns; a join-back would be a corpus
-    self-shuffle); byte cast is lossless for [-127, 127]."""
-    vec = F.col("v")
-    amax = F.array_max(F.transform(vec, lambda x: F.abs(x)))
-    scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
-    return assigned.select(
-        "vec_id",
-        F.transform(vec, lambda x: F.round(x / scale).cast("byte")).alias("qvec"),
-        scale.alias("scale"),
-        norm(vec).alias("vnorm"),
-        "cell",
-    )
+    """FAISS-IVF+SQ8 cell rows from ``(vec_id, v, cell)``: the
+    :func:`_sq8` recipe stored as bytes (lossless for [-127, 127])."""
+    return assigned.select("vec_id", *_sq8(F.col("v"), "byte"), "cell")
 
 
 def ivf_index_append(
@@ -615,9 +623,9 @@ def ivf_index_append(
     transform. At 100 TB this is the difference between a nightly
     full-index rebuild and a per-batch O(batch) ingest."""
     cent = _read_centroids(spark, path)
-    assigned = new_rows.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("cell", nearest_cells_udf(cent, 1)(F.col("v"))[0])
+    assigned = _keyed_vectors(new_rows, id_col, vec_col, "vec_id", "v").withColumn(
+        "cell", nearest_cells_udf(cent, 1)(F.col("v"))[0]
+    )
     if "qvec" in spark.read.parquet(f"{path}/cells").columns:
         assigned = _sq8_cells(assigned)
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/cells")
@@ -661,7 +669,7 @@ def ivf_query_index(
     DataFrame-sized query set use :func:`ivf_query_index_join`."""
     cent_mat = _read_centroids(spark, path)
     q_rows = _collect_query_batch(
-        queries, id_col, vec_col, "ivf_query_index", "ivf_query_index_join"
+        queries, (id_col, vec_col), "ivf_query_index", "ivf_query_index_join"
     )
     # the reshape gives an empty batch its (0, dim) shape
     q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64).reshape(
@@ -680,17 +688,9 @@ def ivf_query_index(
     q = q_batch.select("query_id", "qv", F.explode("cells").alias("cell"))
     probe_cells = sorted({int(c) for c in probes.ravel()})
     cells = spark.read.parquet(f"{path}/cells").where(F.col("cell").isin(probe_cells))
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
 
     if "qvec" in cells.columns:  # SQ8 layout
-        qq = scalar_quantize(
-            q_batch.select(F.col("query_id").alias("q_id"), "qv"), "q_id", "qv"
-        ).select(
-            F.col("q_id").alias("query_id"),
-            F.col("qvec").alias("q_qvec"),
-            F.col("scale").alias("q_scale"),
-            F.col("vnorm").alias("q_vnorm"),
-        )
+        qq = q_batch.select("query_id", *_sq8(F.col("qv"), "int", "q_"))
         approx = (
             cells.select(F.col("vec_id").alias("neighbor_id"), "qvec", "scale", "vnorm", "cell")
             .join(F.broadcast(q.select("query_id", "cell")), on="cell")
@@ -703,25 +703,11 @@ def ivf_query_index(
         if rerank_corpus is None:
             scored = approx.withColumn("cos_sim", F.col("approx_cos"))
         else:
-            n_cand = rerank or 10 * k
-            w_a = W.partitionBy("query_id").orderBy(
-                F.col("approx_cos").desc(), F.col("neighbor_id")
+            cands = _rank_cut(approx, "approx_cos", rerank or 10 * k).select(
+                "neighbor_id", "query_id"
             )
-            cands = (
-                approx.withColumn("arank", F.row_number().over(w_a))
-                .where(F.col("arank") <= n_cand)
-                .select("neighbor_id", "query_id")
-            )
-            exact_c = rerank_corpus.select(
-                F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-            )
-            scored = (
-                cands.join(exact_c, "neighbor_id")
-                .join(F.broadcast(q.select("query_id", "qv").distinct()), "query_id")
-                .withColumn(
-                    "cos_sim",
-                    cosine(F.col("qv"), F.col("cv")),
-                )
+            scored = _exact_rerank(
+                cands, rerank_corpus, id_col, vec_col, q.select("query_id", "qv").distinct()
             )
     else:
         scored = (
@@ -730,16 +716,9 @@ def ivf_query_index(
             )
             .join(F.broadcast(q), on="cell")
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cos_sim",
-                cosine(F.col("qv"), F.col("cv")),
-            )
+            .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _topk_result(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -763,10 +742,7 @@ def embedding_near_dup_pairs(
     # lazy checkpoint: materializes the aggregate-HOF signature ONCE for
     # both join legs (previously each leg re-evaluated it, and the probe
     # leg's explode re-evaluated it per flip via projection collapse)
-    base = spread_narrow(
-        df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
-        "id",
-    ).withColumns(
+    base = spread_narrow(_keyed_vectors(df, id_col, vec_col, "id", "v"), "id").withColumns(
         # norm stored per ROW (rides the checkpoint) so the verify stage
         # pays one dot per candidate pair, not dot + two sqrt(Σx²);
         # dot/(na·nb) is bit-identical to cosine(a, b)
@@ -910,10 +886,7 @@ def semdedup(
         # the assignment pass + fingerprint are the corpus-wide per-row
         # cost; raise a narrow scan to core parallelism before them
         # (no-op at scale — see partitioning.spread_narrow)
-        spread_narrow(
-            df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
-            "id",
-        )
+        spread_narrow(_keyed_vectors(df, id_col, vec_col, "id", "v"), "id")
         .withColumn("__as", _assign_and_sim(F.col("v")))
         .select(
             "id",
@@ -984,30 +957,45 @@ def semdedup(
     return out
 
 
+def _fold_norms(X: np.ndarray) -> np.ndarray:
+    """Row norms of ``X`` summed over dimensions in order from a zero
+    accumulator: the JVM :func:`norm` fold, bit for bit."""
+    sq = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        sq += X[:, i] * X[:, i]
+    return np.sqrt(sq)
+
+
+def _fold_cos(
+    A: np.ndarray, a_norm: np.ndarray, B: np.ndarray, b_norm: np.ndarray
+) -> np.ndarray:
+    """The ``(len(A), len(B))`` cosine block of two row sets with their
+    :func:`_fold_norms`. Each dot accumulates SEQUENTIALLY ACROSS
+    DIMENSIONS from a zero accumulator — the JVM :func:`dot` fold's
+    left-associated IEEE addition order, bit for bit (a BLAS matmul's
+    blocked summation differs in the last ulp) — so every element of a
+    block equals the same element of the unblocked matrix, and callers
+    can block both axes to bound their scratch."""
+    acc = np.zeros((len(A), len(B)))
+    for i in range(A.shape[1]):
+        acc += np.outer(A[:, i], B[:, i])
+    return acc / (a_norm[:, None] * b_norm[None, :])
+
+
 def _threshold_pairs(R: np.ndarray, threshold: float) -> tuple:
     """Index pairs ``(i, j)``, ``i < j``, of the rows of ``R`` whose
     cosine is >= ``threshold`` or NaN (``NaN >= t`` holds in Spark's
-    total order, which ranks NaN greatest). Dots and norms accumulate
-    SEQUENTIALLY ACROSS DIMENSIONS from a zero accumulator — the JVM
-    :func:`dot` fold's left-associated IEEE addition order, bit for bit
-    (a BLAS matmul's blocked summation differs in the last ulp) — in
-    ``_COGROUP_Q_BLOCK`` × ``_COGROUP_C_BLOCK`` blocks, so scratch stays
-    bounded and each cosine equals its unblocked value."""
-    n, dim = R.shape
-    rn = np.zeros(n)
-    for i in range(dim):
-        rn += R[:, i] * R[:, i]
-    rn = np.sqrt(rn)
+    total order, which ranks NaN greatest), scored by :func:`_fold_cos`
+    in ``_COGROUP_Q_BLOCK`` × ``_COGROUP_C_BLOCK`` blocks."""
+    n = len(R)
+    rn = _fold_norms(R)
     out_a, out_b = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
     for s in range(0, n, _COGROUP_Q_BLOCK):
         s1 = min(s + _COGROUP_Q_BLOCK, n)
         # blocks wholly left of the diagonal hold no i < j pair
         for c0 in range(s, n, _COGROUP_C_BLOCK):
             c1 = min(c0 + _COGROUP_C_BLOCK, n)
-            acc = np.zeros((s1 - s, c1 - c0))
-            for i in range(dim):
-                acc += np.outer(R[s:s1, i], R[c0:c1, i])
-            cos = acc / (rn[s:s1, None] * rn[None, c0:c1])
+            cos = _fold_cos(R[s:s1], rn[s:s1], R[c0:c1], rn[c0:c1])
             keep = (np.arange(s, s1)[:, None] < np.arange(c0, c1)[None, :]) & (
                 (cos >= threshold) | np.isnan(cos)
             )
@@ -1050,11 +1038,12 @@ MAX_QUERY_BATCH = 100_000
 
 
 def _collect_query_batch(
-    queries: DataFrame, id_col: str, vec_col: str, caller: str, alternative: str
+    queries: DataFrame, cols: tuple, caller: str, alternative: str
 ) -> list:
-    q_rows = (
-        queries.select(id_col, vec_col).limit(MAX_QUERY_BATCH + 1).collect()
-    )
+    """The ``cols`` of ``queries`` (id and vector first) collected to the
+    driver, limit-capped: past :data:`MAX_QUERY_BATCH` rows it raises
+    naming the distributed ``alternative``."""
+    q_rows = queries.select(*cols).limit(MAX_QUERY_BATCH + 1).collect()
     if len(q_rows) > MAX_QUERY_BATCH:
         raise ValueError(
             f"{caller} collects the query set to the driver (bounded "
@@ -1063,6 +1052,33 @@ def _collect_query_batch(
             "queries distributed end-to-end."
         )
     return q_rows
+
+
+def _batch_topk(
+    ids: np.ndarray,
+    sims: np.ndarray,
+    q_ids: np.ndarray,
+    n: int,
+    score: str,
+    allowed=None,
+) -> pd.DataFrame:
+    """The local cut of a ``mapInPandas`` scorer: for each query ``j``
+    the top ``n`` rows of one batch by (``sims[:, j]`` desc, batch
+    order), self matches on id excluded, plus ``allowed(j)`` (a row
+    mask) when given. Returns ``(query_id, neighbor_id, <score>)``; the
+    global :func:`_rank_cut` over every batch's rows finishes the
+    two-level top-k."""
+    out_q, out_n, out_s = [], [], []
+    for j, qid in enumerate(q_ids):
+        mask = ids != qid
+        if allowed is not None:
+            mask &= allowed(j)
+        cand = np.where(mask)[0]
+        top = cand[np.argsort(-sims[cand, j], kind="stable")[:n]]
+        out_q += [qid] * len(top)
+        out_n += list(ids[top])
+        out_s += list(sims[top, j])
+    return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, score: out_s})
 
 
 def brute_force_topk_pandas(
@@ -1083,10 +1099,8 @@ def brute_force_topk_pandas(
     BLAS factor; prefer it once the corpus is large and queries are
     batched.
     """
-    import pandas as pd
-
     q_rows = _collect_query_batch(
-        queries, id_col, vec_col, "brute_force_topk_pandas",
+        queries, (id_col, vec_col), "brute_force_topk_pandas",
         "brute_force_topk (broadcast join) or ivf_query_index_join",
     )
     q_ids = np.array([r[0] for r in q_rows])
@@ -1096,33 +1110,16 @@ def brute_force_topk_pandas(
     def score(batches):
         drop_zip_finders()
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
             c = np.array(list(pdf[vec_col]), dtype="float64")
             c /= np.linalg.norm(c, axis=1, keepdims=True)
-            sims = c @ q_mat.T  # (batch, n_queries)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand = np.where(mask)[0]
-                top = cand[np.argsort(-col[cand], kind="stable")[: k]]
-                out_q += [qid] * len(top)
-                out_n += list(ids[top])
-                out_s += list(col[top])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s}
-            )
+            # (batch, n_queries)
+            yield _batch_topk(pdf[id_col].to_numpy(), c @ q_mat.T, q_ids, k, "cos_sim")
 
     id_type = _col_type(corpus, id_col)
     scored = corpus.select(id_col, vec_col).mapInPandas(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_sim", 6).alias("cos_sim"), "rank")
-    )
+    return _topk_result(scored, k)
 
 
 def knn_classify(
@@ -1158,19 +1155,10 @@ def knn_classify(
     neighbors as an equi-join, then a per-id majority vote), which keep
     both sides distributed.
     """
-    seeds = (
-        labeled.select(id_col, vec_col, label_col)
-        .limit(MAX_QUERY_BATCH + 1)
-        .collect()
+    seeds = _collect_query_batch(
+        labeled, (id_col, vec_col, label_col), "knn_classify",
+        "a join serve (ivf_query_index_join / knn_graph) and a per-id majority vote",
     )
-    if len(seeds) > MAX_QUERY_BATCH:
-        raise ValueError(
-            "knn_classify collects the labeled seed set to the driver "
-            f"(bounded seed contract, <= {MAX_QUERY_BATCH} rows); for "
-            "corpus-sized labeled sets compute neighbors with a join "
-            "serve (ivf_query_index_join / knn_graph) and majority-vote "
-            "per id, which keeps the labeled side distributed."
-        )
     if not seeds:
         raise ValueError("labeled seed set is empty")
     s_ids = np.array([r[0] for r in seeds])
@@ -1178,11 +1166,8 @@ def knn_classify(
     s_mat = np.array([r[1] for r in seeds], dtype="float64")
     s_mat /= np.linalg.norm(s_mat, axis=1, keepdims=True)
     kk = min(k, len(seeds))
-    types = {f.name: f.dataType.simpleString() for f in unlabeled.schema.fields}
-    id_type = types[id_col]
-    label_type = {
-        f.name: f.dataType.simpleString() for f in labeled.schema.fields
-    }[label_col]
+    id_type = _col_type(unlabeled, id_col)
+    label_type = _col_type(labeled, label_col)
 
     def score(batches):
         drop_zip_finders()
@@ -1239,10 +1224,7 @@ def embedding_cross_neardup(
         dim = len(left.select(vec_col).limit(1).collect()[0][0])
     planes = _hyperplanes(dim, nbits)
     l = spread_narrow(
-        left.select(
-            F.col(id_col).alias("left_id"), _as_double(F.col(vec_col)).alias("lv")
-        ),
-        "left_id",
+        _keyed_vectors(left, id_col, vec_col, "left_id", "lv"), "left_id"
     ).withColumns(
         {
             "sig": hyperplane_signature(F.col("lv"), planes),
@@ -1250,10 +1232,7 @@ def embedding_cross_neardup(
         }
     ).localCheckpoint(eager=False)
     r = spread_narrow(
-        right.select(
-            F.col(id_col).alias("right_id"), _as_double(F.col(vec_col)).alias("rv")
-        ),
-        "right_id",
+        _keyed_vectors(right, id_col, vec_col, "right_id", "rv"), "right_id"
     ).withColumns(
         {
             "bucket": hyperplane_signature(F.col("rv"), planes),
@@ -1468,7 +1447,7 @@ def pq_topk(
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, n_codes, d_sub = cb.shape
     q_rows = _collect_query_batch(
-        queries, id_col, vec_col, "pq_topk", "ivfpq_query_index_join"
+        queries, (id_col, vec_col), "pq_topk", "ivfpq_query_index_join"
     )
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
@@ -1481,67 +1460,20 @@ def pq_topk(
     def score(batches):
         drop_zip_finders()
         for pdf in batches:
-            ids = pdf["id"].to_numpy()
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (b, m)
-            b = codes.shape[0]
             # gather: scores[i, j] = Σ_s lut[j, s, codes[i, s]]
             sims = lut[:, np.arange(m)[None, :], codes].sum(axis=2).T  # (b, nq)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                cand = np.where(ids != qid)[0]
-                top = cand[np.argsort(-col[cand], kind="stable")[:pool]]
-                out_q += [qid] * len(top)
-                out_n += list(ids[top])
-                out_s += list(col[top])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_score": out_s}
-            )
+            yield _batch_topk(pdf["id"].to_numpy(), sims, q_ids, pool, "adc_score")
 
     id_type = _col_type(codes_df, "id")
     scored = codes_df.mapInPandas(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, adc_score double"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= pool
-    )
     if rerank_with is None:
-        return ranked.select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_score", 6).alias("adc_score"),
-            "rank",
-        )
-    c = rerank_with.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    exact = (
-        ranked.select("query_id", "neighbor_id")
-        .join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim", cosine(F.col("qv"), F.col("cv"))
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+        return _topk_result(scored, pool, "adc_score")
+    cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id")
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+    return _topk_result(_exact_rerank(cands, rerank_with, id_col, vec_col, q), k)
 
 
 def ivfpq_topk(
@@ -1741,75 +1673,36 @@ def _ivfpq_rank(
     cent_hat = _normalized_rows(cent)
     if q_rows is None:
         q_rows = _collect_query_batch(
-            queries, id_col, vec_col, "ivfpq_topk", "ivfpq_query_index_join"
+            queries, (id_col, vec_col), "ivfpq_topk", "ivfpq_query_index_join"
         )
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
     lut = np.einsum("jsd,scd->jsc", q_mat.reshape(len(q_ids), m, d_sub), cb)
     bias = (q_mat @ cent_hat.T) if residual else None  # (nq, n_centroids)
-    probe = _ivfpq_probe(q_mat, cent, nprobe)  # (nq, nprobe)
-    probe_sets = [set(map(int, row)) for row in probe]
+    # probed[j, cid]: query j probes cell cid
+    probed = np.zeros((len(q_ids), len(cent)), dtype=bool)
+    probed[np.arange(len(q_ids))[:, None], _ivfpq_probe(q_mat, cent, nprobe)] = True
     pool = max(k, rerank_pool)
 
     def score(batches):
         drop_zip_finders()
         for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
+            cells = pdf["cell"].to_numpy().astype(np.int64)
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
             sims = lut[:, np.arange(m)[None, :], codes].sum(axis=2).T
             if bias is not None:
-                sims = sims + bias[:, cells.astype(np.int64)].T
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(q_ids):
-                mask = (ids != qid) & np.isin(
-                    cells, np.fromiter(probe_sets[j], dtype=np.int64)
-                )
-                cand = np.where(mask)[0]
-                top = cand[np.argsort(-sims[cand, j], kind="stable")[:pool]]
-                out_q += [qid] * len(top)
-                out_n += list(ids[top])
-                out_s += list(sims[top, j])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_score": out_s}
+                sims = sims + bias[:, cells].T
+            yield _batch_topk(
+                pdf["id"].to_numpy(), sims, q_ids, pool, "adc_score",
+                allowed=lambda j: probed[j, cells],
             )
 
     scored = encoded.select("id", "cell", "codes").mapInPandas(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, adc_score double"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= pool
-    )
-    c = rerank_corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    exact = (
-        ranked.select("query_id", "neighbor_id")
-        .join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cos_sim", cosine(F.col("qv"), F.col("cv"))
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id")
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+    return _topk_result(_exact_rerank(cands, rerank_corpus, id_col, vec_col, q), k)
 
 
 def build_ivfpq_index(
@@ -2024,7 +1917,7 @@ def ivfpq_query_index(
     # still expects (non-unit-norm queries diverge under the raw-vector
     # rule this replaced)
     q_rows = _collect_query_batch(
-        queries, id_col, vec_col, "ivfpq_query_index", "ivfpq_query_index_join"
+        queries, (id_col, vec_col), "ivfpq_query_index", "ivfpq_query_index_join"
     )
     q_mat = _normalized_rows(np.asarray([r[1] for r in q_rows], dtype=np.float64))
     probe_cells = sorted({int(c) for c in _ivfpq_probe(q_mat, cent, nprobe).ravel()})
@@ -2082,8 +1975,8 @@ def _cogroup_topk_scores(
     cells_s: DataFrame, qq: DataFrame, k: int, id_type: str
 ) -> DataFrame:
     """Per-(cell, salt) vectorized cosine scoring with an exact
-    per-group top-``k`` cut — the corpus-vs-corpus fast path of
-    :func:`ivf_query_index_join`.
+    per-group top-``k`` cut (:func:`_cogroup_topk_group`) — the
+    corpus-vs-corpus fast path of :func:`ivf_query_index_join`.
 
     The pair-join form evaluates the aggregate-HOF ``dot`` fold
     INTERPRETED per element per candidate pair (guide §4.1); for a
@@ -2093,31 +1986,11 @@ def _cogroup_topk_scores(
     same keys, and the same bytes, the salted equi-join already moved —
     and each group is scored as 64 vectorized numpy passes.
 
-    Exactness (the driver hash-gates these queries):
-
-    - dots and norms accumulate SEQUENTIALLY ACROSS DIMENSIONS
-      (``acc += Q[:,i] * C[:,i]``-style outer products from a zero
-      accumulator), which reproduces the JVM fold's left-associated
-      IEEE addition order bit-for-bit — NOT a BLAS matmul, whose
-      blocked summation differs in the last ulp;
-    - the per-group cut keeps the top ``k`` by the SAME total order the
-      downstream window uses (cos_sim desc, neighbor_id asc — total
-      because ids are unique), so the global window over the union of
-      group winners returns exactly the join path's rows (two-level
-      top-k), pinned by ``test_ivf_join_serve_vectorized_parity``;
-    - any group containing a non-finite cosine (zero-norm vector)
-      emits ALL its pairs instead of cutting, because numpy's NaN
-      ordering differs from the JVM window's NaN-first rule — the
-      downstream window then applies the JVM ordering to the full
-      group exactly as the join path would.
-
     Scale shape: one task per (cell, salt) group; group payload is the
     cell slice plus every query probing the cell (the quadratic stage
     IVF exists to bound — ``n_centroids`` must grow with the corpus,
-    the same contract the join path has). The accumulator is blocked at
-    ``_COGROUP_Q_BLOCK`` query rows so scratch memory stays flat.
+    the same contract the join path has).
     """
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
     _id_np = np.int64 if id_type in ("bigint", "int", "long", "smallint") else object
     empty = pd.DataFrame(
         {
@@ -2131,102 +2004,106 @@ def _cogroup_topk_scores(
         drop_zip_finders()
         if len(qpdf) == 0 or len(cpdf) == 0:
             return empty
-        # column order = neighbor_id ascending, so a STABLE argsort on
-        # -cos alone realizes the (cos desc, neighbor asc) total order
-        cpdf = cpdf.sort_values("neighbor_id", kind="stable")
-        Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64, copy=False)
-        C = np.stack(cpdf["cv"].to_numpy()).astype(np.float64, copy=False)
-        qids = qpdf["query_id"].to_numpy()
-        nids = cpdf["neighbor_id"].to_numpy()
-        dim = Q.shape[1]
-        qn = np.zeros(len(Q))
-        vn = np.zeros(len(C))
-        for i in range(dim):
-            qn += Q[:, i] * Q[:, i]
-            vn += C[:, i] * C[:, i]
-        qn = np.sqrt(qn)
-        vn = np.sqrt(vn)
-        def cos_chunk(Qb: np.ndarray, qb_n: np.ndarray, c0: int, c1: int):
-            # chunked cos values are BIT-IDENTICAL to the unchunked
-            # matrix's slices: each element accumulates the same scalar
-            # products over the same dim order and divides by the same
-            # per-element norm product
-            acc = np.zeros((len(Qb), c1 - c0))
-            for i in range(dim):
-                acc += np.outer(Qb[:, i], C[c0:c1, i])
-            return acc / (qb_n[:, None] * vn[None, c0:c1])
-
-        out_q, out_n, out_c = [], [], []
-        for s in range(0, len(Q), _COGROUP_Q_BLOCK):
-            Qb = Q[s : s + _COGROUP_Q_BLOCK]
-            qb_ids = qids[s : s + _COGROUP_Q_BLOCK]
-            qb_n = qn[s : s + _COGROUP_Q_BLOCK]
-            n_q = len(Qb)
-            kk = min(k + 1, len(C))  # +1 absorbs the self slot
-            # candidate axis blocked too (r16 advice): score C in
-            # chunks and merge per-row top-kk across chunks — stable
-            # argsort on the concat keeps the (cos desc, neighbor asc)
-            # total order because earlier chunks (lower neighbor ids,
-            # C is sorted by id) precede later ones in the concat
-            m_vals = np.zeros((n_q, 0))
-            m_cols = np.zeros((n_q, 0), dtype=np.int64)
-            nonfinite = False
-            for c0 in range(0, len(C), _COGROUP_C_BLOCK):
-                c1 = min(c0 + _COGROUP_C_BLOCK, len(C))
-                cos = cos_chunk(Qb, qb_n, c0, c1)
-                if not np.isfinite(cos).all():
-                    nonfinite = True
-                    break
-                cos_m = np.where(
-                    qb_ids[:, None] == nids[None, c0:c1], -np.inf, cos
-                )
-                t = min(kk, c1 - c0)
-                order = np.argsort(-cos_m, axis=1, kind="stable")[:, :t]
-                cat_v = np.concatenate(
-                    [m_vals, np.take_along_axis(cos_m, order, axis=1)], axis=1
-                )
-                cat_c = np.concatenate([m_cols, order + c0], axis=1)
-                sel = np.argsort(-cat_v, axis=1, kind="stable")[:, :kk]
-                m_vals = np.take_along_axis(cat_v, sel, axis=1)
-                m_cols = np.take_along_axis(cat_c, sel, axis=1)
-            if nonfinite:
-                # degenerate group (zero-norm / non-finite vector):
-                # emit ALL pairs, re-scoring chunk by chunk (rare path —
-                # the downstream window applies the JVM NaN-first rule)
-                for c0 in range(0, len(C), _COGROUP_C_BLOCK):
-                    c1 = min(c0 + _COGROUP_C_BLOCK, len(C))
-                    cos = cos_chunk(Qb, qb_n, c0, c1)
-                    keep = qb_ids[:, None] != nids[None, c0:c1]
-                    r, c = np.where(keep)
-                    out_q.append(qb_ids[r])
-                    out_n.append(nids[c0:c1][c])
-                    out_c.append(cos[keep])
-                continue
-            width = m_vals.shape[1]
-            rows = np.repeat(np.arange(n_q), width)
-            cols = m_cols.reshape(-1)
-            vals = m_vals.reshape(-1)
-            keep = np.isfinite(vals)
-            # trim past rank k among KEPT candidates per row (the +1
-            # slot only exists to absorb the self pair's -inf; when all
-            # k+1 are real candidates the last one must go)
-            kept_rank = np.cumsum(keep.reshape(n_q, width), axis=1).reshape(-1)
-            keep &= kept_rank <= k
-            out_q.append(qb_ids[rows[keep]])
-            out_n.append(nids[cols[keep]])
-            out_c.append(vals[keep])
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q) if out_q else [],
-                "neighbor_id": np.concatenate(out_n) if out_n else [],
-                "cos_sim": np.concatenate(out_c) if out_c else [],
-            }
-        )
+        return _cogroup_topk_group(qpdf, cpdf, k)
 
     return (
         qq.groupBy("cell", "__salt")
         .cogroup(cells_s.groupBy("cell", "__salt"))
-        .applyInPandas(score, schema=out_schema)
+        .applyInPandas(
+            score, schema=f"query_id {id_type}, neighbor_id {id_type}, cos_sim double"
+        )
+    )
+
+
+def _cogroup_topk_group(qpdf: pd.DataFrame, cpdf: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The top-``k`` ``(query_id, neighbor_id, cos_sim)`` rows of every
+    query of ``qpdf`` (``query_id``, ``qv``) against the candidates of
+    ``cpdf`` (``neighbor_id``, ``cv``), self pairs excluded — the local
+    cut of a two-level top-k. Exactness (the oracle tests hash these
+    results):
+
+    - cosines come from :func:`_fold_cos`, bit-identical to the JVM fold;
+    - the cut keeps the top ``k`` by the SAME total order the downstream
+      :func:`_rank_cut` uses (cos_sim desc, neighbor_id asc), so the
+      global cut over the union of group winners returns exactly the
+      join path's rows, pinned by ``test_ivf_join_serve_vectorized_parity``;
+    - a query block meeting a non-finite cosine (zero-norm vector) emits
+      ALL its pairs instead of cutting, because numpy's NaN ordering
+      differs from the JVM window's NaN-first rule — the downstream cut
+      then orders the full block exactly as the join path would.
+
+    Both axes are blocked (``_COGROUP_Q_BLOCK`` queries ×
+    ``_COGROUP_C_BLOCK`` candidates) so scratch memory stays flat; the
+    per-row top-``k`` merges across candidate blocks."""
+    # column order = neighbor_id ascending, so a STABLE argsort on
+    # -cos alone realizes the (cos desc, neighbor asc) total order
+    cpdf = cpdf.sort_values("neighbor_id", kind="stable")
+    Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64, copy=False)
+    C = np.stack(cpdf["cv"].to_numpy()).astype(np.float64, copy=False)
+    qids = qpdf["query_id"].to_numpy()
+    nids = cpdf["neighbor_id"].to_numpy()
+    qn = _fold_norms(Q)
+    vn = _fold_norms(C)
+    kk = min(k + 1, len(C))  # +1 absorbs the self slot
+    c_blocks = [
+        (c0, min(c0 + _COGROUP_C_BLOCK, len(C)))
+        for c0 in range(0, len(C), _COGROUP_C_BLOCK)
+    ]
+    out_q, out_n, out_c = [], [], []
+    for s in range(0, len(Q), _COGROUP_Q_BLOCK):
+        Qb = Q[s : s + _COGROUP_Q_BLOCK]
+        qb_ids = qids[s : s + _COGROUP_Q_BLOCK]
+        qb_n = qn[s : s + _COGROUP_Q_BLOCK]
+        n_q = len(Qb)
+        # merge per-row top-kk across candidate blocks — stable argsort
+        # on the concat keeps the (cos desc, neighbor asc) total order
+        # because earlier blocks (lower neighbor ids) precede later ones
+        m_vals = np.zeros((n_q, 0))
+        m_cols = np.zeros((n_q, 0), dtype=np.int64)
+        nonfinite = False
+        for c0, c1 in c_blocks:
+            cos = _fold_cos(Qb, qb_n, C[c0:c1], vn[c0:c1])
+            if not np.isfinite(cos).all():
+                nonfinite = True
+                break
+            cos_m = np.where(qb_ids[:, None] == nids[None, c0:c1], -np.inf, cos)
+            order = np.argsort(-cos_m, axis=1, kind="stable")[:, : min(kk, c1 - c0)]
+            top_v = np.take_along_axis(cos_m, order, axis=1)
+            cat_v = np.concatenate([m_vals, top_v], axis=1)
+            cat_c = np.concatenate([m_cols, order + c0], axis=1)
+            sel = np.argsort(-cat_v, axis=1, kind="stable")[:, :kk]
+            m_vals = np.take_along_axis(cat_v, sel, axis=1)
+            m_cols = np.take_along_axis(cat_c, sel, axis=1)
+        if nonfinite:
+            # degenerate block: emit ALL its pairs, re-scoring block by
+            # block (rare path)
+            for c0, c1 in c_blocks:
+                cos = _fold_cos(Qb, qb_n, C[c0:c1], vn[c0:c1])
+                keep = qb_ids[:, None] != nids[None, c0:c1]
+                r, c = np.where(keep)
+                out_q.append(qb_ids[r])
+                out_n.append(nids[c0:c1][c])
+                out_c.append(cos[keep])
+            continue
+        width = m_vals.shape[1]
+        rows = np.repeat(np.arange(n_q), width)
+        cols = m_cols.reshape(-1)
+        vals = m_vals.reshape(-1)
+        keep = np.isfinite(vals)
+        # trim past rank k among KEPT candidates per row (the +1 slot
+        # only exists to absorb the self pair's -inf; when all k+1 are
+        # real candidates the last one must go)
+        kept_rank = np.cumsum(keep.reshape(n_q, width), axis=1).reshape(-1)
+        keep &= kept_rank <= k
+        out_q.append(qb_ids[rows[keep]])
+        out_n.append(nids[cols[keep]])
+        out_c.append(vals[keep])
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "cos_sim": np.concatenate(out_c),
+        }
     )
 
 
@@ -2282,13 +2159,11 @@ def ivf_query_index_join(
       per-query window, exactly the collect path's cut.
 
     SQ8 layouts quantize the query side with the same
-    :func:`scalar_quantize` expressions (distributed, not collected);
+    :func:`_sq8` expressions (distributed, not collected);
     pass ``rerank_corpus`` to recover exactness as in
     :func:`ivf_query_index`."""
     cent_mat = _read_centroids(spark, path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn(
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
         "cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv")))
     )
     cells = spark.read.parquet(f"{path}/cells")
@@ -2313,25 +2188,9 @@ def ivf_query_index_join(
         # (the cogrouped path re-shuffles by (cell, salt) anyway — an
         # extra spread exchange would be pure waste there)
         cells = cells.repartition(target, F.col("vec_id"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     if "qvec" in cells.columns:  # SQ8 layout
-        qvec = F.col("qv")
-        amax = F.array_max(F.transform(qvec, lambda x: F.abs(x)))
-        qscale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
         qq = _replicated(
-            q.select(
-                "query_id",
-                "qv",
-                "cell",
-                F.transform(
-                    qvec, lambda x: F.round(x / qscale).cast("int")
-                ).alias("q_qvec"),
-                qscale.alias("q_scale"),
-                norm(qvec).alias("q_vnorm"),
-            ),
-            salt,
+            q.select("query_id", "qv", "cell", *_sq8(F.col("qv"), "int", "q_")), salt
         )
         approx = (
             _salted(cells, "vec_id", salt)
@@ -2343,22 +2202,10 @@ def ivf_query_index_join(
         if rerank_corpus is None:
             scored = approx.withColumn("cos_sim", F.col("approx_cos"))
         else:
-            n_cand = rerank or 10 * k
-            w_a = W.partitionBy("query_id").orderBy(
-                F.col("approx_cos").desc(), F.col("neighbor_id")
+            cands = _rank_cut(approx, "approx_cos", rerank or 10 * k).select(
+                "neighbor_id", "query_id", "qv"
             )
-            cands = (
-                approx.withColumn("arank", F.row_number().over(w_a))
-                .where(F.col("arank") <= n_cand)
-                .select("neighbor_id", "query_id", "qv")
-            )
-            exact_c = rerank_corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                _as_double(F.col(vec_col)).alias("cv"),
-            )
-            scored = cands.join(exact_c, "neighbor_id").withColumn(
-                "cos_sim", cosine(F.col("qv"), F.col("cv"))
-            )
+            scored = _exact_rerank(cands, rerank_corpus, id_col, vec_col)
     elif not prune_cells:
         # corpus-vs-corpus serve (knn_graph: every cell probed, the
         # query side is corpus-sized) — score per (cell, salt) GROUP
@@ -2410,16 +2257,7 @@ def ivf_query_index_join(
                 / (F.col("__qn") * F.col("__vn")),
             )
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _topk_result(scored, k)
 
 
 def ivfpq_query_index_join(
@@ -2472,9 +2310,9 @@ def ivfpq_query_index_join(
                 list(_ivfpq_probe(qm, cent, nprobe).astype(np.int32))
             )
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("cell", F.explode(probe_udf(F.col("qv"))))
+    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
+        "cell", F.explode(probe_udf(F.col("qv")))
+    )
     encoded = spark.read.parquet(f"{path}/cells")
     if prune_cells and nprobe < len(cent):  # fullprobe reads every cell
         probe_cells = sorted(
@@ -2517,35 +2355,8 @@ def ivfpq_query_index_join(
             "adc_score", adc_udf(F.col("qv"), F.col("codes"), F.col("cell"))
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id")
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= pool
-    )
-    c = rerank_corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    exact = (
-        ranked.select("query_id", "neighbor_id", "qv")
-        .join(c, "neighbor_id")
-        .withColumn(
-            "cos_sim", cosine(F.col("qv"), F.col("cv"))
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id", "qv")
+    return _topk_result(_exact_rerank(cands, rerank_corpus, id_col, vec_col), k)
 
 
 def knn_graph(

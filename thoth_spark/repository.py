@@ -36,8 +36,11 @@ from __future__ import annotations
 import os
 from abc import ABC, abstractmethod
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 _METRICS_SCHEMA = (
     "dataset_uri string, ts timestamp, granularity string, entity string,"
@@ -103,6 +106,15 @@ class RepositoryPort(ABC):
     def _decode_dataset(self, row) -> dict:
         return row.asDict()
 
+    def _local_frame(self, rows: list[tuple], schema: str) -> DataFrame:
+        """Driver-side ``rows`` as a local relation, built through Arrow
+        as ``service._scored`` builds its scores: a frame made from a
+        list of tuples is a Python RDD, and every job that reads it
+        starts Python tasks."""
+        arrow = to_arrow_schema(StructType.fromDDL(schema))
+        table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], arrow)
+        return self.spark.createDataFrame(table, schema)
+
     # -- dataset registry ------------------------------------------------------
 
     def registry_exists(self) -> bool:
@@ -125,7 +137,7 @@ class RepositoryPort(ABC):
             if r["dataset_uri"] != dataset_uri
         ]
         rows.append(self._encode_dataset(dataset_uri, ts_column, columns, granularity))
-        self._write_registry(self.spark.createDataFrame(rows, self._REGISTRY_SCHEMA))
+        self._write_registry(self._local_frame(rows, self._REGISTRY_SCHEMA))
 
     def get_dataset(self, dataset_uri: str) -> dict | None:
         rows = (
@@ -295,7 +307,7 @@ class MetricsRepository(RepositoryPort):
 
     def _read(self, table: str, schema: str) -> DataFrame:
         if not self._exists(table):
-            return self.spark.createDataFrame([], schema)
+            return self._local_frame([], schema)
         return self.spark.read.schema(schema).parquet(self._path(table))
 
     def _exists(self, table: str) -> bool:

@@ -147,7 +147,7 @@ class JdbcMetricsRepository(RepositoryPort):
 
     def _read(self, table: str, schema: str) -> DataFrame:
         df = self._load(table)
-        expected = self.spark.createDataFrame([], schema)
+        expected = self._local_frame([], schema)
         if df is None:
             return expected
         return df.select(

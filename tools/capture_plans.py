@@ -8,12 +8,19 @@ the query function returns — the exact frame the bench times through the
 noop sink. Queries whose build runs eager work (index builds, streaming
 foreachBatch replays, driver-bounded collects) pay that work here too;
 the captured plan is still the final frame's.
+
+Each plan is normalized before it is written (:func:`normalize`):
+expression ids (``#123``), exchange plan ids and the random suffixes
+of the temporary index directories change from run to run, so without
+the rewrite two captures of the same code never diff clean.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,6 +34,21 @@ def plan_string(df) -> str:
     jvm = df.sparkSession._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return jdf.queryExecution().explainString(mode)
+
+
+_TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/([A-Za-z_]*?_)[a-z0-9_]{8}\b")
+_RUN_SPECIFIC = [
+    (re.compile(r"#\d+"), "#"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),  # exchange ids
+    (_TMP_DIR, r"<tmp>/\1*"),  # mkdtemp index / staging directories
+]
+
+
+def normalize(text: str) -> str:
+    """``text`` with every run-specific token replaced by a fixed one."""
+    for pattern, repl in _RUN_SPECIFIC:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def main() -> None:
@@ -46,7 +68,7 @@ def main() -> None:
             failures[name] = f"{type(exc).__name__}: {exc}"[:300]
             continue
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(text)
+            fh.write(normalize(text))
         spark.catalog.clearCache()
     if failures:
         for n, e in failures.items():
