@@ -1,10 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query catalogue contract (PySpark target).
 
 ``entry(spark)`` runs the flagship one-pass profiling query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2 (plus
-the net-new scale operators) as ``(spark, sf_dir) -> DataFrame``;
-``oracle_sql()`` gives the DuckDB-equivalent SQL for each (omitted only
-for genuinely non-SQL-expressible ops, which get rows-only checks).
+the net-new scale operators) as ``(spark, sf_dir) -> DataFrame``, in
+registration order; ``oracle_sql()`` gives the DuckDB-equivalent SQL for
+each (omitted only for genuinely non-SQL-expressible ops, which get
+rows-only checks). ``tests/test_entry_oracle.py`` runs both sides and
+compares them.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return entry_queries.ordered_queries()
+    return dict(entry_queries.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

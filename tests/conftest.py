@@ -9,75 +9,17 @@ from thoth_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("THOTH_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-#: Fast default profile (r16 verdict item 2): the full suite outgrew the
-#: driver's verify window (39.5 min on this box; the r16 driver verify
-#: was killed at ~82% and recorded ``tests_ok: false`` with ZERO failing
-#: tests). Every test below measured >= ~8 s in the committed full run
-#: (/tmp durations, 2026-08-18) — together 21.5 of the 39.5 minutes — and
-#: is skipped by default so ``pytest tests/`` completes inside the verify
-#: window. ``THOTH_SPARK_FULL_TESTS=1 pytest tests/`` runs everything
-#: (the profile the round protocol uses before shipping operator
-#: changes); the skipped set is deep-equivalence pins and e2e flows whose
-#: correctness surface the driver's own oracle gate also covers.
-_SLOW_TESTS = frozenset(
-    [
-        "test_operators.py::test_ivfpq_index_append_equals_full_build",
-        "test_operators.py::test_ivfpq_index_join_serve_matches_collect_path",
-        "test_streaming.py::test_index_ingest_foreach_batch_continuous_append",
-        "test_operators.py::test_curation_pipeline_example_waterfall",
-        "test_operators.py::test_ann_serving_example",
-        "test_skew.py::test_c4_span_dedup_boilerplate_span_skew",
-        "test_operators.py::test_ivfpq_index_roundtrip",
-        "test_operators.py::test_ivfpq_index_non_unit_norm_queries",
-        "test_operators.py::test_ivf_index_compact_preserves_serves",
-        "test_entry_oracle.py::test_rows_only_query_runs[c4_span_dedup_incremental_documents]",
-        "test_operators.py::test_ivf_index_join_serve_matches_collect_path",
-        "test_plans.py::test_ann_join_serve_query_side_stays_distributed",
-        "test_operators.py::test_ivf_index_append_equals_full_build",
-        "test_operators.py::test_ivfpq_residual_beats_global_adc",
-        "test_property.py::test_nb_label_flip_negates_log_odds",
-        "test_entry_oracle.py::test_query_matches_oracle[similarity_topk_ivfpq_index_append_fullprobe]",
-        "test_entry_oracle.py::test_query_matches_oracle[leakage_safe_split_documents]",
-        "test_operators.py::test_ivfpq_residual_fullprobe_equals_brute",
-        "test_streaming.py::test_interval_join_stream_left_outer_emits_unmatched",
-        "test_entry_oracle.py::test_query_matches_oracle[similarity_topk_ivfpq_index]",
-        "test_operators.py::test_range_join_equals_theta_join",
-        "test_property.py::test_connected_components_matches_union_find",
-        "test_property.py::test_leakage_safe_split_invariants",
-        "test_service.py::test_public_api_parity_flow",
-        "test_property.py::test_bpe_train_matches_reference_on_random_corpora",
-        "test_streaming.py::test_span_dedup_stream_keep_first_across_micro_batches",
-        "test_operators.py::test_pagerank_matches_numpy_power_iteration",
-        "test_entry_oracle.py::test_query_matches_oracle[dedup_minhash_components]",
-        "test_entry_oracle.py::test_query_matches_oracle[dedup_quality_survivors_documents]",
-        "test_entry_oracle.py::test_rows_only_query_runs[accuracy_study_events]",
-        "test_operators.py::test_ann_index_drift_triggered_retrain",
-        "test_operators.py::test_ivf_join_serve_vectorized_parity",
-        "test_service.py::test_e2e_flow_through_standalone_wrappers[parquet]",
-        "test_anomaly.py::test_golden_score_pred4_ape02",
-        "test_operators.py::test_semdedup_auto_n_clusters_scales_with_corpus",
-        "test_entry_oracle.py::test_query_matches_oracle[knn_graph_embeddings]",
-        "test_entry_oracle.py::test_query_matches_oracle[similarity_topk_ivf_index_append_fullprobe]",
-        "test_streaming.py::test_interval_join_stream_across_micro_batches",
-        "test_operators.py::test_simhash_candidate_fanout_bounded",
-        "test_entry_oracle.py::test_query_matches_oracle[multimodal_decode_real]",
-        "test_property.py::test_bloom_membership_invariants",
-        "test_anomaly.py::test_optimize_threshold_grid_and_floor",
-        "test_service.py::test_e2e_flow_with_anomaly[parquet]",
-        "test_property.py::test_corpus_diff_invariants",
-        "test_skew.py::test_ann_join_serve_degenerate_single_cell_is_salted",
-        "test_operators.py::test_span_index_compact_preserves_dedup",
-        "test_service.py::test_e2e_flow_through_standalone_wrappers[jdbc]",
-        "test_operators.py::test_ivf_index_quantized_rerank_matches_quantized_topk",
-        "test_property.py::test_passage_dedup_invariants",
-        "test_entry_oracle.py::test_query_matches_oracle[repository_roundtrip_jdbc]",
-        "test_entry_oracle.py::test_query_matches_oracle[dedup_lsh_eval]",
-        "test_skew.py::test_components_giant_clique_and_long_chain",
-        "test_entry_oracle.py::test_query_matches_oracle[classifier_quality_accuracy_bound]",
-        "test_entry_oracle.py::test_query_matches_oracle[multimodal_audio_neardup]",
-        "test_streaming.py::test_span_dedup_stream_retry_is_idempotent",
-    ]
-)
+# Two profiles. ``pytest tests/`` is the fast profile: it skips every
+# test marked ``slow`` (deep-equivalence pins, e2e flows and oracle ids
+# whose call phase took 8 s or more). ``THOTH_SPARK_FULL_TESTS=1``
+# runs them too, and must pass before any operator change ships; add
+# ``-m slow`` to run only the slow profile.
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: skipped unless THOTH_SPARK_FULL_TESTS is set"
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -87,7 +29,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow profile — run with THOTH_SPARK_FULL_TESTS=1"
     )
     for item in items:
-        if f"{item.fspath.basename}::{item.name}" in _SLOW_TESTS:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
 
 

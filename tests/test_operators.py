@@ -2108,6 +2108,7 @@ def test_pagerank_uniform_cycle(spark):
         assert abs(v - 1.0) < 1e-6
 
 
+@pytest.mark.slow
 def test_pagerank_matches_numpy_power_iteration(spark):
     """Exact parity with a dense numpy power iteration (same damping,
     same dangling handling) on a small asymmetric graph with a dangling
@@ -2365,6 +2366,7 @@ def test_quality_survivors_matches_bruteforce_reference(spark):
     assert got == expected
 
 
+@pytest.mark.slow
 def test_curation_pipeline_example_waterfall(spark, tmp_path):
     """The showcase pipeline (examples/curation_pipeline.py: quality
     filter -> Bloom decontamination -> passage dedup -> quality-aware
@@ -2468,6 +2470,7 @@ def test_curation_pipeline_example_waterfall(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_ann_serving_example(spark, tmp_path):
     """The ANN-serving showcase (examples/ann_serving.py: build
     persisted IVF-PQ -> pruned serve -> incremental float-index append
@@ -3003,6 +3006,7 @@ def test_ivf_query_index_leaves_no_block_behind(spark, tmp_path):
     assert rdds_after - rdds == set() and cached_after == cached
 
 
+@pytest.mark.slow
 def test_ivfpq_index_roundtrip(spark, tmp_path):
     """Persisted IVF-PQ layout (cells = PQ codes partitionBy(cell) +
     centroids + codebooks + meta): query-from-index equals in-memory
@@ -3646,6 +3650,7 @@ def test_ivfpq_residual_fullprobe_equals_brute(spark):
     )
 
 
+@pytest.mark.slow
 def test_ivfpq_residual_beats_global_adc(spark):
     """Clustered data with SHARED low-rank within-cell structure (the
     covariance shape real embedding corpora have): global PQ codes
@@ -3753,6 +3758,7 @@ def test_ivf_join_serve_vectorized_parity(spark, tmp_path):
         assert fr == rr, (nprobe, k)
 
 
+@pytest.mark.slow
 def test_ivfpq_index_join_serve_matches_collect_path(spark, tmp_path):
     """The IVF-PQ join serve (probe rule, ADC association, and rerank
     contract shared with the collect path) must match it row-for-row on
@@ -3913,6 +3919,7 @@ def test_bm25_multi_guards_corpus_sized_query_terms(spark, monkeypatch):
     assert sorted(map(tuple, degraded.collect())) == rows
 
 
+@pytest.mark.slow
 def test_ivfpq_index_append_equals_full_build(spark, tmp_path):
     """r13: the PQ index gets the same O(batch) nightly-ingest shape as
     the float/SQ8 one — build on half the corpus, append the other half

@@ -5,6 +5,7 @@ property-based coverage — SURVEY §5.)"""
 import datetime
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -142,6 +143,7 @@ def test_passage_dedup_invariants(spark, docs):
         assert out2[len(docs)]["n_kept"] == 0
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(seed=st.integers(min_value=0, max_value=10_000))
 def test_nb_label_flip_negates_log_odds(spark, seed):
@@ -226,6 +228,7 @@ def test_weighted_sample_invariants(spark, weights, n):
     assert got == again
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     edges=st.lists(
@@ -301,6 +304,7 @@ def test_bm25_score_invariants(spark, docs):
         assert r["score"] > 0 and r["n_terms_matched"] >= 1
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     edges=st.lists(
@@ -388,6 +392,7 @@ words_corpora = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(docs=words_corpora)
 def test_bpe_train_matches_reference_on_random_corpora(spark, docs):
@@ -416,6 +421,7 @@ def test_bpe_train_matches_reference_on_random_corpora(spark, docs):
         assert counts[i] == sum(len(vocab[w]) for w in toks)
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     keys=st.lists(st.text(alphabet="xyz01", min_size=1, max_size=8), min_size=1, max_size=30),

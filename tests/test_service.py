@@ -269,12 +269,15 @@ def test_service_flows_release_cached_frames(spark, events_df, repo):
     and the persisted RDDs (cached frames' and checkpoints' blocks) as
     they found them."""
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    persistent_rdds = spark.sparkContext._jsc.getPersistentRDDs
+    jsc = spark.sparkContext._jsc
     last_day = datetime.datetime(2024, 1, 30)
     history = events_df.where(F.col("ts") < F.lit(last_day)).select("ts", "value")
     new_batch = events_df.where(F.col("ts") >= F.lit(last_day)).select("ts", "value")
+    events_df.count()  # the session fixture's cache is not the flows' block
     before = cache_manager.numCachedEntries()
-    rdds_before = persistent_rdds().size()
+    # RDD ids, not a count: the ContextCleaner may drop an earlier
+    # test's checkpoint while this one runs
+    rdds_before = set(jsc.getPersistentRDDs().keySet())
 
     profile_create_optimize(
         history,
@@ -293,7 +296,7 @@ def test_service_flows_release_cached_frames(spark, events_df, repo):
             profiling_builder=SimpleProfilingBuilder(),
         )
     assert cache_manager.numCachedEntries() == before
-    assert persistent_rdds().size() == rdds_before
+    assert set(jsc.getPersistentRDDs().keySet()) - rdds_before == set()
 
 
 def test_same_ts_reassessment_in_another_python_time_zone(spark, events_df, repo):

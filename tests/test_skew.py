@@ -10,6 +10,7 @@ recorded in SCALE.md §skew.
 import datetime
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from thoth_spark.operators import curation, dedup, relational
@@ -800,6 +801,7 @@ def test_gopher_repetition_verdict_mega_document_skew(spark):
     assert wall < 180, f"mega-doc verdict took {wall:.1f}s"
 
 
+@pytest.mark.slow
 def test_c4_span_dedup_boilerplate_span_skew(spark):
     """r16: the span-dedup hot key. A boilerplate 3-sentence span shared
     by ALL 2k docs makes one `h` group huge in the keeper aggregate and

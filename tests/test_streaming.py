@@ -319,6 +319,7 @@ def test_interval_join_stream_across_micro_batches(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
+@pytest.mark.slow
 def test_interval_join_stream_left_outer_emits_unmatched(spark, tmp_path):
     """left_outer semantics: purchases with no click in their window
     must emit null-joined — but only after the watermark passes their
@@ -406,6 +407,7 @@ def test_chi2_foreach_batch_matches_batch(spark, sf_dir):
     assert got == expected and len(got) > 0
 
 
+@pytest.mark.slow
 def test_index_ingest_foreach_batch_continuous_append(spark, tmp_path):
     """r13 streaming twin of the nightly index ingest: vectors arrive
     as a file stream (maxFilesPerTrigger=1, so each file is its own

@@ -1,4 +1,4 @@
-"""Driver-contract queries: every operator exposed as
+"""The query catalogue: every operator exposed as
 ``(spark, sf_dir) -> DataFrame`` with a matching DuckDB oracle SQL.
 
 Conventions that make the hash-compare deterministic across engines:
@@ -66,91 +66,6 @@ KEY = ["entity", "instance", "name"]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-# The driver's correctness gate checks the first 50 ``queries()``
-# entries, so this list is exactly the 50-slot ROUND-18 window. Rotation
-# policy: minimize the maximum staleness of any catalogue query's last
-# STRICT driver-green (hash_match is True) row, with never-verified
-# oracled queries outranking everything (round 5 proved the local gate
-# can pass what the driver's typed hash fails). Composition, derived
-# from CORRECTNESS_r01-r17 (regenerate with ``python tools/staleness.py``):
-# (a) the 49 queries whose last strict driver-green is r13 or earlier —
-#     past the 4-round staleness horizon once CORRECTNESS_r17 landed, so
-#     ALL are MANDATORY;
-# (b) the single remaining slot goes to the oldest r14 cohort member
-#     (alphabetical first), pre-rotating it before that cohort's
-#     crunch. No oracle is never-green, and the queued incremental
-#     span-dedup oracle stays queued: wiring it needs a free slot.
-# tests/test_entry_oracle.py::test_driver_window_rotation enforces a
-# staleness invariant over this list that stays green across round
-# boundaries (it compares against the PRIOR round's recorded window,
-# never the file the current round just produced).
-DRIVER_PRIORITY: list[str] = [
-    # (a) last strict driver-green r13 or earlier — all 49 mandatory
-    "anomaly_ar1_validation",
-    "anomaly_holt_validation",
-    "asof_join_purchase_click",
-    "bm25_multiquery_documents",
-    "bm25_topk_documents",
-    "chunk_documents",
-    "classifier_nb_documents",
-    "cluster_balanced_sample_embeddings",
-    "dedup_ngram_jaccard_capped",
-    "dedup_ngram_jaccard_documents",
-    "dedup_simhash_documents",
-    "dedup_simhash_pairs_documents",
-    "domain_cap_sample_documents",
-    "embedding_dedup_components",
-    "embedding_neardup_lsh",
-    "knn_graph_embeddings",
-    "line_dedup_none_documents",
-    "multimodal_decode_real",
-    "ngram_decontaminate_documents",
-    "pack_documents",
-    "perplexity_documents",
-    "profile_events_extended",
-    "profile_events_gap_fill",
-    "profile_events_hourly_size",
-    "profile_events_inferred_types",
-    "profile_events_minmax_sum",
-    "profile_events_quarterly",
-    "profile_events_weekly",
-    "psi_drift_events",
-    "quality_assessment_events",
-    "range_join_transit_orders",
-    "repository_roundtrip_jdbc",
-    "repository_roundtrip_profiling",
-    "similarity_topk_ivf_index_join_serve",
-    "similarity_topk_ivfpq_index_append_fullprobe",
-    "similarity_topk_ivfpq_index_join_serve",
-    "similarity_topk_lsh",
-    "similarity_topk_quantized",
-    "streaming_dedup_events",
-    "streaming_sketch_rollup_events",
-    "streaming_watermark_profile_events",
-    "tpch_q15_top_supplier",
-    "tpch_q18_large_volume_customer",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q6_forecast_revenue",
-    "viz_forecast_interval_events",
-    "viz_score_band_events",
-    "viz_series_events",
-    # (b) last strict driver-green r14
-    "anomaly_fixed_changepoint_validation",
-]
-
-
-def ordered_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration dict reordered so driver-priority names come first."""
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in DRIVER_PRIORITY:
-        if name in QUERIES:
-            out[name] = QUERIES[name]
-    for name, fn in QUERIES.items():
-        out.setdefault(name, fn)
-    return out
-
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
@@ -8657,7 +8572,7 @@ def dedup_containment_survivors(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 # Gopher quality-rule signal CTE, shared by the batch oracle and the
-# streaming twin's queued replay (the two must never drift apart) —
+# streaming twin's replay (the two must never drift apart) —
 # thresholds are applied to the ROUNDED signal columns because the
 # operator compares after round(…, 6), making the verdict a pure
 # function of the emitted row.
@@ -9375,7 +9290,7 @@ def _c4_lined_corpus(docs):
     return docs.select("doc_id", text.alias("text"))
 
 
-@query("c4_span_dedup_documents", ORACLE_C4_SPAN_DEDUP)  # wired r16 (queued r15)
+@query("c4_span_dedup_documents", ORACLE_C4_SPAN_DEDUP)
 def c4_span_dedup_documents(spark, sf_dir):
     """C4's exact span deduplication (dedup.c4_span_dedup, r15): the
     globally FIRST occurrence of any duplicated 3-sentence span
@@ -9383,7 +9298,7 @@ def c4_span_dedup_documents(spark, sf_dir):
     of the C4 recipe next to c4_rules. The fixture has no punctuation,
     so the query derives a 3-pseudo-sentence corpus (8-word sentences)
     and PREPENDS a fixed shared 3-sentence phrase to every fifth doc —
-    the same expression in the queued oracle — so the dedup genuinely
+    the same expression in the oracle — so the dedup genuinely
     fires: the smallest doc_id % 5 == 0 doc keeps the phrase, every
     other fifth doc loses exactly those three sentences (plus whatever
     organic duplicate spans the derived corpus carries — the oracle
@@ -9394,7 +9309,7 @@ def c4_span_dedup_documents(spark, sf_dir):
     )
 
 
-@query("c4_span_dedup_incremental_documents")  # oracle queued (r17 slot)
+@query("c4_span_dedup_incremental_documents", ORACLE_C4_SPAN_DEDUP)
 def c4_span_dedup_incremental_documents(spark, sf_dir):
     """Incremental keep-first span dedup against the persisted span-hash
     index (dedup.c4_span_dedup_incremental, r16): the SAME derived
@@ -9403,9 +9318,9 @@ def c4_span_dedup_incremental_documents(spark, sf_dir):
     span batches 1..N already ingested, plus its own earlier
     occurrences. Under ascending arrival the arrival-first keeper IS
     the global (id, pos) keeper, so the union of the three per-batch
-    outputs must equal one batch c4_span_dedup run — the queued oracle
+    outputs must equal one batch c4_span_dedup run — the oracle
     is therefore the same global-replay SQL, and a drift between the
-    incremental path and the batch path hash-fails the gate. The range
+    incremental path and the batch path fails the oracle gate. The range
     split is derived from the id span (a 2-scalar driver collect), so
     the batches are deterministic at every sf."""
     lined = _c4_lined_corpus(_documents(spark, sf_dir))
@@ -9433,26 +9348,3 @@ def c4_span_dedup_incremental_documents(spark, sf_dir):
             F.col("id").alias("doc_id"), "text", "n_sentences", "n_removed"
         )
     )
-
-
-# --- oracle queue -----------------------------------------------------
-# Pre-written exact-replay oracles for queries whose wiring must wait for
-# driver-window headroom (an oracled query must be scheduled the round it
-# lands, and never-green ⊆ window is enforced by
-# test_driver_window_rotation). Wiring one = move its SQL into the @query
-# decorator, DELETE its entry here, and add the name to DRIVER_PRIORITY.
-# Until then tests/test_entry_oracle.py::test_queued_oracle_matches runs
-# every pair through the SAME typed compare as the wired gate, so the
-# queue cannot rot between rounds. The 18 r10-queued oracles were wired
-# in round 11 after the staleness horizon widened from 3 to 4 recorded
-# rounds (capacity 50×4 = 200 ≥ 168 wired oracles).
-QUEUED_ORACLES: dict[str, str] = {
-    # r16: the incremental span dedup landed with the r16 window already
-    # committed (49 r12-stale mandatory + the r15-queued batch span
-    # dedup). r17 arithmetic (fixed in the DRIVER_PRIORITY comment): the
-    # 49-query r13 cohort is mandatory + this wiring = 50 exactly, so
-    # this is the ONLY oracle r16 may queue. Ascending-id batches make
-    # the incremental keeper the global (id, pos) keeper, so the exact
-    # batch-replay SQL is the oracle.
-    "c4_span_dedup_incremental_documents": ORACLE_C4_SPAN_DEDUP,
-}

@@ -141,54 +141,12 @@ def decode_real(df: DataFrame, media_col: str = "content") -> DataFrame:
     return decode(df, pil_decoder, media_col)
 
 
-#: audio metadata schema (see wav_decoder)
-AUDIO_META_SCHEMA = (
-    "media_md5 string, media_bytes bigint, sample_rate int, n_channels int,"
-    " n_samples bigint, duration_ms bigint, rms double"
-)
-
 #: image metadata schema with per-channel stats (see ppm_decoder)
 IMAGE_META_SCHEMA = (
     "media_md5 string, media_bytes bigint, width int, height int,"
     " n_channels int, format string, mean_r double, mean_g double,"
     " mean_b double, mean_gray double"
 )
-
-
-def wav_decoder(blobs: pd.Series) -> pd.DataFrame:
-    """REAL audio decode for PCM WAV — stdlib ``wave`` parses the RIFF
-    header, numpy computes sample stats. No external codec library
-    needed; compressed formats (mp3/aac) still require an injected
-    decoder via :func:`decode`."""
-    import io
-    import wave
-
-    import numpy as np
-
-    rows = []
-    for b in blobs:
-        with wave.open(io.BytesIO(bytes(b))) as w:
-            sr = w.getframerate()
-            nc = w.getnchannels()
-            nf = w.getnframes()
-            sw = w.getsampwidth()
-            raw = w.readframes(nf)
-        dtype = {1: np.int8, 2: np.int16, 4: np.int32}[sw]
-        x = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-        full = float(np.iinfo(dtype).max)
-        rms = float(np.sqrt(np.mean((x / full) ** 2))) if x.size else 0.0
-        rows.append(
-            {
-                "media_md5": hashlib.md5(bytes(b)).hexdigest(),
-                "media_bytes": len(b),
-                "sample_rate": sr,
-                "n_channels": nc,
-                "n_samples": nf,
-                "duration_ms": nf * 1000 // sr,
-                "rms": round(rms, 6),
-            }
-        )
-    return pd.DataFrame(rows)
 
 
 def _ppm_pixels(bb: bytes) -> tuple[bytes, int, int, int, "object"]:
@@ -267,53 +225,9 @@ def ppm_decoder(blobs: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def decode_wav(df: DataFrame, media_col: str = "content") -> DataFrame:
-    """Real PCM-WAV decode through the standard :func:`decode` plumbing."""
-    return decode(df, wav_decoder, media_col, meta_schema=AUDIO_META_SCHEMA)
-
-
 def decode_ppm(df: DataFrame, media_col: str = "content") -> DataFrame:
     """Real PPM/PGM decode through the standard :func:`decode` plumbing."""
     return decode(df, ppm_decoder, media_col, meta_schema=IMAGE_META_SCHEMA)
-
-
-def synth_wav(df: DataFrame, id_col: str = "doc_id", media_col: str = "content") -> DataFrame:
-    """Synthesize a REAL mono 16-bit PCM WAV per row, deterministically
-    from the id (8 kHz; ``1000 + id % 500`` samples of a sine at
-    ``220 + (id % 10) * 110`` Hz). Test/fixture harness: the corpus
-    tables carry no media, so the demo queries materialize bit-exact
-    WAV files in-pipeline and the decoder genuinely parses them."""
-    import io
-    import wave
-
-    import numpy as np
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {media_col} binary"
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in batches:
-            blobs = []
-            for d in pdf[id_col]:
-                d = int(d)
-                n = 1000 + d % 500
-                freq = 220 + (d % 10) * 110
-                t = np.arange(n, dtype=np.float64) / 8000.0
-                x = (0.5 * np.sin(2 * np.pi * freq * t) * 32767).astype(np.int16)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(x.tobytes())
-                blobs.append(buf.getvalue())
-            out = pdf.copy()
-            out[media_col] = blobs
-            yield out
-
-    return _spread(df, id_col).mapInPandas(synth, schema=out_schema)
 
 
 def synth_ppm(df: DataFrame, id_col: str = "doc_id", media_col: str = "content") -> DataFrame:
@@ -586,8 +500,8 @@ def synth_ppm_textured(
 
 def _wav_samples(bb: bytes):
     """Decode a PCM WAV payload to a mono float64 sample vector in
-    [-1, 1] (channels averaged; stdlib ``wave`` parse, same as
-    :func:`wav_decoder`)."""
+    [-1, 1] (channels averaged; stdlib ``wave`` RIFF parse, so no
+    external codec library is needed)."""
     import io
     import wave
 

@@ -36,14 +36,6 @@ from pyspark.sql import functions as F
 from thoth_spark.operators import text
 
 
-def doc_lengths(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, dl) — whitespace token count of the normalized text; one
-    map-side pass, no shuffle."""
-    return df.select(
-        F.col(id_col), F.size(text.tokens(F.col(text_col))).alias("dl")
-    )
-
-
 def term_postings(
     df: DataFrame, id_col: str, text_col: str, terms: list[str]
 ) -> DataFrame:

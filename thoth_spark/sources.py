@@ -24,17 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-TPCH_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-]
-ALL_TABLES = TPCH_TABLES + ["events", "documents", "embeddings"]
-
 #: timestamp columns per table that must be normalized to TIMESTAMP
 _TS_COLUMNS = {"events": ["ts"]}
 
@@ -127,11 +116,3 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return _normalize_ts(stream, ["ts"])
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register every test table as a temp view (mirrors the driver's
-    duckdb-side view registration, so Spark SQL and oracle SQL read the
-    same relation names)."""
-    for name in tables or ALL_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
