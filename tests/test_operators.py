@@ -3723,9 +3723,8 @@ def test_ivf_index_join_serve_matches_collect_path(spark, tmp_path):
 
 
 def test_ivf_join_serve_vectorized_parity(spark, tmp_path):
-    """The cogrouped vectorized scorer (prune_cells=False float path,
-    the knn_graph workload) must return EXACTLY the pair-join path's
-    rows: sequential-dim accumulation reproduces the JVM fold's IEEE
+    """The cogrouped vectorized scorer (knn_graph's float path) must
+    return EXACTLY the rows of ivf_query_index_join's pair path: sequential-dim accumulation reproduces the JVM fold's IEEE
     addition order bit-for-bit, and the per-group top-k cut uses the
     same (cos desc, neighbor asc) total order as the global window —
     including exact-duplicate vectors (cosine ties) and the self-pair
@@ -3747,12 +3746,8 @@ def test_ivf_join_serve_vectorized_parity(spark, tmp_path):
     path = str(tmp_path / "ivf_vec")
     similarity.build_ivf_index(corpus, path, centroids=cents)
     for nprobe, k in ((2, 3), (8, 3), (8, 1)):
-        fast = similarity.ivf_query_index_join(
-            spark, path, corpus, k=k, nprobe=nprobe, prune_cells=False
-        )
-        ref = similarity.ivf_query_index_join(
-            spark, path, corpus, k=k, nprobe=nprobe, prune_cells=True
-        )
+        fast = similarity.knn_graph(spark, path, corpus, k=k, nprobe=nprobe)
+        ref = similarity.ivf_query_index_join(spark, path, corpus, k=k, nprobe=nprobe)
         fr = sorted(map(tuple, fast.collect()))
         rr = sorted(map(tuple, ref.collect()))
         assert fr == rr, (nprobe, k)
@@ -3958,6 +3953,102 @@ def test_ivfpq_index_append_equals_full_build(spark, tmp_path):
             assert gr == wr and len(gr) == 15, (residual, serve.__name__)
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [cell" in plan or "cell#" in plan, plan[:1500]
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivfpq_index_stores_one_code_row_per_input_row(spark, tmp_path, residual):
+    """An id that repeats in the input is coded once per input row, on
+    both code layouts, by the build and by the append: 40 rows with 10
+    ids appearing twice store 40 code rows, then 80."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    rows = [(i % 30, [float(x) for x in rng.normal(size=16)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path / "pq")
+    similarity.build_ivfpq_index(
+        df, path, m_subspaces=4, n_codes=4, residual=residual,
+        centroids=rng.normal(size=(2, 16)), codebooks=rng.normal(size=(4, 4, 4)),
+    )
+    assert spark.read.parquet(f"{path}/cells").count() == 40
+    similarity.ivfpq_index_append(spark, path, df)
+    assert spark.read.parquet(f"{path}/cells").count() == 80
+
+
+def _zero_norm_reference(corpus: list, queries: list, k: int) -> list:
+    """Exact top-k in Spark's order: cosine desc with NULL (a zero norm)
+    last, then neighbor id asc; self pairs excluded."""
+    import numpy as np
+
+    out = []
+    for qid, qv in queries:
+        scored = []
+        for cid, cv in corpus:
+            if cid != qid:
+                den = np.linalg.norm(qv) * np.linalg.norm(cv)
+                s = float(np.dot(qv, cv) / den) if den else None
+                scored.append((s is None, -(s or 0.0), cid, s))
+        for rank, (_, _, cid, s) in enumerate(sorted(scored)[:k], 1):
+            out.append((qid, cid, s, rank))
+    return out
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "brute_force_topk",
+        "brute_force_topk_pandas",
+        "quantized_topk",
+        "ivf_query_index",
+        "ivf_query_index_join",
+        "knn_graph",
+    ],
+)
+def test_zero_norm_vectors_score_null_last(spark, tmp_path, op):
+    """A zero-norm corpus row and a zero-norm query have no cosine: every
+    top-k operator scores their pairs NULL and ranks them after every
+    number, so the zero row is no other query's neighbor and the zero
+    query's neighbors are the lowest ids. Plain ``/`` raised
+    DIVIDE_BY_ZERO under ANSI in the Spark scorers; the numpy local cut
+    broke the zero query's all-NULL tie in batch order, so the corpus
+    arrives as one batch in descending id order."""
+    import numpy as np
+
+    rng = np.random.default_rng(9)
+    vecs = rng.normal(size=(16, 8))
+    vecs[3] = 0.0
+    corpus_rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(corpus_rows[::-1], schema).coalesce(1)
+    query_rows = [r for r in corpus_rows if r[0] in (1, 3, 7)]
+    queries = spark.createDataFrame(query_rows, schema)
+    k = 3
+    path = str(tmp_path / "ivf")
+    if op in ("ivf_query_index", "ivf_query_index_join", "knn_graph"):
+        similarity.build_ivf_index(corpus, path, centroids=rng.normal(size=(2, 8)))
+    got = {
+        "brute_force_topk": lambda: similarity.brute_force_topk(corpus, queries, k=k),
+        "brute_force_topk_pandas": lambda: similarity.brute_force_topk_pandas(
+            corpus, queries, k=k
+        ),
+        "quantized_topk": lambda: similarity.quantized_topk(corpus, queries, k=k),
+        "ivf_query_index": lambda: similarity.ivf_query_index(
+            spark, path, queries, k=k, nprobe=2
+        ),
+        "ivf_query_index_join": lambda: similarity.ivf_query_index_join(
+            spark, path, queries, k=k, nprobe=2
+        ),
+        "knn_graph": lambda: similarity.knn_graph(spark, path, corpus, k=k, nprobe=2),
+    }[op]().collect()
+    want = _zero_norm_reference(
+        corpus_rows, corpus_rows if op == "knn_graph" else query_rows, k
+    )
+    got = sorted(map(tuple, got), key=lambda r: (r[0], r[3]))
+    assert [(r[0], r[1], r[3]) for r in got] == [(r[0], r[1], r[3]) for r in want]
+    for g, w in zip(got, want):
+        assert g[2] is w[2] is None or abs(g[2] - w[2]) < 1e-6, (g, w)
+    zero_query = [r for r in got if r[0] == 3]
+    assert [(r[1], r[2]) for r in zero_query] == [(0, None), (1, None), (2, None)]
 
 
 def test_ivf_index_compact_preserves_serves(spark, tmp_path):

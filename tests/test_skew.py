@@ -695,7 +695,7 @@ def test_ann_join_serve_degenerate_single_cell_is_salted(spark, tmp_path):
     similarity.build_ivf_index(df, path, n_centroids=4)
     q = df.limit(5)
     got = sorted(map(tuple, similarity.ivf_query_index_join(
-        spark, path, q, k=3, nprobe=1, salt=8
+        spark, path, q, k=3, nprobe=1
     ).collect()))
     want = sorted(map(tuple, similarity.ivf_query_index(
         spark, path, q, k=3, nprobe=1
@@ -709,7 +709,7 @@ def test_ann_join_serve_degenerate_single_cell_is_salted(spark, tmp_path):
         cells.groupBy("cell").count().orderBy(F.desc("count")).first()["cell"]
     )
     n_salts = (
-        similarity._salted(cells.where(F.col("cell") == hot), "vec_id", 8)
+        similarity._salted(cells.where(F.col("cell") == hot), "vec_id")
         .select("__salt")
         .distinct()
         .count()

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from thoth_spark.anomaly.models import DEFAULT_WINDOWS, SimpleModel
 from thoth_spark.anomaly.optimization import cross_validation, find_best_threshold
 from thoth_spark.operators import lm as lm_ops
+from thoth_spark.operators.partitioning import spread_narrow
 from thoth_spark.operators import (
     classifier,
     clustering,
@@ -82,23 +83,15 @@ def _events(spark, sf_dir):
 
 
 def _documents(spark, sf_dir):
-    """documents table, repartitioned ONLY when the scan is narrower than
-    the cluster: the test parquet is a single small file (one scan task)
-    and the text queries are compute-bound per row, so a 1.5 MB
-    round-robin shuffle buys full parallelism — but at 100 TB the input
-    already arrives in thousands of scan partitions and an unconditional
-    ``repartition`` would insert a gratuitous full-corpus exchange before
-    every text query. The probe is file-count metadata only (round-5 fix:
-    the previous ``df.rdd.getNumPartitions()`` forced a full RDD plan
-    conversion on every query construction). File count is a lower bound
-    on scan partitions (big files split by maxPartitionBytes), so the
-    only error mode is an extra repartition on a few-giant-files layout —
-    safe, and real 100 TB corpora arrive as thousands of files."""
-    df = load_table(spark, sf_dir, "documents")
-    target = spark.sparkContext.defaultParallelism
-    if len(df.inputFiles()) < target:
-        df = df.repartition(target)
-    return df
+    """documents table, round-robin repartitioned ONLY when the scan is
+    narrower than the cluster (:func:`spread_narrow`'s file-count
+    probe): the test parquet is a single small file (one scan task) and
+    the text queries are compute-bound per row, so a 1.5 MB shuffle
+    buys full parallelism — but at 100 TB the input already arrives in
+    thousands of scan partitions and an unconditional ``repartition``
+    would insert a gratuitous full-corpus exchange before every text
+    query."""
+    return spread_narrow(load_table(spark, sf_dir, "documents"))
 
 
 def _round_metrics(df: DataFrame) -> DataFrame:

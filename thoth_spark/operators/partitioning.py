@@ -37,16 +37,17 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     Probe cost (r16 advice): ``df.rdd.getNumPartitions()`` forces full
     physical planning of the frame on the driver at every call site, in
     hot operator-construction paths, even at scale where the call then
-    no-ops. Every call site feeds a projection of a fresh file scan, so
-    the narrowness test is the METADATA-ONLY file count
-    (``len(df.inputFiles())``, the same probe
-    :func:`ivf_query_index_join` uses on compacted index scans): a scan
-    of >= cluster-parallelism files is never narrow, and a 1-file local
-    scan always is. The file count can misjudge a frame whose scan
-    packing/splitting diverges from its file count (few huge splittable
-    files) — the cost is one spurious or missed exchange, never a result
-    change. Frames with no input files (in-memory sources) fall back to
-    the exact planning probe."""
+    no-ops. Call sites mostly feed a projection of a fresh file scan
+    (operator inputs, the IVF builds, the join serves' index scans, the
+    catalogue's documents table — this is the package's one narrowness
+    probe), so the test is the METADATA-ONLY file count
+    (``len(df.inputFiles())``): a scan of >= cluster-parallelism files
+    is never narrow, and a 1-file local scan always is. The file count
+    can misjudge a frame whose scan packing/splitting diverges from its
+    file count (few huge splittable files) — the cost is one spurious or
+    missed exchange, never a result change. Frames with no input files
+    (in-memory and cached sources) fall back to the exact planning
+    probe."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         nf = len(df.inputFiles())

@@ -18,24 +18,42 @@ Operators, by family:
   :func:`ivfpq_query_index`, :func:`ivfpq_query_index_join`;
 - curation: :func:`semdedup`, :func:`knn_classify`.
 
-Every top-k operator ends in the same serve tail, and each concept of
-it has one implementation here:
+Every operator scores through one implementation per concept, so two
+operators that compute the same thing give the same values by
+construction. Local cuts per batch or group followed by one global cut
+are the two-level top-k of REPOSE (ICDE 2021).
 
-- :func:`_rank_cut` — the per-query ``row_number`` cut, (score desc,
-  id asc), for candidate pools and final results alike;
-  :func:`_topk_result` adds the ``round(score, 6)`` output contract.
-  Local cuts per batch or group followed by this global cut are the
-  two-level top-k of REPOSE (ICDE 2021);
-- :func:`_exact_rerank` — candidates re-scored with the float
-  :func:`cosine` against the original corpus;
+Scoring kernels:
+
+- :func:`_pair_cos` — the float pair score ``dot / (‖a‖·‖b‖)`` over
+  norms computed once per side before the join (:func:`cosine` is its
+  per-pair form); a zero norm scores NULL, ranked after every number,
+  in the Spark and the numpy scorers alike;
+- :func:`_nearest_cells` — the nearest centroid or codeword,
+  ``argmin ‖c‖² − 2x·c`` with ties to the lower id: IVF cell
+  assignment and probes (:func:`nearest_cells_udf`), PQ coding
+  (:func:`_pq_codes`) and the k-means steps of the PQ trainers;
+- :func:`_pq_encoder` — the one PQ encoder (global or residual codes);
+  :func:`_adc_scan` — the one ADC scan (lookup table, code gather,
+  local cut) of :func:`pq_topk` and the IVF-PQ collect serves;
 - :func:`_sq8` — the SQ8 quantizer (``amax → scale → round → norm``),
-  scored by :func:`_dequantized_cos`;
+  scored by :func:`_dequantized_cos`; :func:`_sq8_tail` is the
+  approximate-then-rerank tail of every SQ8 scan;
 - :func:`_fold_norms` / :func:`_fold_cos` — the numpy kernel that sums
   over dimensions in the JVM :func:`dot` fold's order, bit for bit
-  (semdedup's verify and the cogrouped ``knn_graph`` scorer);
+  (semdedup's verify and the cogrouped ``knn_graph`` scorer).
+
+Serve tail:
+
+- :func:`_rank_cut` — the per-query ``row_number`` cut, (score desc,
+  neighbor id asc), for candidate pools and final results alike;
+  :func:`_topk_result` adds the ``round(score, 6)`` output contract;
+- :func:`_exact_rerank` — candidates re-scored with :func:`_pair_cos`
+  against the original float corpus;
 - :func:`_batch_topk` — the per-batch top-n emitter of the
-  ``mapInPandas`` scorers, with :func:`_collect_query_batch` the one
-  bounded collect of their query (or seed) batch.
+  ``mapInPandas`` scorers, in :func:`_rank_cut`'s order, with
+  :func:`_collect_query_batch` the one bounded collect of their query
+  (or seed) batch.
 """
 
 from __future__ import annotations
@@ -77,8 +95,27 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _pair_cos(a: Column, a_norm: Column, b: Column, b_norm: Column) -> Column:
+    """The float pair score of every Spark-side scorer: ``dot(a, b)``
+    over the product of the two norms, which callers compute once per
+    side before the join (``a_norm`` = :func:`norm` of ``a``), so a
+    candidate pair pays one fold, not three. A zero norm scores NULL
+    (``try_divide``; plain ``/`` raises ``DIVIDE_BY_ZERO`` under ANSI).
+    The numpy scorers' ``0/0`` NaN reaches Spark as NULL as well (Arrow
+    masks NaN when a pandas UDF's output is converted), so in every
+    operator a zero-norm pair ranks after every number."""
+    return F.try_divide(dot(a, b), a_norm * b_norm)
+
+
+def _qc_cos() -> Column:
+    """:func:`_pair_cos` of the query/corpus column convention: ``qv``
+    with norm ``qn`` against ``cv`` with norm ``cn``."""
+    return _pair_cos(F.col("qv"), F.col("qn"), F.col("cv"), F.col("cn"))
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """:func:`_pair_cos` with both norms computed per pair."""
+    return _pair_cos(a, norm(a), b, norm(b))
 
 
 def _as_double(col: Column) -> Column:
@@ -99,15 +136,13 @@ def _keyed_vectors(
     return df.select(F.col(id_col).alias(id_as), _as_double(F.col(vec_col)).alias(vec_as))
 
 
-def _rank_cut(
-    scored: DataFrame, score: str, n: int, tie: str = "neighbor_id"
-) -> DataFrame:
+def _rank_cut(scored: DataFrame, score: str, n: int) -> DataFrame:
     """The per-query top-``n`` cut: ``rank`` is the ``row_number`` within
-    each ``query_id`` ordered by (``score`` desc, ``tie`` asc), and rows
-    past ``n`` drop. The order is total (ids are unique per query), so
-    a local cut per batch or group followed by this cut over the union
-    returns exactly the rows of one global cut."""
-    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(tie))
+    each ``query_id`` ordered by (``score`` desc, ``neighbor_id`` asc),
+    and rows past ``n`` drop. The order is total (ids are unique per
+    query), so a local cut per batch or group followed by this cut over
+    the union returns exactly the rows of one global cut."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
 
 
@@ -126,17 +161,36 @@ def _exact_rerank(
     vec_col: str,
     queries: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate pairs re-scored with the exact float :func:`cosine`:
+    """Candidate pairs re-scored with the exact float :func:`_pair_cos`:
     ``cands`` (``query_id``, ``neighbor_id`` and, when ``queries`` is
-    None, the query vector ``qv``) join the float ``corpus`` by
-    neighbor id; a ``(query_id, qv)`` frame passed as ``queries`` joins
-    broadcast by query id. The join touches O(queries × pool) rows,
-    never the whole corpus."""
+    None, the query vector ``qv`` and its norm ``qn``) join the float
+    ``corpus`` by neighbor id; a ``(query_id, qv)`` frame passed as
+    ``queries`` joins broadcast by query id. The join touches
+    O(queries × pool) rows, never the whole corpus."""
     c = _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
-    exact = cands.join(c, "neighbor_id")
+    exact = cands.join(c.withColumn("cn", norm(F.col("cv"))), "neighbor_id")
     if queries is not None:
-        exact = exact.join(F.broadcast(queries), "query_id")
-    return exact.withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+        qn = queries.withColumn("qn", norm(F.col("qv")))
+        exact = exact.join(F.broadcast(qn), "query_id")
+    return exact.withColumn("cos_sim", _qc_cos())
+
+
+def _sq8_tail(
+    approx: DataFrame, k: int, rerank: int | None, rerank_corpus: DataFrame | None,
+    id_col: str, vec_col: str, queries: DataFrame | None = None,
+) -> DataFrame:
+    """The tail of every SQ8 scan over ``approx`` (candidate pairs
+    scored ``approx_cos`` by :func:`_dequantized_cos`): without a
+    ``rerank_corpus`` the approximation is the score; with one, the top
+    ``rerank`` (default ``10·k``) candidates per query are re-scored by
+    :func:`_exact_rerank` (with ``queries`` as there)."""
+    if rerank_corpus is None:
+        return approx.withColumn("cos_sim", F.col("approx_cos"))
+    carried = ["qv", "qn"] if queries is None else []
+    cands = _rank_cut(approx, "approx_cos", rerank or 10 * k).select(
+        "neighbor_id", "query_id", *carried
+    )
+    return _exact_rerank(cands, rerank_corpus, id_col, vec_col, queries)
 
 
 def brute_force_topk(
@@ -156,9 +210,10 @@ def brute_force_topk(
     q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
     c = _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.withColumn("cn", norm(F.col("cv")))
+        .crossJoin(F.broadcast(q.withColumn("qn", norm(F.col("qv")))))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos_sim", _qc_cos())
     )
     return _topk_result(scored, k)
 
@@ -201,7 +256,8 @@ def _dequantized_cos() -> Column:
     by the two per-vector scales, over the EXACT stored float norms.
     Expects columns ``qvec/scale/vnorm`` and ``q_qvec/q_scale/q_vnorm``.
     Fold form on purpose — see :func:`dot` (the unrolled variant
-    regressed every SQ8 query 1.6-2x)."""
+    regressed every SQ8 query 1.6-2x). A zero norm scores NULL, as in
+    :func:`_pair_cos`."""
     idot = F.aggregate(
         F.zip_with(
             F.col("qvec"), F.col("q_qvec"), lambda x, y: x.cast("int") * y.cast("int")
@@ -209,11 +265,9 @@ def _dequantized_cos() -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return (
-        idot.cast("double")
-        * F.col("scale")
-        * F.col("q_scale")
-        / (F.col("vnorm") * F.col("q_vnorm"))
+    return F.try_divide(
+        idot.cast("double") * F.col("scale") * F.col("q_scale"),
+        F.col("vnorm") * F.col("q_vnorm"),
     )
 
 
@@ -234,21 +288,19 @@ def quantized_topk(
     against :func:`brute_force_topk` in tests; the driver oracle is the
     exact-SQL top-k). The exact-vector join touches candidates only —
     O(queries × rerank) rows, never the corpus."""
-    rerank = rerank or 10 * k
-    qc = scalar_quantize(corpus, id_col, vec_col)
+    qc = corpus.select(
+        F.col(id_col).alias("neighbor_id"), *_sq8(_as_double(F.col(vec_col)), "int")
+    )
     qq = queries.select(
         F.col(id_col).alias("query_id"), *_sq8(_as_double(F.col(vec_col)), "int", "q_")
     )
     approx = (
         qc.crossJoin(F.broadcast(qq))
-        .where(F.col(id_col) != F.col("query_id"))
+        .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("approx_cos", _dequantized_cos())
     )
-    cands = _rank_cut(approx, "approx_cos", rerank, tie=id_col).select(
-        F.col(id_col).alias("neighbor_id"), "query_id"
-    )
     q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
-    return _topk_result(_exact_rerank(cands, corpus, id_col, vec_col, q), k)
+    return _topk_result(_sq8_tail(approx, k, rerank, corpus, id_col, vec_col, q), k)
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
@@ -335,7 +387,7 @@ def hyperplane_lsh_topk(
     if dim is None:
         dim = len(corpus.select(vec_col).limit(1).collect()[0][0])
 
-    def _bucketed(df, idc, vc, probe: bool):
+    def _bucketed(df, idc, vc, nc, probe: bool):
         # the signature pass (n_tables aggregate-HOF dots per row) is
         # the side's per-row cost; spread a narrow scan first so the
         # checkpoint materializes at cluster parallelism (no-op at scale)
@@ -362,7 +414,7 @@ def hyperplane_lsh_topk(
         # corpus side), and the probe fan-out must read sig as a
         # concrete column, not re-run the dot products per flip.
         staged = base.select(
-            F.col(idc), F.col(vc), *sig_cols
+            F.col(idc), F.col(vc), norm(F.col(vc)).alias(nc), *sig_cols
         ).localCheckpoint(eager=False)
         tables = []
         for t in range(n_tables):
@@ -372,24 +424,24 @@ def hyperplane_lsh_topk(
                 buckets += [sig.bitwiseXOR(F.lit(2**i)) for i in range(nbits)]
             tables += [b + F.lit(t * 2**nbits) for b in buckets]
         return staged.withColumn("bucket", F.explode(F.array(*tables))).select(
-            F.col(idc), F.col(vc), "bucket"
+            F.col(idc), F.col(vc), F.col(nc), "bucket"
         )
 
     c = _bucketed(
-        corpus.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id", "cv", probe=False
+        corpus.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id", "cv", "cn",
+        probe=False,
     )
     q = _bucketed(
-        queries.withColumnRenamed(id_col, "query_id"), "query_id", "qv", probe=True
+        queries.withColumnRenamed(id_col, "query_id"), "query_id", "qv", "qn", probe=True
     )
 
     candidates = (
         c.join(F.broadcast(q), on="bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "qv", "cv")
+        .select("query_id", "neighbor_id", "qv", "qn", "cv", "cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = candidates.withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
-    return _topk_result(scored, k)
+    return _topk_result(candidates.withColumn("cos_sim", _qc_cos()), k)
 
 
 def coarse_centroids(
@@ -424,13 +476,25 @@ def coarse_centroids(
     )
 
 
+def _centroids(
+    centroids: np.ndarray | None, corpus: DataFrame, vec_col: str, n_centroids: int,
+    seed: int, max_train: int = 65536,
+) -> np.ndarray:
+    """The caller's ``centroids`` as a float64 matrix, or, when None,
+    :func:`coarse_centroids` trained on ``corpus``."""
+    if centroids is not None:
+        return np.asarray(centroids, dtype=np.float64)
+    return coarse_centroids(corpus, vec_col, n_centroids, seed, max_train)
+
+
 def _nearest_cells(x: np.ndarray, cent_mat: np.ndarray, n: int) -> np.ndarray:
     """The ``n`` nearest centroid ids of each row of ``x`` as an
     ``(rows, n)`` int32 matrix — the one nearest-centroid kernel of the
-    module. One BLAS matmul; argmin over ``||x||² − 2x·c + ||c||²``
-    (the ``||x||²`` term is rank-invariant and dropped). Ties break on
-    the lower cid via stable argsort, matching the struct-sort
-    tie-break it replaced."""
+    module: IVF cell assignment and probes, PQ codes and the k-means
+    steps of the PQ trainers all call it. One BLAS matmul; argmin over
+    ``||x||² − 2x·c + ||c||²`` (the ``||x||²`` term is rank-invariant
+    and dropped). Ties break on the lower cid via stable argsort, so
+    column 0 is numpy's first-minimum ``argmin``."""
     cent_sq = (cent_mat * cent_mat).sum(axis=1)  # ||c||² per centroid
     d = cent_sq - 2.0 * (x @ cent_mat.T)  # (rows, n_centroids)
     return np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
@@ -452,6 +516,20 @@ def nearest_cells_udf(cent_mat: np.ndarray, n: int):
     return nearest_cells
 
 
+def _probed_queries(
+    queries: DataFrame, id_col: str, vec_col: str, cent_mat: np.ndarray, nprobe: int
+) -> DataFrame:
+    """``(query_id, qv, qn, cell)``: one row per query and probed cell,
+    the ``nprobe`` nearest by :func:`nearest_cells_udf`. The norm ``qn``
+    is computed before the explode, once per query (a caller that drops
+    it leaves it out of the plan)."""
+    return (
+        _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+        .withColumn("qn", norm(F.col("qv")))
+        .withColumn("cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv"))))
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -470,28 +548,24 @@ def ivf_topk(
     partitioning key at scale — :func:`build_ivf_index` materializes
     it); each query scans only its ``nprobe`` nearest centroid cells.
     Pass ``centroids`` to reuse a trained quantizer."""
-    cent_mat = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else coarse_centroids(corpus, vec_col, n_centroids, seed, max_train)
-    )
-
-    def _nearest_udf(n: int):
-        return nearest_cells_udf(cent_mat, n)
+    cent_mat = _centroids(centroids, corpus, vec_col, n_centroids, seed, max_train)
 
     # the corpus side streams through the broadcast join and the per-pair
     # scoring at ITS OWN parallelism — spread a narrow scan first
     # (no-op at scale)
     c = spread_narrow(
         _keyed_vectors(corpus, id_col, vec_col, "neighbor_id", "cv"), "neighbor_id"
-    ).withColumn("cell", _nearest_udf(1)(F.col("cv"))[0])
-    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
-        "cell", F.explode(_nearest_udf(nprobe)(F.col("qv")))
+    ).withColumns(
+        {
+            "cn": norm(F.col("cv")),
+            "cell": nearest_cells_udf(cent_mat, 1)(F.col("cv"))[0],
+        }
     )
+    q = _probed_queries(queries, id_col, vec_col, cent_mat, nprobe)
     scored = (
         c.join(F.broadcast(q), on="cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos_sim", _qc_cos())
     )
     return _topk_result(scored, k)
 
@@ -525,11 +599,7 @@ def build_ivf_index(
     by re-ranking a small candidate pool against the original vectors
     (``rerank_corpus`` in :func:`ivf_query_index`)."""
     spark = corpus.sparkSession
-    cent_mat = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else coarse_centroids(corpus, vec_col, n_centroids, seed, max_train)
-    )
+    cent_mat = _centroids(centroids, corpus, vec_col, n_centroids, seed, max_train)
     sel = _keyed_vectors(corpus, id_col, vec_col, "vec_id", "v")
     # a narrow input (one local parquet split) would otherwise run the
     # assignment UDF AND the whole partitionBy write on one task; spread
@@ -537,13 +607,11 @@ def build_ivf_index(
     # one writer (and so one file) per cell. Both exchanges vanish at
     # scale (spread_narrow no-ops past cluster parallelism, and the
     # cell re-key is gated on the same probe).
-    narrow = sel.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    if narrow:
-        sel = sel.repartition(spark.sparkContext.defaultParallelism, F.col("vec_id"))
-    assigned = sel.withColumn("cell", nearest_cells_udf(cent_mat, 1)(F.col("v"))[0])
+    spread = spread_narrow(sel, "vec_id")
+    assigned = spread.withColumn("cell", nearest_cells_udf(cent_mat, 1)(F.col("v"))[0])
     if quantize:
         assigned = _sq8_cells(assigned)
-    if narrow:
+    if spread is not sel:
         assigned = assigned.repartition(
             spark.sparkContext.defaultParallelism, F.col("cell")
         )
@@ -685,7 +753,9 @@ def ivf_query_index(
         ),
         f"query_id {_col_type(queries, id_col)}, qv array<double>, cells array<int>",
     )
-    q = q_batch.select("query_id", "qv", F.explode("cells").alias("cell"))
+    q = q_batch.withColumn("qn", norm(F.col("qv"))).select(
+        "query_id", "qv", "qn", F.explode("cells").alias("cell")
+    )
     probe_cells = sorted({int(c) for c in probes.ravel()})
     cells = spark.read.parquet(f"{path}/cells").where(F.col("cell").isin(probe_cells))
 
@@ -696,27 +766,23 @@ def ivf_query_index(
             .join(F.broadcast(q.select("query_id", "cell")), on="cell")
             .join(F.broadcast(qq), on="query_id")
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "approx_cos", _dequantized_cos()
-            )
+            .withColumn("approx_cos", _dequantized_cos())
         )
-        if rerank_corpus is None:
-            scored = approx.withColumn("cos_sim", F.col("approx_cos"))
-        else:
-            cands = _rank_cut(approx, "approx_cos", rerank or 10 * k).select(
-                "neighbor_id", "query_id"
-            )
-            scored = _exact_rerank(
-                cands, rerank_corpus, id_col, vec_col, q.select("query_id", "qv").distinct()
-            )
+        scored = _sq8_tail(
+            approx, k, rerank, rerank_corpus, id_col, vec_col,
+            q.select("query_id", "qv").distinct(),
+        )
     else:
         scored = (
             cells.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("v").alias("cv"),
+                norm(F.col("v")).alias("cn"),
+                "cell",
             )
             .join(F.broadcast(q), on="cell")
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
+            .withColumn("cos_sim", _qc_cos())
         )
     return _topk_result(scored, k)
 
@@ -744,8 +810,7 @@ def embedding_near_dup_pairs(
     # leg's explode re-evaluated it per flip via projection collapse)
     base = spread_narrow(_keyed_vectors(df, id_col, vec_col, "id", "v"), "id").withColumns(
         # norm stored per ROW (rides the checkpoint) so the verify stage
-        # pays one dot per candidate pair, not dot + two sqrt(Σx²);
-        # dot/(na·nb) is bit-identical to cosine(a, b)
+        # pays one dot per candidate pair (_pair_cos)
         {
             "sig": hyperplane_signature(F.col("v"), planes),
             "vn": norm(F.col("v")),
@@ -761,9 +826,7 @@ def embedding_near_dup_pairs(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
             F.round(
-                dot(F.col("a.v"), F.col("b.v"))
-                / (F.col("a.vn") * F.col("b.vn")),
-                6,
+                _pair_cos(F.col("a.v"), F.col("a.vn"), F.col("b.v"), F.col("b.vn")), 6
             ).alias("cos_sim"),
         )
         .distinct()
@@ -855,11 +918,7 @@ def semdedup(
         )
     if stats is not None and centroids is None:
         stats["n_clusters"] = n_clusters
-    cent_mat = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else coarse_centroids(df, vec_col, n_clusters, seed, max_train)
-    )
+    cent_mat = _centroids(centroids, df, vec_col, n_clusters, seed, max_train)
     cent_norm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
 
     # ONE fused Arrow pass for (cluster, centroid_sim): the split form —
@@ -1063,17 +1122,21 @@ def _batch_topk(
     allowed=None,
 ) -> pd.DataFrame:
     """The local cut of a ``mapInPandas`` scorer: for each query ``j``
-    the top ``n`` rows of one batch by (``sims[:, j]`` desc, batch
-    order), self matches on id excluded, plus ``allowed(j)`` (a row
-    mask) when given. Returns ``(query_id, neighbor_id, <score>)``; the
-    global :func:`_rank_cut` over every batch's rows finishes the
-    two-level top-k."""
+    the top ``n`` rows of one batch in :func:`_rank_cut`'s order —
+    ``sims[:, j]`` desc, NaN last (it reaches Spark as NULL, which the
+    window ranks last), then id asc — self matches on id excluded, plus
+    ``allowed(j)`` (a row mask) when given. Returns ``(query_id,
+    neighbor_id, <score>)``; the global :func:`_rank_cut` over every
+    batch's rows finishes the two-level top-k, and because both cuts
+    use one total order it returns exactly the rows of one global
+    cut, ties and zero norms included."""
+    by_id = np.argsort(ids, kind="stable")
     out_q, out_n, out_s = [], [], []
     for j, qid in enumerate(q_ids):
         mask = ids != qid
         if allowed is not None:
             mask &= allowed(j)
-        cand = np.where(mask)[0]
+        cand = by_id[mask[by_id]]  # candidate rows in id order
         top = cand[np.argsort(-sims[cand, j], kind="stable")[:n]]
         out_q += [qid] * len(top)
         out_n += list(ids[top])
@@ -1171,8 +1234,6 @@ def knn_classify(
 
     def score(batches):
         drop_zip_finders()
-        import pandas as pd
-
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             c = np.array(list(pdf[vec_col]), dtype="float64")
@@ -1249,9 +1310,7 @@ def embedding_cross_neardup(
             "left_id",
             "right_id",
             F.round(
-                dot(F.col("lv"), F.col("rv"))
-                / (F.col("ln") * F.col("rn")),
-                6,
+                _pair_cos(F.col("lv"), F.col("ln"), F.col("rv"), F.col("rn")), 6
             ).alias("cos_sim"),
         )
         .distinct()
@@ -1338,18 +1397,16 @@ def train_pq_codebooks(
     ``max_train × dim`` floats — tens of MB; codebook quality needs a
     sample, never the corpus, exactly like
     :func:`coarse_centroids`)."""
-    rng = np.random.default_rng(seed)
-    sample = np.asarray(
-        [
-            r.v
-            for r in corpus.select(_as_double(F.col(vec_col)).alias("v"))
-            .limit(max_train)
-            .collect()
-        ],
-        dtype=np.float64,
+    sample = _normalized_rows(_sample_matrix(corpus, vec_col, max_train))
+    return _codebooks_from_matrix(
+        sample, m_subspaces, n_codes, np.random.default_rng(seed), iterations
     )
-    sample = _normalized_rows(sample)
-    return _codebooks_from_matrix(sample, m_subspaces, n_codes, rng, iterations)
+
+
+def _sample_matrix(corpus: DataFrame, vec_col: str, max_train: int) -> np.ndarray:
+    """The first ``max_train`` vectors of ``corpus``, one bounded collect."""
+    rows = corpus.select(_as_double(F.col(vec_col)).alias("v")).limit(max_train).collect()
+    return np.asarray([r.v for r in rows], dtype=np.float64)
 
 
 def _codebooks_from_matrix(
@@ -1371,8 +1428,7 @@ def _codebooks_from_matrix(
         if len(cent) < n_codes:  # degenerate tiny sample: pad by repeat
             cent = np.resize(cent, (n_codes, d_sub))
         for _ in range(iterations):
-            d = (cent * cent).sum(axis=1) - 2.0 * (x @ cent.T)
-            asg = np.argmin(d, axis=1)
+            asg = _nearest_cells(x, cent, 1)[:, 0]
             for c in range(n_codes):
                 member = x[asg == c]
                 if len(member):
@@ -1395,26 +1451,41 @@ def pq_encode(
     original (64-dim → 8 codes = 32 bytes vs 256: 8×), and ANN scans
     read it instead of the floats. One Arrow-batched pass, codebook
     tensor in the closure, plan O(1) in n_codes."""
+    # no coarse quantizer: every row is in cell 0 and nothing is subtracted
+    encode = _pq_encoder(codebooks)
+    return corpus.select(
+        F.col(id_col).alias("id"),
+        encode(_as_double(F.col(vec_col)), F.lit(0)).alias("codes"),
+    )
+
+
+def _pq_codes(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """``(rows, m)`` int32 PQ codes of the rows of ``x`` against the
+    ``(m, n_codes, d_sub)`` codebooks ``cb``: per subspace the nearest
+    codeword by :func:`_nearest_cells`, ties to the lower code."""
+    subs = enumerate(np.split(x, len(cb), axis=1))
+    return np.stack([_nearest_cells(xs, cb[s], 1)[:, 0] for s, xs in subs], axis=1)
+
+
+def _pq_encoder(codebooks: np.ndarray, cent_hat: np.ndarray | None = None):
+    """The one PQ encoder, an Arrow-batched ``(vector, cell) → codes``
+    UDF: L2-normalize the vector, subtract the cell's normalized
+    centroid ``cent_hat[cell]`` when ``cent_hat`` is given (IVF-PQ
+    residual codes; the cell is ignored otherwise), and code the
+    result with :func:`_pq_codes`. Each row is coded on its own, so an
+    input row gives exactly one code row."""
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, n_codes, d_sub = cb.shape
-    cb_sq = (cb * cb).sum(axis=2)  # (m, n_codes)
 
     @pandas_udf(ArrayType(IntegerType()))
-    def encode(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def encode(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         drop_zip_finders()
-        for vecs in it:
+        for vecs, cells in it:
             x = _normalized_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-            b = x.shape[0]
-            codes = np.empty((b, m), dtype=np.int32)
-            for s in range(m):
-                xs = x[:, s * d_sub : (s + 1) * d_sub]
-                d = cb_sq[s] - 2.0 * (xs @ cb[s].T)
-                codes[:, s] = np.argsort(d, axis=1, kind="stable")[:, 0]
-            yield pd.Series(list(codes))
+            if cent_hat is not None:
+                x = x - cent_hat[cells.to_numpy().astype(np.int64)]
+            yield pd.Series(list(_pq_codes(x, cb)))
 
-    return corpus.select(
-        F.col(id_col).alias("id"), encode(_as_double(F.col(vec_col))).alias("codes")
-    )
+    return encode
 
 
 def pq_topk(
@@ -1444,36 +1515,69 @@ def pq_topk(
     :func:`brute_force_topk`'s ``(query_id, neighbor_id, cos_sim,
     rank)`` contract — at ``rerank_pool ≥ |corpus|`` it is bit-equal
     to brute force, the calibration point the hash gate pins."""
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, n_codes, d_sub = cb.shape
     q_rows = _collect_query_batch(
         queries, (id_col, vec_col), "pq_topk", "ivfpq_query_index_join"
     )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
-    # (n_queries, m, n_codes): LUT[j, s, c] = q̂_j[s] · cb[s][c]
-    lut = np.einsum(
-        "jsd,scd->jsc", q_mat.reshape(len(q_ids), m, d_sub), cb
-    )
     pool = max(k, rerank_pool if rerank_with is not None else k)
+    scored = _adc_scan(
+        codes_df, q_rows, np.ascontiguousarray(codebooks, dtype=np.float64), pool,
+        _col_type(codes_df, "id"),
+    )
+    if rerank_with is None:
+        return _topk_result(scored, pool, "adc_score")
+    return _adc_rerank(scored, pool, rerank_with, queries, k, id_col, vec_col)
+
+
+def _adc_scan(
+    codes_df: DataFrame,
+    q_rows: list,
+    cb: np.ndarray,
+    pool: int,
+    id_type: str,
+    probed: np.ndarray | None = None,
+    bias: np.ndarray | None = None,
+) -> DataFrame:
+    """The one ADC scan: the lookup table ``LUT[j, s, c] = q̂_j[s] ·
+    cb[s][c]`` is built once per call from the collected ``(id,
+    vector)`` query rows, then every Arrow batch of ``codes_df`` rows
+    (``id``, ``codes`` and, for IVF-PQ, ``cell``) scores as ``Σ_s
+    LUT[j, s, codes[s]]`` — a numpy gather, no float vector touched —
+    and emits its :func:`_batch_topk` local top-``pool`` as
+    ``(query_id, neighbor_id, adc_score)``. ``probed[j, cell]`` masks
+    each query to its probed cells; ``bias[j, cell]`` (``q̂_j·ĉ_cell``)
+    is added for residual codes."""
+    m, _, d_sub = cb.shape
+    q_ids = np.array([r[0] for r in q_rows])
+    q_hat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
+    lut = np.einsum("jsd,scd->jsc", q_hat.reshape(len(q_ids), m, d_sub), cb)
 
     def score(batches):
         drop_zip_finders()
         for pdf in batches:
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (b, m)
-            # gather: scores[i, j] = Σ_s lut[j, s, codes[i, s]]
             sims = lut[:, np.arange(m)[None, :], codes].sum(axis=2).T  # (b, nq)
-            yield _batch_topk(pdf["id"].to_numpy(), sims, q_ids, pool, "adc_score")
+            allowed = None
+            if probed is not None:
+                cells = pdf["cell"].to_numpy().astype(np.int64)
+                if bias is not None:
+                    sims = sims + bias[:, cells].T
+                allowed = lambda j: probed[j, cells]  # noqa: E731
+            yield _batch_topk(pdf["id"].to_numpy(), sims, q_ids, pool, "adc_score", allowed)
 
-    id_type = _col_type(codes_df, "id")
-    scored = codes_df.mapInPandas(
+    return codes_df.mapInPandas(
         score, schema=f"query_id {id_type}, neighbor_id {id_type}, adc_score double"
     )
-    if rerank_with is None:
-        return _topk_result(scored, pool, "adc_score")
+
+
+def _adc_rerank(
+    scored: DataFrame, pool: int, rerank_corpus: DataFrame, queries: DataFrame, k: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """The global ADC top-``pool`` per query of :func:`_adc_scan`'s
+    local cuts, re-scored exactly by :func:`_exact_rerank`."""
     cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id")
     q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
-    return _topk_result(_exact_rerank(cands, rerank_with, id_col, vec_col, q), k)
+    return _topk_result(_exact_rerank(cands, rerank_corpus, id_col, vec_col, q), k)
 
 
 def ivfpq_topk(
@@ -1521,29 +1625,15 @@ def ivfpq_topk(
     ranking inside a cell becomes informative where global codes
     collapse cell members onto one codeword
     (tests/test_operators.py::test_ivfpq_residual_beats_global_adc)."""
-    cent = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else coarse_centroids(corpus, vec_col, n_centroids, seed)
-    )
+    cent = _centroids(centroids, corpus, vec_col, n_centroids, seed)
     cb = _ivfpq_codebooks(
         corpus, cent, m_subspaces, n_codes, seed, max_train, vec_col,
         residual, codebooks,
     )
-    encoded = _ivfpq_encode(corpus, cent, cb, residual, id_col, vec_col)
+    q_rows, probes = _ivfpq_batch(queries, id_col, vec_col, cent, nprobe, "ivfpq_topk")
     return _ivfpq_rank(
-        encoded,
-        corpus,
-        queries,
-        cent,
-        cb,
-        residual,
-        k=k,
-        nprobe=nprobe,
-        rerank_pool=rerank_pool,
-        id_col=id_col,
-        vec_col=vec_col,
-        id_type=_col_type(corpus, id_col),
+        _ivfpq_encode(corpus, cent, cb, residual, id_col, vec_col), corpus, queries,
+        q_rows, probes, cent, cb, residual, k, rerank_pool, id_col, vec_col,
     )
 
 
@@ -1563,29 +1653,11 @@ def _ivfpq_codebooks(
     recipe) when ``residual``, of normalized vectors otherwise."""
     if codebooks is not None:
         return np.ascontiguousarray(codebooks, dtype=np.float64)
-    if not residual:
-        return train_pq_codebooks(
-            corpus,
-            vec_col,
-            m_subspaces=m_subspaces,
-            n_codes=n_codes,
-            seed=seed,
-            max_train=max_train,
-        )
-    raw = np.asarray(
-        [
-            r.v
-            for r in corpus.select(_as_double(F.col(vec_col)).alias("v"))
-            .limit(max_train)
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    d_s = (cent * cent).sum(axis=1) - 2.0 * (raw @ cent.T)
-    resid = _normalized_rows(raw) - _normalized_rows(cent)[np.argmin(d_s, axis=1)]
-    return _codebooks_from_matrix(
-        resid, m_subspaces, n_codes, np.random.default_rng(seed), 10
-    )
+    raw = _sample_matrix(corpus, vec_col, max_train)
+    x = _normalized_rows(raw)
+    if residual:
+        x = x - _normalized_rows(cent)[_nearest_cells(raw, cent, 1)[:, 0]]
+    return _codebooks_from_matrix(x, m_subspaces, n_codes, np.random.default_rng(seed), 10)
 
 
 def _ivfpq_encode(
@@ -1596,113 +1668,69 @@ def _ivfpq_encode(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """``(id, cell, codes)`` for an IVF-PQ corpus: cell ASSIGNMENT on the
-    raw centroids (the rule the corpus path and ivf_topk share), codes
-    from :func:`pq_encode` (global) or the residual encoder — residual
-    math lives on the unit sphere: the ranking target is cosine, so
-    vectors are normalized and the subtracted cell center must be
-    too."""
-    base = corpus.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("cell", nearest_cells_udf(cent, 1)(F.col("v"))[0])
-    if not residual:
-        return base.drop("v").join(
-            pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col), "id"
-        )
-    cent_hat = _normalized_rows(cent)
-    m, _, d_sub = cb.shape
-    cb_sq = (cb * cb).sum(axis=2)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def encode_res(vecs: pd.Series, cells: pd.Series) -> pd.Series:
-        drop_zip_finders()
-        x = _normalized_rows(np.stack(vecs.to_numpy()).astype(np.float64))
-        r = x - cent_hat[cells.to_numpy().astype(np.int64)]
-        b = r.shape[0]
-        codes = np.empty((b, m), dtype=np.int32)
-        for s in range(m):
-            rs = r[:, s * d_sub : (s + 1) * d_sub]
-            dd = cb_sq[s] - 2.0 * (rs @ cb[s].T)
-            codes[:, s] = np.argsort(dd, axis=1, kind="stable")[:, 0]
-        return pd.Series(list(codes))
-
-    return base.select(
-        "id", "cell", encode_res(F.col("v"), F.col("cell")).alias("codes")
+    """``(id, cell, codes)`` for an IVF-PQ corpus, one row per input
+    row: cell ASSIGNMENT on the raw centroids (the rule the corpus path
+    and ivf_topk share), codes from :func:`_pq_encoder` — global, or of
+    the residual — residual math lives on the unit sphere: the ranking
+    target is cosine, so vectors are normalized and the subtracted cell
+    center must be too."""
+    encode = _pq_encoder(cb, _normalized_rows(cent) if residual else None)
+    return (
+        _keyed_vectors(corpus, id_col, vec_col, "id", "v")
+        .withColumn("cell", nearest_cells_udf(cent, 1)(F.col("v"))[0])
+        .select("id", "cell", encode(F.col("v"), F.col("cell")).alias("codes"))
     )
 
 
-def _ivfpq_probe(q_mat: np.ndarray, cent: np.ndarray, nprobe: int) -> np.ndarray:
-    """Per-query probe sets under the ONE ranking rule ``_ivfpq_rank``
-    scores with: ``||c||² − 2·q̂·c`` over NORMALIZED queries. Every
-    IVF-PQ consumer — the in-UDF candidate masks AND the persisted
-    index's partition prefilter — must derive its probe set from this
-    helper: the rule is not scale-invariant in q, so an earlier
-    version that assigned prefilter cells from RAW query vectors could
-    prune cells (out of the parquet scan) that the rank stage still
-    masked to, silently dropping candidates for non-unit-norm
-    queries."""
-    d = (cent * cent).sum(axis=1) - 2.0 * (q_mat @ cent.T)
-    return np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+def _ivfpq_batch(
+    queries: DataFrame, id_col: str, vec_col: str, cent: np.ndarray, nprobe: int,
+    caller: str,
+) -> tuple[list, np.ndarray]:
+    """The bounded query batch of an IVF-PQ collect serve (``caller``
+    names the operator in the error) and each query's ``nprobe`` cells:
+    :func:`_nearest_cells` over the NORMALIZED query. The index scan's
+    partition filter and the scan's candidate mask both come from this
+    one probe set: the rule is not scale-invariant in q, and an earlier
+    version that pruned by RAW query vectors dropped cells the scan
+    still expected for non-unit-norm queries."""
+    q_rows = _collect_query_batch(
+        queries, (id_col, vec_col), caller, "ivfpq_query_index_join"
+    )
+    q_hat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
+    return q_rows, _nearest_cells(q_hat, cent, nprobe)
 
 
 def _ivfpq_rank(
     encoded: DataFrame,
     rerank_corpus: DataFrame,
     queries: DataFrame,
+    q_rows: list,
+    probes: np.ndarray,
     cent: np.ndarray,
     cb: np.ndarray,
     residual: bool,
     k: int,
-    nprobe: int,
     rerank_pool: int,
     id_col: str,
     vec_col: str,
-    id_type: str,
-    q_rows: list | None = None,
 ) -> DataFrame:
     """The IVF-PQ serving stage shared by the in-memory path
     (:func:`ivfpq_topk`) and the persisted index
-    (:func:`ivfpq_query_index`): per-query ADC LUT + probe set, one
-    Arrow-batched scan over ``(id, cell, codes)`` masking each batch to
-    the rows whose cell is probed (partition PRUNING on a
-    cell-partitioned layout), global ADC top-``pool``, exact rerank
-    against ``rerank_corpus``. ``q_rows`` (collected ``(id, vector)``
-    rows) lets the persisted-index caller reuse its prefilter collect —
-    one driver job per serve instead of two."""
-    m, _, d_sub = cb.shape
-    cent_hat = _normalized_rows(cent)
-    if q_rows is None:
-        q_rows = _collect_query_batch(
-            queries, (id_col, vec_col), "ivfpq_topk", "ivfpq_query_index_join"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
-    lut = np.einsum("jsd,scd->jsc", q_mat.reshape(len(q_ids), m, d_sub), cb)
-    bias = (q_mat @ cent_hat.T) if residual else None  # (nq, n_centroids)
+    (:func:`ivfpq_query_index`): :func:`_adc_scan` over ``encoded``
+    ``(id, cell, codes)`` rows, each query masked to its ``probes``
+    (from :func:`_ivfpq_batch`, with the residual ``q̂·ĉ_cell`` bias),
+    then :func:`_adc_rerank` against ``rerank_corpus``."""
     # probed[j, cid]: query j probes cell cid
-    probed = np.zeros((len(q_ids), len(cent)), dtype=bool)
-    probed[np.arange(len(q_ids))[:, None], _ivfpq_probe(q_mat, cent, nprobe)] = True
+    probed = np.zeros((len(q_rows), len(cent)), dtype=bool)
+    probed[np.arange(len(q_rows))[:, None], probes] = True
+    q_hat = _normalized_rows(np.array([r[1] for r in q_rows], dtype=np.float64))
+    bias = (q_hat @ _normalized_rows(cent).T) if residual else None  # (nq, n_cells)
     pool = max(k, rerank_pool)
-
-    def score(batches):
-        drop_zip_finders()
-        for pdf in batches:
-            cells = pdf["cell"].to_numpy().astype(np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            sims = lut[:, np.arange(m)[None, :], codes].sum(axis=2).T
-            if bias is not None:
-                sims = sims + bias[:, cells].T
-            yield _batch_topk(
-                pdf["id"].to_numpy(), sims, q_ids, pool, "adc_score",
-                allowed=lambda j: probed[j, cells],
-            )
-
-    scored = encoded.select("id", "cell", "codes").mapInPandas(
-        score, schema=f"query_id {id_type}, neighbor_id {id_type}, adc_score double"
+    scored = _adc_scan(
+        encoded.select("id", "cell", "codes"), q_rows, cb, pool,
+        _col_type(rerank_corpus, id_col), probed, bias,
     )
-    cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id")
-    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
-    return _topk_result(_exact_rerank(cands, rerank_corpus, id_col, vec_col, q), k)
+    return _adc_rerank(scored, pool, rerank_corpus, queries, k, id_col, vec_col)
 
 
 def build_ivfpq_index(
@@ -1740,11 +1768,7 @@ def build_ivfpq_index(
     :func:`brute_force_topk` (the hash-gated calibration twin
     ``similarity_topk_ivfpq_index_fullprobe``)."""
     spark = corpus.sparkSession
-    cent = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else coarse_centroids(corpus, vec_col, n_centroids, seed)
-    )
+    cent = _centroids(centroids, corpus, vec_col, n_centroids, seed)
     cb = _ivfpq_codebooks(
         corpus, cent, m_subspaces, n_codes, seed, max_train, vec_col,
         residual, codebooks,
@@ -1910,52 +1934,27 @@ def ivfpq_query_index(
     :func:`ivfpq_topk` run with the same quantizers — pinned by
     ``tests/test_operators.py::test_ivfpq_index_roundtrip``."""
     cent, cb, residual = _read_ivfpq_model(spark, path)
-    # ONE bounded collect (n_queries × dim — the query set is small by
-    # design), reused by the rank stage; probe cells come from
-    # _ivfpq_probe, the SAME normalized rule the rank stage masks with,
-    # so the partition prefilter can never prune a cell the scorer
-    # still expects (non-unit-norm queries diverge under the raw-vector
-    # rule this replaced)
-    q_rows = _collect_query_batch(
-        queries, (id_col, vec_col), "ivfpq_query_index", "ivfpq_query_index_join"
+    q_rows, probes = _ivfpq_batch(
+        queries, id_col, vec_col, cent, nprobe, "ivfpq_query_index"
     )
-    q_mat = _normalized_rows(np.asarray([r[1] for r in q_rows], dtype=np.float64))
-    probe_cells = sorted({int(c) for c in _ivfpq_probe(q_mat, cent, nprobe).ravel()})
-    encoded = spark.read.parquet(f"{path}/cells").where(
-        F.col("cell").isin(probe_cells)
-    )
+    probe_cells = sorted({int(c) for c in probes.ravel()})
+    cells = spark.read.parquet(f"{path}/cells").where(F.col("cell").isin(probe_cells))
     return _ivfpq_rank(
-        encoded,
-        rerank_corpus,
-        queries,
-        cent,
-        cb,
-        residual,
-        k=k,
-        nprobe=nprobe,
-        rerank_pool=rerank_pool,
-        id_col=id_col,
-        vec_col=vec_col,
-        id_type=_col_type(rerank_corpus, id_col),
-        q_rows=q_rows,
+        cells, rerank_corpus, queries, q_rows, probes, cent, cb, residual, k,
+        rerank_pool, id_col, vec_col,
     )
 
 
 # ---------------------------------------------------------------------------
 # Join-based index serving: the query set stays a DataFrame end-to-end.
 #
-# The collect-based serves above (`ivf_query_index`, `ivfpq_query_index`,
-# `brute_force_topk_pandas`, `pq_topk`) ship the query batch to every task
-# in a UDF closure — the right physical strategy for the serve-a-probe-
-# batch contract (queries are a bounded batch by design), but a driver
-# bottleneck the moment a user points them at a query TABLE: dedup-by-ANN,
-# corpus-vs-corpus retrieval, bulk re-embedding joins. These variants keep
-# queries distributed: only the model-sized artifacts (centroid matrix,
-# PQ codebooks — KBs to a few MB) ride in closures/broadcasts, the
-# query×cell match is an equi-join, and scoring runs over the joined
-# frame. Crossover note (SCALE.md): below ~10⁴ queries the closure path
-# wins (no query-side shuffle); above it — and always when the query set
-# is itself a table — use these.
+# The collect-based serves above ship a bounded query batch to every task
+# in a UDF closure, a driver bottleneck once the queries are a TABLE
+# (dedup-by-ANN, corpus-vs-corpus retrieval). These variants keep queries
+# distributed: only model-sized artifacts (centroids, codebooks) ride in
+# closures, and the query×cell match is an equi-join. Crossover
+# (SCALE.md): below ~10⁴ queries the closure path wins (no query-side
+# shuffle); above it, and whenever the queries are a table, use these.
 # ---------------------------------------------------------------------------
 
 
@@ -1975,22 +1974,15 @@ def _cogroup_topk_scores(
     cells_s: DataFrame, qq: DataFrame, k: int, id_type: str
 ) -> DataFrame:
     """Per-(cell, salt) vectorized cosine scoring with an exact
-    per-group top-``k`` cut (:func:`_cogroup_topk_group`) — the
-    corpus-vs-corpus fast path of :func:`ivf_query_index_join`.
-
-    The pair-join form evaluates the aggregate-HOF ``dot`` fold
-    INTERPRETED per element per candidate pair (guide §4.1); for a
-    corpus-as-queries fullprobe serve that is |corpus|²-ish folds and
-    was the single largest stage of the r16 profile (56 s of task time
-    at sf0.1). Here both sides shuffle ONCE by (cell, __salt) — the
-    same keys, and the same bytes, the salted equi-join already moved —
-    and each group is scored as 64 vectorized numpy passes.
-
-    Scale shape: one task per (cell, salt) group; group payload is the
-    cell slice plus every query probing the cell (the quadratic stage
-    IVF exists to bound — ``n_centroids`` must grow with the corpus,
-    the same contract the join path has).
-    """
+    per-group top-``k`` cut (:func:`_cogroup_topk_group`) — the scorer
+    of :func:`knn_graph`. The pair join evaluates the interpreted
+    :func:`dot` fold per candidate pair, |corpus|²-ish folds for a
+    corpus-as-queries serve (56 s of task time at sf0.1 in the r16
+    profile); here both sides shuffle ONCE by (cell, __salt) — the keys
+    and bytes the salted equi-join moves — and each group is scored as
+    ``dim`` vectorized numpy passes. One task per group; its payload is
+    the cell slice plus every query probing the cell (the quadratic
+    stage IVF bounds: ``n_centroids`` must grow with the corpus)."""
     _id_np = np.int64 if id_type in ("bigint", "int", "long", "smallint") else object
     empty = pd.DataFrame(
         {
@@ -2028,9 +2020,9 @@ def _cogroup_topk_group(qpdf: pd.DataFrame, cpdf: pd.DataFrame, k: int) -> pd.Da
       global cut over the union of group winners returns exactly the
       join path's rows, pinned by ``test_ivf_join_serve_vectorized_parity``;
     - a query block meeting a non-finite cosine (zero-norm vector) emits
-      ALL its pairs instead of cutting, because numpy's NaN ordering
-      differs from the JVM window's NaN-first rule — the downstream cut
-      then orders the full block exactly as the join path would.
+      ALL its pairs instead of cutting and leaves their order to the
+      downstream cut, where each NaN arrives as NULL, ranked last as
+      the join path ranks its NULL pair score.
 
     Both axes are blocked (``_COGROUP_Q_BLOCK`` queries ×
     ``_COGROUP_C_BLOCK`` candidates) so scratch memory stays flat; the
@@ -2107,23 +2099,47 @@ def _cogroup_topk_group(qpdf: pd.DataFrame, cpdf: pd.DataFrame, k: int) -> pd.Da
     )
 
 
-def _salted(df: DataFrame, key_col: str, salt: int) -> DataFrame:
+#: salt fan-out of the join serves' cell equi-join: each inverted list
+#: spreads over this many reducers.
+_SALT = 8
+
+
+def _salted(df: DataFrame, key_col: str) -> DataFrame:
     """Corpus side of a de-skewed cell join: a deterministic salt from
     the row id. A cell equi-join has only ``n_centroids`` distinct keys
     — unsalted, each inverted list funnels through ONE reducer; salted,
-    a list fans out over ``salt`` reducers (AQE skew-join splitting
+    a list fans out over :data:`_SALT` reducers (AQE skew-join splitting
     helps too, but the salt keeps the plan robust when AQE is off)."""
     return df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(salt)).cast("int")
+        "__salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(_SALT)).cast("int")
     )
 
 
-def _replicated(q: DataFrame, salt: int) -> DataFrame:
+def _replicated(q: DataFrame) -> DataFrame:
     """Query side of the de-skewed join: each probe row replicates over
-    every salt value (queries × nprobe × salt rows — the cheap side)."""
+    every salt value (queries × nprobe × :data:`_SALT` rows — the cheap
+    side)."""
     return q.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(_SALT - 1)))
     ).withColumn("__salt", F.col("__salt").cast("int"))
+
+
+def _pruned_scan(
+    spark, path: str, q: DataFrame, nprobe: int, n_cells: int, key_col: str
+) -> DataFrame:
+    """The ``cells`` table of a persisted index as a join serve reads
+    it: pruned to the cells probed by ``q`` (a distinct-cell collect
+    bounded by ``n_cells``, skipped when ``nprobe`` covers every cell),
+    then :func:`spread_narrow` on the row id ``key_col``: a young or
+    compacted index has one file per cell, and under a broadcast query
+    side the scoring stage would run on that many tasks (the salt
+    de-skews only shuffle joins). The top-k window re-keys by query, so
+    placement does not change results."""
+    cells = spark.read.parquet(f"{path}/cells")
+    if nprobe < n_cells:
+        probe_cells = sorted(r["cell"] for r in q.select("cell").distinct().collect())
+        cells = cells.where(F.col("cell").isin(probe_cells))
+    return spread_narrow(cells, key_col)
 
 
 def ivf_query_index_join(
@@ -2136,8 +2152,6 @@ def ivf_query_index_join(
     vec_col: str = "embedding",
     rerank_corpus: DataFrame | None = None,
     rerank: int | None = None,
-    salt: int = 8,
-    prune_cells: bool = True,
 ) -> DataFrame:
     """Serve a persisted :func:`build_ivf_index` layout with a
     DATAFRAME-sized query set — same results as :func:`ivf_query_index`
@@ -2145,117 +2159,53 @@ def ivf_query_index_join(
     driver collect of the query side:
 
     - cell assignment is the same Arrow-batched
-      :func:`nearest_cells_udf` (centroid matrix in the closure, O(1)
-      in n_centroids), exploded to one row per (query, probed cell);
+      :func:`nearest_cells_udf`, exploded to one row per (query, probed
+      cell), and the index scan keeps partition pruning
+      (:func:`_pruned_scan`);
     - the candidate match is a salted equi-join queries×cells on
       ``(cell, __salt)`` — Catalyst/AQE picks broadcast for a small
       query frame and a de-skewed shuffle join for a large one;
-    - ``prune_cells`` keeps static partition pruning: the distinct
-      probed-cell set is bounded by ``n_centroids`` (a model-sized
-      collect, never query- or corpus-sized); disable it for
-      corpus-vs-corpus serves that probe every cell anyway;
-    - scoring is JVM-side (:func:`cosine` / :func:`_dequantized_cos`
-      higher-order expressions — no Python in the hot path), top-k a
-      per-query window, exactly the collect path's cut.
+    - scoring is JVM-side (:func:`_pair_cos` over norms computed once
+      per side before the join / :func:`_dequantized_cos` — no Python in
+      the hot path), top-k a per-query window, exactly the collect
+      path's cut.
 
     SQ8 layouts quantize the query side with the same
     :func:`_sq8` expressions (distributed, not collected);
     pass ``rerank_corpus`` to recover exactness as in
     :func:`ivf_query_index`."""
     cent_mat = _read_centroids(spark, path)
-    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
-        "cell", F.explode(nearest_cells_udf(cent_mat, nprobe)(F.col("qv")))
-    )
-    cells = spark.read.parquet(f"{path}/cells")
-    if prune_cells and nprobe < len(cent_mat):  # fullprobe reads every cell
-        probe_cells = sorted(
-            r["cell"] for r in q.select("cell").distinct().collect()
-        )
-        cells = cells.where(F.col("cell").isin(probe_cells))
-    # Spread a NARROW index scan across the cluster: a young/compacted
-    # index has one parquet file per cell (n_centroids files), so the
-    # per-pair scoring stage — the serve's entire cost — would run on
-    # n_centroids tasks no matter how many cores exist (the salt only
-    # de-skews SHUFFLE joins; under a broadcast of the query side the
-    # stream stays at scan parallelism). File count is metadata-only
-    # (the _documents()/compactor probe); at scale each cell spans many
-    # files/splits and no repartition is inserted. Hash on the row id
-    # (deterministic, no sort-before-repartition) — placement does not
-    # affect results, the top-k window re-keys by query later.
-    target = spark.sparkContext.defaultParallelism
-    _cogrouped = not prune_cells and "qvec" not in cells.columns
-    if not _cogrouped and 0 < len(cells.inputFiles()) < target:
-        # (the cogrouped path re-shuffles by (cell, salt) anyway — an
-        # extra spread exchange would be pure waste there)
-        cells = cells.repartition(target, F.col("vec_id"))
+    q = _probed_queries(queries, id_col, vec_col, cent_mat, nprobe)
+    cells = _pruned_scan(spark, path, q, nprobe, len(cent_mat), "vec_id")
     if "qvec" in cells.columns:  # SQ8 layout
         qq = _replicated(
-            q.select("query_id", "qv", "cell", *_sq8(F.col("qv"), "int", "q_")), salt
+            q.select("query_id", "qv", "qn", "cell", *_sq8(F.col("qv"), "int", "q_"))
         )
         approx = (
-            _salted(cells, "vec_id", salt)
+            _salted(cells, "vec_id")
             .withColumnRenamed("vec_id", "neighbor_id")
             .join(qq, on=["cell", "__salt"])
             .where(F.col("neighbor_id") != F.col("query_id"))
             .withColumn("approx_cos", _dequantized_cos())
         )
-        if rerank_corpus is None:
-            scored = approx.withColumn("cos_sim", F.col("approx_cos"))
-        else:
-            cands = _rank_cut(approx, "approx_cos", rerank or 10 * k).select(
-                "neighbor_id", "query_id", "qv"
-            )
-            scored = _exact_rerank(cands, rerank_corpus, id_col, vec_col)
-    elif not prune_cells:
-        # corpus-vs-corpus serve (knn_graph: every cell probed, the
-        # query side is corpus-sized) — score per (cell, salt) GROUP
-        # with the vectorized cogrouped scorer instead of per PAIR with
-        # the interpreted fold. Same shuffle keys and bytes as the
-        # salted equi-join; bit-identical values and rows (sequential-
-        # dim accumulation + same-total-order per-group cut — see
-        # _cogroup_topk_scores). The 56 s of fold task-time this stage
-        # cost at sf0.1 drops to 64 numpy passes.
-        scored = _cogroup_topk_scores(
-            _salted(cells, "vec_id", salt).select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv"),
-                "cell",
-                "__salt",
-            ),
-            _replicated(q, salt),
-            k,
-            _col_type(queries, id_col),
-        )
+        scored = _sq8_tail(approx, k, rerank, rerank_corpus, id_col, vec_col)
     else:
-        # norms precomputed ONCE PER SIDE before the join: the naive
-        # cosine(qv, cv) re-evaluates sqrt(Σx²) for BOTH vectors on
-        # every candidate PAIR — for a probe-batch serve the broadcast
-        # equi-join keeps the index scan shuffle-free, which the
-        # cogrouped scorer above cannot (its groupBy must move the
-        # probed cells), so the JVM pair path stays the small-query
-        # default. dot/(qn·vn) is bit-identical arithmetic (same sqrt,
-        # same multiply), just hoisted above the join.
+        # for a probe-batch serve the broadcast equi-join keeps the index
+        # scan shuffle-free, which the cogrouped scorer cannot (its
+        # groupBy must move the probed cells), so the JVM pair score is
+        # the small-query path
         scored = (
-            _salted(cells, "vec_id", salt)
+            _salted(cells, "vec_id")
             .select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("v").alias("cv"),
-                norm(F.col("v")).alias("__vn"),
+                norm(F.col("v")).alias("cn"),
                 "cell",
                 "__salt",
             )
-            .join(
-                _replicated(
-                    q.withColumn("__qn", norm(F.col("qv"))), salt
-                ),
-                on=["cell", "__salt"],
-            )
+            .join(_replicated(q), on=["cell", "__salt"])
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cos_sim",
-                dot(F.col("qv"), F.col("cv"))
-                / (F.col("__qn") * F.col("__vn")),
-            )
+            .withColumn("cos_sim", _qc_cos())
         )
     return _topk_result(scored, k)
 
@@ -2270,8 +2220,6 @@ def ivfpq_query_index_join(
     rerank_pool: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: int = 8,
-    prune_cells: bool = True,
 ) -> DataFrame:
     """Serve a persisted :func:`build_ivfpq_index` layout with a
     DATAFRAME-sized query set — the join twin of
@@ -2279,9 +2227,10 @@ def ivfpq_query_index_join(
     exact-rerank contract; pinned by
     ``test_ivfpq_index_join_serve_matches_collect_path``):
 
-    - the probe set comes from the SAME normalized rule as every other
-      IVF-PQ consumer (:func:`_ivfpq_probe` over Arrow batches — the
-      r11 scale-invariance fix carries over by construction);
+    - the probe set comes from the SAME rule as every other IVF-PQ
+      consumer, :func:`_nearest_cells` over the NORMALIZED query, here
+      over Arrow batches (the r11 scale-invariance fix carries over by
+      construction); the scan is :func:`_pruned_scan`;
     - candidates come from the salted equi-join queries×codes on
       ``(cell, __salt)`` — the join IS the probe mask, so no in-UDF
       isin over a collected query list;
@@ -2303,35 +2252,20 @@ def ivfpq_query_index_join(
     def probe_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         drop_zip_finders()
         for vecs in it:
-            qm = _normalized_rows(
-                np.stack(vecs.to_numpy()).astype(np.float64)
-            )
-            yield pd.Series(
-                list(_ivfpq_probe(qm, cent, nprobe).astype(np.int32))
-            )
+            qm = _normalized_rows(np.stack(vecs.to_numpy()).astype(np.float64))
+            yield pd.Series(list(_nearest_cells(qm, cent, nprobe)))
 
-    q = _keyed_vectors(queries, id_col, vec_col, "query_id", "qv").withColumn(
-        "cell", F.explode(probe_udf(F.col("qv")))
+    q = (
+        _keyed_vectors(queries, id_col, vec_col, "query_id", "qv")
+        .withColumn("qn", norm(F.col("qv")))
+        .withColumn("cell", F.explode(probe_udf(F.col("qv"))))
     )
-    encoded = spark.read.parquet(f"{path}/cells")
-    if prune_cells and nprobe < len(cent):  # fullprobe reads every cell
-        probe_cells = sorted(
-            r["cell"] for r in q.select("cell").distinct().collect()
-        )
-        encoded = encoded.where(F.col("cell").isin(probe_cells))
-    # spread a narrow (one-file-per-cell) index scan — see the same
-    # probe in ivf_query_index_join: the ADC scoring stage otherwise
-    # caps at n_centroids tasks under a broadcast query side
-    target = spark.sparkContext.defaultParallelism
-    if 0 < len(encoded.inputFiles()) < target:
-        encoded = encoded.repartition(target, F.col("id"))
+    encoded = _pruned_scan(spark, path, q, nprobe, len(cent), "id")
 
     sub_idx = np.arange(m)[None, :]
 
     @pandas_udf(DoubleType())
-    def adc_udf(
-        qvs: pd.Series, codes: pd.Series, cells_s: pd.Series
-    ) -> pd.Series:
+    def adc_udf(qvs: pd.Series, codes: pd.Series, cells_s: pd.Series) -> pd.Series:
         drop_zip_finders()
         qm = _normalized_rows(np.stack(qvs.to_numpy()).astype(np.float64))
         b = qm.shape[0]
@@ -2345,17 +2279,14 @@ def ivfpq_query_index_join(
 
     pool = max(k, rerank_pool)
     scored = (
-        _salted(encoded, "id", salt)
-        .select(
-            F.col("id").alias("neighbor_id"), "codes", "cell", "__salt"
-        )
-        .join(_replicated(q, salt), on=["cell", "__salt"])
+        _salted(encoded, "id")
+        .select(F.col("id").alias("neighbor_id"), "codes", "cell", "__salt")
+        .join(_replicated(q), on=["cell", "__salt"])
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "adc_score", adc_udf(F.col("qv"), F.col("codes"), F.col("cell"))
-        )
+        .withColumn("adc_score", adc_udf(F.col("qv"), F.col("codes"), F.col("cell")))
     )
-    cands = _rank_cut(scored, "adc_score", pool).select("query_id", "neighbor_id", "qv")
+    cands = _rank_cut(scored, "adc_score", pool)
+    cands = cands.select("query_id", "neighbor_id", "qv", "qn")
     return _topk_result(_exact_rerank(cands, rerank_corpus, id_col, vec_col), k)
 
 
@@ -2367,31 +2298,32 @@ def knn_graph(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: int = 8,
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH over the whole corpus — every row's
     top-``k`` cosine neighbors as ``(query_id, neighbor_id, cos_sim,
     rank)`` edges — the substrate for graph-based dedup, diversity
     analysis, and label propagation at corpus scale.
 
-    This is the corpus-vs-corpus workload the join serve exists for: the
-    corpus plays BOTH sides of :func:`ivf_query_index_join`, so the
-    query side never collects to the driver (a corpus-sized
-    ``collect()`` is exactly what the guarded probe-batch paths refuse).
-    Cost shape: each row scores against its ``nprobe`` / ``n_centroids``
-    fraction of the corpus through the salted cell equi-join — the IVF
-    partitioning is what keeps this off the all-pairs n² cliff, and
-    ``nprobe`` is the recall/cost dial. ``prune_cells`` is off: a corpus
-    query set probes essentially every cell, so the distinct-cell
-    pre-job would be a wasted pass."""
-    return ivf_query_index_join(
-        spark,
-        path,
-        corpus,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        salt=salt,
-        prune_cells=False,
+    The corpus plays BOTH sides of the salted cell equi-join of
+    :func:`ivf_query_index_join`, so the query side never collects to
+    the driver. Each row scores against its ``nprobe`` / ``n_centroids``
+    fraction of the corpus (``nprobe`` is the recall/cost dial). A
+    corpus query set probes essentially every cell, so the index is
+    read unpruned, and on a float layout each (cell, salt) GROUP is
+    scored by :func:`_cogroup_topk_scores` instead of per PAIR: the
+    same rows and values as :func:`ivf_query_index_join` (pinned by
+    ``test_ivf_join_serve_vectorized_parity``). An SQ8 layout is served
+    by :func:`ivf_query_index_join`."""
+    cells = spark.read.parquet(f"{path}/cells")
+    if "qvec" in cells.columns:
+        return ivf_query_index_join(spark, path, corpus, k, nprobe, id_col, vec_col)
+    q = _probed_queries(corpus, id_col, vec_col, _read_centroids(spark, path), nprobe)
+    scored = _cogroup_topk_scores(
+        _salted(cells, "vec_id").select(
+            F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "cell", "__salt"
+        ),
+        _replicated(q.drop("qn")),
+        k,
+        _col_type(corpus, id_col),
     )
+    return _topk_result(scored, k)

@@ -12,7 +12,10 @@ the captured plan is still the final frame's.
 Each plan is normalized before it is written (:func:`normalize`):
 expression ids (``#123``), exchange plan ids and the random suffixes
 of the temporary index directories change from run to run, so without
-the rewrite two captures of the same code never diff clean.
+the rewrite two captures of the same code never diff clean. Lambda
+variables (``lambda x_161``) are numbered by a process-wide pyspark
+counter, so their numbers move whenever any earlier query builds one
+lambda more or less; they are normalized too.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ _TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/([A-Za-z_]*?_)[a-z0-
 _RUN_SPECIFIC = [
     (re.compile(r"#\d+"), "#"),  # expression ids
     (re.compile(r"plan_id=\d+"), "plan_id=N"),  # exchange ids
+    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),  # lambda variable counters
     (_TMP_DIR, r"<tmp>/\1*"),  # mkdtemp index / staging directories
 ]
 
